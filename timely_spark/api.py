@@ -18,12 +18,12 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .model import METRIC_SCHEMA
+from .model import META_SCHEMA, METRIC_SCHEMA, sql_literal
 from .operators.exclusions import apply_exclusions
 from .operators.meta import build_meta, metrics_dump, search_lookup, suggest
 from .operators.retention import ageoff_filter, retention_delete_plan
 from .parse import parse_put_line
-from .plans.builder import run_query
+from .plans.builder import query_start, run_query
 from .plans.request import QueryRequest
 from .plans.response import to_query_response
 from .sources.lineprotocol import parse_lines_df
@@ -246,16 +246,22 @@ class TimelyEngine:
         return read_points(self.spark, self.store_path)
 
     def points(self, now_ms: int | None = None,
-               dynamic_now: bool = False) -> DataFrame:
+               dynamic_now: bool = False, since_ms: int | None = None) -> DataFrame:
         """Stored points with the query-time age-off guard applied
         (DataStoreCache.java:747-750). ``now_ms`` is injectable so tests
         and replays can pin the clock; defaults to wall time.
         ``dynamic_now`` binds the clock as ``current_timestamp()`` so a
         LONG-LIVED frame (a registered SQL view) ages rows off at query
-        time instead of freezing the registration-time clock."""
-        df = self._durable_points()
-        if self._hot is not None:
-            df = self._hot.hybrid(df)
+        time instead of freezing the registration-time clock.
+        ``since_ms``: the earliest timestamp the reader needs; with the
+        hot tier on, a range wholly inside the pinned window reads the
+        window alone (sources/hot_cache.py, plan-time tier selection)."""
+        if self._hot is not None and self._hot.serves(since_ms):
+            df = self._hot.window
+        else:
+            df = self._durable_points()
+            if self._hot is not None:
+                df = self._hot.hybrid(df, since_ms)
         if self.default_ttl_ms is not None:
             import time
 
@@ -271,8 +277,13 @@ class TimelyEngine:
             )
         return df
 
+    def _meta_rows(self) -> DataFrame:
+        """The catalog's appended rows, read with their known schema (no
+        schema-inference job per read)."""
+        return self.spark.read.schema(META_SCHEMA).parquet(self.meta_path)
+
     def meta(self) -> DataFrame:
-        m = self.spark.read.parquet(self.meta_path)
+        m = self._meta_rows()
         return m.groupBy("metric", "tag_key", "tag_value").agg(
             F.max("last_seen").alias("last_seen")
         )
@@ -345,8 +356,6 @@ class TimelyEngine:
             )
         )
 
-    _ROLLUP_AGGS = {"avg", "sum", "min", "max", "count"}
-
     def query_rollup(
         self,
         request: dict,
@@ -365,13 +374,13 @@ class TimelyEngine:
         multiple of ``level_ms``. Visibility: partials pre-aggregate
         rows, so per-row viz enforcement is impossible here — requires
         ALL_AUTHS (or a store with no labeled rows, which is the
-        caller's contract to know)."""
+        caller's contract to know). Like :meth:`query`, the SubQueries
+        fuse into one plan and one collect."""
         req = QueryRequest.from_dict(request)
-        outs = self.query_rollup_frames(request, partials, level_ms, auths)
-        out: list[dict] = []
-        for r in outs:
-            out.extend(to_query_response(r, ms_resolution=req.ms_resolution))
-        return out
+        return to_query_response(
+            self._rollup_frames(req, partials, level_ms, auths),
+            ms_resolution=req.ms_resolution,
+        )
 
     def query_rollup_frames(
         self,
@@ -384,16 +393,37 @@ class TimelyEngine:
         BEFORE response shaping — the Spark-native / plan-auditable
         entry (VERDICT r11 #3), with :meth:`query_rollup`'s exact
         eligibility rules and semantics."""
+        return self._rollup_frames(
+            QueryRequest.from_dict(request), partials, level_ms, auths
+        )
+
+    # value of a rollup bucket from its merged partials, per aggregator
+    _ROLLUP_VALUE = {
+        "avg": "CAST(vsum / n AS DOUBLE)",
+        "sum": "CAST(vsum AS DOUBLE)",
+        "min": "vmin",
+        "max": "vmax",
+        "count": "CAST(n AS DOUBLE)",
+    }
+    _ROLLUP_MERGE = (
+        "first(tags) AS tags", "sum(n) AS n", "sum(vsum) AS vsum",
+        "min(vmin) AS vmin", "max(vmax) AS vmax",
+    )
+
+    def _rollup_frames(
+        self, req: QueryRequest, partials: DataFrame, level_ms: int, auths
+    ) -> list[DataFrame]:
+        from .functions.time import query_aligned_bucket_sql
+        from .model import projected_tags_sql, series_id_sql
         from .operators.downsample import combine_series
-        from .plans.builder import _tag_predicates
-        from .plans.request import QueryRequest
+        from .plans.builder import tag_predicates_sql
 
         if auths is not ALL_AUTHS:
             raise ValueError(
                 "query_rollup bypasses per-row visibility; pass "
                 "auths=ALL_AUTHS or use query()"
             )
-        req = QueryRequest.from_dict(request)
+        cols = partials.columns
         outs = []
         for q in req.queries:
             spec = q.downsample_spec()
@@ -402,8 +432,8 @@ class TimelyEngine:
                 or q.tsuids
                 or spec is None
                 or spec.period_ms % level_ms != 0
-                or spec.aggregator not in self._ROLLUP_AGGS
-                or q.aggregator not in self._ROLLUP_AGGS
+                or spec.aggregator not in self._ROLLUP_VALUE
+                or q.aggregator not in self._ROLLUP_VALUE
             ):
                 raise ValueError(
                     f"SubQuery not rollup-eligible (metric={q.metric!r}); "
@@ -418,65 +448,49 @@ class TimelyEngine:
                     f"align to the level boundary (end = k*{level_ms} - 1); "
                     "use query()"
                 )
-            period = spec.period_ms
-            start = req.start - (req.start % period)
-            df = partials.filter(F.col("metric") == q.metric).filter(
-                (F.col("bucket_ts") >= start) & (F.col("bucket_ts") <= req.end)
+            start = query_start(q, req.start)
+            bucket = query_aligned_bucket_sql("bucket_ts", start, spec.period_ms)
+            preds = [
+                f"metric = {sql_literal(q.metric)}",
+                f"bucket_ts >= {start} AND bucket_ts <= {req.end}",
+                *tag_predicates_sql(q.tags, cols),
+                *tag_predicates_sql(q.filters, cols),
+            ]
+            merged = (
+                partials.filter(" AND ".join(f"({p})" for p in preds))
+                .selectExpr(
+                    "metric", "__series", f"{bucket} AS bucket_ts",
+                    "tags", "n", "vsum", "vmin", "vmax",
+                )
+                .groupBy("metric", "__series", "bucket_ts")
+                .agg(*[F.expr(e) for e in self._ROLLUP_MERGE])
             )
-            df = _tag_predicates(df, q.tags)
-            df = _tag_predicates(df, q.filters)
-            off = F.col("bucket_ts") - F.lit(start)
-            pb = (F.lit(start) + (off - off % F.lit(period))).alias("bucket_ts")
-            merged = df.groupBy("metric", "__series", pb).agg(
-                F.first("tags").alias("tags"),
-                F.sum("n").alias("n"),
-                F.sum("vsum").alias("vsum"),
-                F.min("vmin").alias("vmin"),
-                F.max("vmax").alias("vmax"),
-            )
-            def _value(agg):
-                return {
-                    "avg": (F.col("vsum") / F.col("n")).cast("double"),
-                    "sum": F.col("vsum").cast("double"),
-                    "min": F.col("vmin"),
-                    "max": F.col("vmax"),
-                    "count": F.col("n").cast("double"),
-                }[agg]
-
+            keys = sorted(q.tags.keys())
             if q.aggregator == spec.aggregator:
                 # match build_subquery's single-aggregation collapse:
                 # equal downsample/combine aggregators act over ALL
                 # points per (projected tags, bucket) — avg is the
                 # WEIGHTED average, count counts points, not series.
                 # Partials re-merge across series first, then the value.
-                from .model import series_id
-
-                keys = F.array(*[F.lit(k) for k in sorted(q.tags.keys())])
-                projected = F.map_filter(
-                    "tags", lambda k, _v: F.array_contains(keys, k)
-                )
-                pre = merged.withColumn("tags", projected).withColumn(
-                    "__gkey", series_id()
-                )
-                flat = pre.groupBy("__gkey", "bucket_ts").agg(
-                    F.first("metric").alias("metric"),
-                    F.first("tags").alias("tags"),
-                    F.sum("n").alias("n"),
-                    F.sum("vsum").alias("vsum"),
-                    F.min("vmin").alias("vmin"),
-                    F.max("vmax").alias("vmax"),
-                )
-                outs.append(
-                    flat.select(
-                        "metric", "tags", "bucket_ts",
-                        _value(q.aggregator).alias("value"),
+                flat = (
+                    merged.selectExpr(
+                        "metric", f"{projected_tags_sql(keys)} AS tags", "bucket_ts",
+                        "n", "vsum", "vmin", "vmax",
                     )
+                    .selectExpr("*", f"{series_id_sql()} AS __gkey")
+                    .groupBy("__gkey", "bucket_ts")
+                    .agg(F.expr("first(metric) AS metric"), *[F.expr(e) for e in self._ROLLUP_MERGE])
                 )
+                outs.append(flat.selectExpr(
+                    "metric", "tags", "bucket_ts",
+                    f"{self._ROLLUP_VALUE[q.aggregator]} AS value",
+                ))
                 continue
-            ds = merged.select(
-                "metric", "tags", "bucket_ts", _value(spec.aggregator).alias("value")
+            ds = merged.selectExpr(
+                "metric", "tags", "bucket_ts",
+                f"{self._ROLLUP_VALUE[spec.aggregator]} AS value",
             )
-            outs.append(combine_series(ds, sorted(q.tags.keys()), q.aggregator))
+            outs.append(combine_series(ds, keys, q.aggregator))
         return outs
 
     def _record_viz(self, pts: DataFrame) -> None:
@@ -516,24 +530,31 @@ class TimelyEngine:
         consults the META table, not the query result (DataStore.java:
         938-941): a matching-tags query over an empty time window is a
         valid 200/empty response, never a 400. Runs only on the
-        strict+empty-result path, against the tiny meta table."""
+        strict+empty-result path, against the tiny meta table, as ONE
+        Spark job: a global aggregate over the metric's catalog rows
+        with one ``bool_or`` per tag predicate, on a single partition
+        (no exchange) and with the schema given (no inference job)."""
         from .parse import is_tag_regex
 
         if q.tsuids:
             return True  # tsuid SubQueries name series directly, no tag check
-        base = self.meta().filter(F.col("metric") == q.metric)
-        if not base.limit(1).take(1):
-            return False  # unknown metric
+        checks = ["count(1) > 0"]  # the metric is known
         for k, v in {**q.tags, **q.filters}.items():
-            m = base.filter(F.col("tag_key") == k)
+            cond = f"tag_key = {sql_literal(k)}"
             if v not in ("*", ".*"):
                 if is_tag_regex(v):
-                    m = m.filter(F.col("tag_value").rlike(f"^(?:{v})$"))
+                    cond += f" AND tag_value RLIKE {sql_literal(f'^(?:{v})$')}"
                 else:
-                    m = m.filter(F.col("tag_value") == v)
-            if not m.limit(1).take(1):
-                return False
-        return True
+                    cond += f" AND tag_value = {sql_literal(v)}"
+            checks.append(f"coalesce(bool_or({cond}), false)")
+        row = (
+            self._meta_rows()
+            .filter(f"metric = {sql_literal(q.metric)}")
+            .coalesce(1)
+            .selectExpr(" AND ".join(f"({c})" for c in checks))
+            .collect()[0]
+        )
+        return bool(row[0])
 
     def query_frames(self, request: dict, auths=None) -> list[DataFrame]:
         """One result DataFrame per SubQuery BEFORE response shaping —
@@ -550,8 +571,10 @@ class TimelyEngine:
         eff = None if auths is ALL_AUTHS else set(auths or ())
         known = self._viz_known() if eff else None
         viz_exprs = sorted(known) if known is not None else None
+        # the tier is picked here, from the earliest row any SubQuery reads
+        since = min((query_start(q, req.start) for q in req.queries), default=req.start)
         return run_query(
-            self.points(),
+            self.points(since_ms=since),
             req,
             auths=eff,
             viz_exprs=viz_exprs,
@@ -559,14 +582,17 @@ class TimelyEngine:
         )
 
     def _run(self, req: QueryRequest, auths, strict: bool = False) -> list[dict]:
-        results = self._frames(req, auths)
-        out: list[dict] = []
-        for q, r in zip(req.queries, results):
-            part = to_query_response(r, ms_resolution=req.ms_resolution)
-            if strict and not part and not self._catalog_has_tags(q):
+        """One plan, one collect: the SubQuery frames fuse inside
+        ``to_query_response``; the strict "No matching tags" check stays
+        per SubQuery, on the ones that came back empty."""
+
+        def no_rows(i: int) -> None:
+            if strict and not self._catalog_has_tags(req.queries[i]):
                 raise NoMatchingTagsError("No matching tags")
-            out.extend(part)
-        return out
+
+        return to_query_response(
+            self._frames(req, auths), ms_resolution=req.ms_resolution, on_empty=no_rows
+        )
 
     def suggest(self, q: str, kind: str = "metrics", max_results: int = 25,
                 tag: str | None = None) -> list[str]:

@@ -20,9 +20,14 @@ def time_bucket_ms(ts: Column | str, period_ms: int) -> Column:
     return (c - (c % F.lit(period_ms))).alias("bucket_ts")
 
 
-def query_aligned_bucket(ts: Column | str, start_ms: int, period_ms: int) -> Column:
-    """Query-start-aligned bucket, exactly Downsample.java:36:
-    ``start + ((ts - start) % period subtracted)``."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    off = c - F.lit(start_ms)
-    return (F.lit(start_ms) + (off - (off % F.lit(period_ms)))).alias("bucket_ts")
+def query_aligned_bucket_sql(ts: str, start_ms: int, period_ms: int) -> str:
+    """SQL text of the query-start-aligned bucket, exactly
+    Downsample.java:36: ``start + ((ts - start) % period subtracted)``.
+    The engine renders its stages as SQL text."""
+    off = f"({ts} - {start_ms})"
+    return f"{start_ms} + ({off} - ({off} % {period_ms}))"
+
+
+def query_aligned_bucket(ts: str, start_ms: int, period_ms: int) -> Column:
+    """:func:`query_aligned_bucket_sql` as a ``bucket_ts`` column."""
+    return F.expr(query_aligned_bucket_sql(ts, start_ms, period_ms)).alias("bucket_ts")

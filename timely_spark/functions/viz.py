@@ -18,8 +18,10 @@ from __future__ import annotations
 
 from functools import lru_cache
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..model import sql_literal
 
 _MAX_DISTINCT_VIZ = 100_000
 
@@ -111,10 +113,25 @@ def evaluate_visibility(expr: str | None, auths: frozenset[str] | set[str]) -> b
         return False  # unparseable visibility -> never visible (fail closed)
 
 
-def viz_allows(viz_col: Column | str, auths: set[str], *, allowed: list[str]) -> Column:
-    """JVM-side predicate given a precomputed allowed-expression list."""
-    c = F.col(viz_col) if isinstance(viz_col, str) else viz_col
-    return c.isNull() | (c == "") | c.isin(allowed)
+def viz_predicate_sql(
+    auths: set[str], known_exprs: list[str] | None, viz_col: str = "viz"
+) -> str | None:
+    """SQL text of the visibility predicate: unlabeled rows, plus rows
+    whose expression (from ``known_exprs``, the corpus' distinct
+    expressions) evaluates true under ``auths``. None when that takes a
+    per-row evaluation: the expressions are unknown, or more than
+    ``_MAX_DISTINCT_VIZ``."""
+    unlabeled = f"{viz_col} IS NULL OR {viz_col} = ''"
+    if not auths:
+        # anonymous (empty auth set): no labeled expression can evaluate
+        # true, so only unlabeled rows are visible — no distinct scan needed
+        return unlabeled
+    if known_exprs is None or len(known_exprs) > _MAX_DISTINCT_VIZ:
+        return None
+    allowed = [e for e in known_exprs if evaluate_visibility(e, frozenset(auths))]
+    if not allowed:
+        return unlabeled
+    return f"{unlabeled} OR {viz_col} IN ({', '.join(sql_literal(e) for e in allowed)})"
 
 
 def viz_filter(
@@ -135,29 +152,21 @@ def viz_filter(
     """
     if viz_col not in df.columns:
         return df
-    if not auths:
-        # anonymous (empty auth set): no labeled expression can evaluate
-        # true, so only unlabeled rows are visible — no distinct scan needed
-        c = F.col(viz_col)
-        return df.filter(c.isNull() | (c == ""))
-    if known_exprs is not None:
-        distinct = list(known_exprs)
-    elif df.isStreaming:
-        # a streaming plan can't run the distinct-exprs action; evaluate
-        # per batch with the Arrow-vectorized predicate (the subscription
-        # scan path — the reference's VisibilityFilter runs per-entry in
-        # the scan too, server/.../auth/ConfigurableVisibilityFilter.java)
-        return df.filter(_viz_pandas_udf(auths)(F.col(viz_col)))
-    else:
-        distinct = [
+    if known_exprs is None and auths and not df.isStreaming:
+        known_exprs = [
             r[0]
             for r in df.select(viz_col).filter(F.col(viz_col).isNotNull()).distinct()
             .limit(_MAX_DISTINCT_VIZ + 1).collect()
         ]
-    if len(distinct) > _MAX_DISTINCT_VIZ:
+    sql = viz_predicate_sql(auths, known_exprs, viz_col)
+    if sql is None:
+        # a streaming plan can't run the distinct-exprs action, and past
+        # the cap an IN-list is no longer the cheap form: evaluate per
+        # batch with the Arrow-vectorized predicate (the subscription scan
+        # path — the reference's VisibilityFilter runs per-entry in the
+        # scan too, server/.../auth/ConfigurableVisibilityFilter.java)
         return df.filter(_viz_pandas_udf(auths)(F.col(viz_col)))
-    allowed = [e for e in distinct if evaluate_visibility(e, frozenset(auths))]
-    return df.filter(viz_allows(viz_col, auths, allowed=allowed))
+    return df.filter(sql)
 
 
 def _eval_batch(col, fauths, _evaluate=None):

@@ -44,6 +44,24 @@ META_SCHEMA = T.StructType(
 )
 
 
+def sql_literal(s: str) -> str:
+    """``s`` as a Spark SQL string literal. Spark unescapes backslash
+    sequences inside literals (``'\\d'`` reads as ``d``), so backslashes
+    are doubled before quotes are escaped: every value, regex or key
+    reaches the plan exactly as given."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def series_id_sql(metric: str = "metric", tags: str = "tags") -> str:
+    """SQL text of :func:`series_id` over the named columns (or SQL
+    expressions), for callers that render whole stages as SQL."""
+    return (
+        f"concat_ws(',', array({metric}), "
+        f"transform(array_sort(map_keys({tags})), "
+        f"__k -> concat(__k, '=', element_at({tags}, __k))))"
+    )
+
+
 def series_id(metric: Column | str = "metric", tags: Column | str = "tags") -> Column:
     """Canonical series key: metric + sorted ``k=v`` tag pairs.
 
@@ -58,11 +76,7 @@ def series_id(metric: Column | str = "metric", tags: Column | str = "tags") -> C
     compare pinned in tests). Column arguments keep the builder form.
     """
     if isinstance(metric, str) and isinstance(tags, str):
-        return F.expr(
-            f"concat_ws(',', array({metric}), "
-            f"transform(array_sort(map_keys({tags})), "
-            f"__k -> concat(__k, '=', element_at({tags}, __k))))"
-        )
+        return F.expr(series_id_sql(metric, tags))
     m = F.col(metric) if isinstance(metric, str) else metric
     t = F.col(tags) if isinstance(tags, str) else tags
     pairs = F.transform(
@@ -71,20 +85,21 @@ def series_id(metric: Column | str = "metric", tags: Column | str = "tags") -> C
     return F.concat_ws(",", F.array(m), pairs)
 
 
+def projected_tags_sql(group_tag_keys: list[str], tags: str = "tags") -> str:
+    """SQL text of :func:`projected_tags`."""
+    if not group_tag_keys:
+        # no queried keys -> empty projection (array() would not type)
+        return f"map_filter({tags}, (__k, __v) -> false)"
+    lits = ", ".join(sql_literal(k) for k in group_tag_keys)
+    return f"map_filter({tags}, (__k, __v) -> array_contains(array({lits}), __k))"
+
+
 def projected_tags(group_tag_keys: list[str], tags: str = "tags") -> Column:
     """The queried tag projection: ``tags`` filtered to the named keys
     (DataStore.java:752-762), rendered as one SQL ``map_filter`` so the
     per-request driver cost is one parse instead of a lambda-builder
-    py4j exchange. Keys are SQL-escaped (quote doubling)."""
-    if not group_tag_keys:
-        # no queried keys -> empty projection (array() would not type)
-        return F.expr(f"map_filter({tags}, (__k, __v) -> false)")
-    lits = ", ".join(
-        "'" + k.replace("'", "''") + "'" for k in group_tag_keys
-    )
-    return F.expr(
-        f"map_filter({tags}, (__k, __v) -> array_contains(array({lits}), __k))"
-    )
+    py4j exchange. Keys are SQL-escaped (:func:`sql_literal`)."""
+    return F.expr(projected_tags_sql(group_tag_keys, tags))
 
 
 #: uniform pre-round nudge for cross-engine float parity: DuckDB's

@@ -1,4 +1,4 @@
-"""The aggregator registry — Timely's six aggregators as Column expressions.
+"""The aggregator registry — Timely's six aggregators as SQL expressions.
 
 Reference: server/.../sample/Aggregator.java:9-59 and
 server/.../sample/aggregators/{Avg,Sum,Min,Max,Count,Dev}.java; the
@@ -16,38 +16,37 @@ NO mean subtraction — an RMS-like quantity, deliberately NOT
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _dev(c: Column) -> Column:
+# Spark SQL text per aggregator, ``{c}`` the input column. The engine
+# renders its aggregation stages as SQL text (one parse per expression
+# instead of a Column-builder py4j exchange per node).
+AGGREGATORS: dict[str, str] = {
+    "avg": "avg({c})",
+    "sum": "sum({c})",
+    "min": "min({c})",
+    "max": "max({c})",
+    "count": "count({c})",
     # Dev.java:8-19 — sqrt(sum(x^2) / (count-1)); count==1 -> division by
     # zero in Java yields Infinity; we emit NULL instead and document it.
-    n = F.count(c)
-    return F.when(n > 1, F.sqrt(F.sum(c * c) / (n - F.lit(1)))).otherwise(F.lit(None))
-
-
-AGGREGATORS: dict[str, Callable[[Column], Column]] = {
-    "avg": F.avg,
-    "sum": F.sum,
-    "min": F.min,
-    "max": F.max,
-    "count": F.count,
-    "dev": _dev,
+    "dev": "CASE WHEN count({c}) > 1 THEN sqrt(sum({c} * {c}) / (count({c}) - 1)) ELSE NULL END",
 }
 
 ADVERTISED = ["avg", "dev", "max", "min", "sum", "count", "none"]  # AggregatorsResponse.java:53-62
 
 
-def agg_expr(name: str, col: Column | str = "value") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
+def agg_sql(name: str, col: str = "value") -> str:
+    """SQL text of aggregator ``name`` over column ``col``."""
     try:
-        fn = AGGREGATORS[name.lower()]
+        template = AGGREGATORS[name.lower()]
     except KeyError:
         raise ValueError(f"unknown aggregator {name!r}; known: {ADVERTISED}") from None
-    return fn(c)
+    return template.format(c=col)
+
+
+def agg_expr(name: str, col: str = "value") -> Column:
+    return F.expr(agg_sql(name, col))
 
 
 # DuckDB-SQL renderings of the same aggregators, for oracle generation.

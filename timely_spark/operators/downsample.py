@@ -9,7 +9,8 @@ and AggregationIterator.java:27-128):
 2. AGGREGATION: fold the per-series buckets across all series that share
    the *queried* tag projection (the OpenTSDB cross-series aggregator).
 
-Spark shape: two groupBys. Catalyst's partial/final hash aggregation
+Spark shape: two groupBys, each rendered as SQL text
+(:func:`group_stage`). Catalyst's partial/final hash aggregation
 replaces the reference's memory-estimator batching
 (DownsampleMemoryEstimator.java:1-101) and coordinator-side
 ``combineAggregation`` merge (DataStore.java:844-858) — at scale the first
@@ -25,10 +26,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.time import query_aligned_bucket
-from ..model import projected_tags, series_id
+from ..functions.time import query_aligned_bucket_sql
+from ..model import projected_tags_sql, series_id_sql
 from ..parse import DownsampleSpec
-from .aggregators import agg_expr
+from .aggregators import agg_sql
+
+
+def group_stage(
+    df: DataFrame, key: str, bucket: str, aggregator: str, value_col: str = "value"
+) -> DataFrame:
+    """``(metric, tags, bucket_ts, value)`` of one aggregation over
+    ``(key, bucket)``: the shared shape of the downsample, the
+    cross-series combine and the builder's collapsed single stage.
+    ``key`` and ``bucket`` are SQL text over ``df``'s columns; the stage
+    builds in about a dozen py4j calls."""
+    pre = df.selectExpr(
+        f"{key} AS __gkey", f"{bucket} AS bucket_ts", "metric", "tags",
+        f"{value_col} AS value",
+    )
+    return (
+        pre.groupBy("__gkey", "bucket_ts")
+        .agg(
+            F.expr("first(metric) AS metric"),
+            F.expr("first(tags) AS tags"),
+            F.expr(f"{agg_sql(aggregator)} AS value"),
+        )
+        .selectExpr("metric", "tags", "bucket_ts", "value")
+    )
 
 
 def downsample(
@@ -51,22 +75,15 @@ def downsample(
         spec = DownsampleSpec.parse(spec)
     if spec.aggregator == "none":
         # 1 ms buckets == identity (DownsampleIterator.java:161-169)
-        return df.select(
-            "metric", "tags", F.col(ts_col).alias("bucket_ts"), F.col(value_col).alias("value")
+        return df.selectExpr(
+            "metric", "tags", f"{ts_col} AS bucket_ts", f"{value_col} AS value"
         )
-    bucket = query_aligned_bucket(ts_col, start_ms, spec.period_ms)
-    key = F.col(series_col) if series_col else series_id()
-    return (
-        df.withColumn("bucket_ts", bucket)
-        .withColumn("__series", key)
-        .groupBy("__series", "bucket_ts")
-        .agg(
-            F.first("metric").alias("metric"),
-            F.first("tags").alias("tags"),
-            agg_expr(spec.aggregator, value_col).alias("value"),
-        )
-        .drop("__series")
-        .select("metric", "tags", "bucket_ts", "value")
+    return group_stage(
+        df,
+        series_col or series_id_sql(),
+        query_aligned_bucket_sql(ts_col, start_ms, spec.period_ms),
+        spec.aggregator,
+        value_col,
     )
 
 
@@ -84,20 +101,9 @@ def combine_series(
 
     Output: metric, tags (projected map), bucket_ts, value.
     """
-    # r13: SQL-rendered projection (one parse, not a lambda-builder
-    # py4j exchange) — values identical, see model.projected_tags
-    proj = downsampled.withColumn(
-        "tags", projected_tags(group_tag_keys)
+    # map columns can't be groupBy keys; group on the canonical sorted
+    # rendering of the PROJECTED tags and keep the map via first()
+    proj = downsampled.selectExpr(
+        "metric", f"{projected_tags_sql(group_tag_keys)} AS tags", "bucket_ts", value_col
     )
-    # map columns can't be groupBy keys pre-Spark-3.x semantics; use the
-    # canonical sorted rendering as the shuffle key, keep the map via first()
-    proj = proj.withColumn("__gkey", series_id())
-    return (
-        proj.groupBy("__gkey", "bucket_ts")
-        .agg(
-            F.first("metric").alias("metric"),
-            F.first("tags").alias("tags"),
-            agg_expr(aggregator, value_col).alias("value"),
-        )
-        .select("metric", "tags", "bucket_ts", "value")
-    )
+    return group_stage(proj, series_id_sql(), "bucket_ts", aggregator, value_col)

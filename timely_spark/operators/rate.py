@@ -11,7 +11,7 @@ series, over consecutive point pairs:
   (or, when counterMax unset, the previous value v1) to the delta;
 - if the resulting rate exceeds ``resetValue`` (>0), emit 0.
 
-Spark shape: ``lag`` over ``Window.partitionBy(series).orderBy(ts)`` —
+Spark shape: ``lag`` over ``PARTITION BY series ORDER BY ts`` —
 one shuffle on series id; with the store partitioned by (metric, day)
 and sorted within partitions by (series, ts), AQE turns this into a
 mostly local sort at scale. The first point of each series produces no
@@ -22,10 +22,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..model import series_id
+from ..model import series_id_sql
 
 
 @dataclass
@@ -59,6 +59,52 @@ class RateOptions:
         )
 
 
+def _double(x: float) -> str:
+    """A double literal in SQL text (bare decimals parse as DECIMAL)."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def rate_sql(
+    options: RateOptions | None = None,
+    ts_col: str = "ts",
+    value_col: str = "value",
+    series_key: str | None = None,
+) -> str:
+    """SQL text of the per-series rate of ``value_col``: NULL on each
+    series' first point. ``series_key`` is the window's partition key
+    (a column name or SQL expression; default the computed series id)."""
+    opt = options or RateOptions()
+    key = series_key or series_id_sql()
+    w = f"OVER (PARTITION BY {key} ORDER BY {ts_col})"
+    dt = f"CAST({ts_col} - lag({ts_col}) {w} AS DOUBLE)"
+    dv = f"({value_col} - lag({value_col}) {w})"
+
+    if opt.counter:
+        # RateIterator.java:60-82: on decrease, add counterMax (or prev
+        # value). The unset test is maxCounter > 0 (RateIterator.java:79),
+        # NOT presence: the Grafana backend always marshals counterMax
+        # (int32 zero-value, grafana/timely-datasource/backend/types.go:59),
+        # so 0 must mean "no max" here too.
+        wrap_add = (
+            _double(opt.counter_max)
+            if opt.counter_max is not None and opt.counter_max > 0
+            else f"lag({value_col}) {w}"
+        )
+        dv = f"CASE WHEN {dv} < 0 THEN {dv} + {wrap_add} ELSE {dv} END"
+
+    interval = _double(opt.interval_ms if opt.interval_ms is not None else 1000)
+    # RateIterator.java:93-95: equal-timestamp pairs emit 0.0, not a dropped
+    # row (and the explicit branch is ANSI-safe — no divide-by-zero NULL).
+    # A missing prev (series' first point) keeps dt NULL -> NULL -> dropped.
+    r = f"CASE WHEN {dt} = 0 THEN {_double(0)} ELSE {dv} / {dt} * {interval} END"
+
+    if opt.counter and opt.reset_value > 0:
+        # RateIterator.java:101-104: only a rate EXCEEDING resetValue clamps
+        # to 0 — signed compare; a large negative post-wrap rate passes through
+        r = f"CASE WHEN {r} > {_double(opt.reset_value)} THEN {_double(0)} ELSE {r} END"
+    return r
+
+
 def rate(
     df: DataFrame,
     options: RateOptions | None = None,
@@ -73,38 +119,9 @@ def rate(
     a series-bucketed table (store.write_points_bucketed), windowing on
     the stored column lets the bucketed scan satisfy the window's
     distribution — the Exchange disappears from the plan entirely.
+
+    The stage is rendered as SQL text (:func:`rate_sql`), so building it
+    costs two py4j calls whatever the options.
     """
-    opt = options or RateOptions()
-    key = F.col(series_col) if series_col else series_id()
-    w = Window.partitionBy(key).orderBy(F.col(ts_col))
-    prev_v = F.lag(value_col).over(w)
-    prev_t = F.lag(ts_col).over(w)
-    dt = (F.col(ts_col) - prev_t).cast("double")
-    dv = F.col(value_col) - prev_v
-
-    if opt.counter:
-        # RateIterator.java:60-82: on decrease, add counterMax (or prev
-        # value). The unset test is maxCounter > 0 (RateIterator.java:79),
-        # NOT presence: the Grafana backend always marshals counterMax
-        # (int32 zero-value, grafana/timely-datasource/backend/types.go:59),
-        # so 0 must mean "no max" here too.
-        wrap_add = (
-            F.lit(float(opt.counter_max))
-            if opt.counter_max is not None and opt.counter_max > 0
-            else prev_v
-        )
-        dv = F.when(dv < 0, dv + wrap_add).otherwise(dv)
-
-    interval = F.lit(float(opt.interval_ms if opt.interval_ms is not None else 1000))
-    # RateIterator.java:93-95: equal-timestamp pairs emit 0.0, not a dropped
-    # row (and the explicit branch is ANSI-safe — no divide-by-zero NULL).
-    # A missing prev (series' first point) keeps dt NULL -> NULL -> dropped.
-    r = F.when(dt == 0, F.lit(0.0)).otherwise(dv / dt * interval)
-
-    if opt.counter and opt.reset_value > 0:
-        # RateIterator.java:101-104: only a rate EXCEEDING resetValue clamps
-        # to 0 — signed compare; a large negative post-wrap rate passes through
-        r = F.when(r > F.lit(float(opt.reset_value)), F.lit(0.0)).otherwise(r)
-
-    out = df.withColumn("__rate", r).filter(F.col("__rate").isNotNull())
-    return out.withColumn(value_col, F.col("__rate")).drop("__rate")
+    r = rate_sql(options, ts_col, value_col, series_col)
+    return df.withColumn(value_col, F.expr(r)).filter(f"{value_col} IS NOT NULL")

@@ -1,24 +1,38 @@
-"""Compile a QueryRequest into a DataFrame plan.
+"""Compile a QueryRequest into ONE DataFrame plan.
 
 Pipeline per SubQuery, mirroring the reference's iterator stack order
 (DataStore.java:711-745: TagFilter(100) -> Rate(499) -> Downsample(500)
 -> Aggregation(501), then the coordinator merge at :748-779):
 
-    scan -> time-range + metric + tag + visibility filters
+    scan -> one SQL filter: metric + time + dt + metric_bucket + tag
+            + visibility predicates
          -> [rate]
          -> downsample (per-series buckets)
          -> cross-series combine on the projected tag keys
-         -> orderBy(bucket_ts)
 
-All filters are plain Column predicates so Catalyst pushes them into the
-Parquet scan (the analogue of the reference's hour-range planning
-DataStore.getQueryRanges:997-1039 + column-family fetch :936-947 — with a
-time/metric-partitioned store these become partition pruning for free).
+One plan per request: the API layer reads the tier that holds the
+request's range (``TimelyEngine.points(since_ms=...)``), builds every
+SubQuery over it here, and ``plans/response.to_query_response`` unions
+the SubQuery frames (tagged with their index) and collects them ONCE —
+the reference's per-SubQuery scans (DataStore.java:645) become branches
+of one Spark job graph (AnalyticDB-V's query fusion, PAPERS.md).
+
+Every stage is rendered as SQL text: the predicates as one ``filter``
+string, the rate window, bucket and aggregations as ``selectExpr`` /
+``F.expr`` strings. Building a SubQuery therefore costs a few dozen
+py4j calls instead of a Column-builder exchange per expression node,
+and the schema is read once per request. All predicates are plain
+comparisons, so Catalyst pushes them into the Parquet scan (the
+analogue of the reference's hour-range planning
+DataStore.getQueryRanges:997-1039 + column-family fetch :936-947 —
+with a time/metric-partitioned store these become partition pruning).
 
 Semantics notes:
 - Tag values that are not ``^\\w+$`` are regexes (DataStore.java:860-862),
-  compiled to ``rlike`` anchored on both ends, matching Java
-  ``Matcher.matches()``.
+  compiled to ``RLIKE`` anchored on both ends, matching Java
+  ``Matcher.matches()``. String literals are escaped with
+  ``model.sql_literal`` (backslash and quote), so a value reaches the
+  plan exactly as given.
 - When the cross-series aggregator equals the downsample aggregator (or
   there is no downsample), the two groupBys collapse into ONE aggregation
   over the projected tags — this reproduces the reference's partial-merge
@@ -26,21 +40,25 @@ Semantics notes:
   sums/counts, so e.g. avg is the weighted average over all points, and
   count counts points, not series) while saving a shuffle.
 - ``start`` is floored to the downsample period before bucketing
-  (DataStore.java:693-695).
+  (DataStore.java:693-695); :func:`query_start` is that floor, and the
+  earliest one over a request's SubQueries picks its tier.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from dataclasses import replace
 
-from ..functions.viz import viz_filter
-from ..model import projected_tags, series_id
-from ..operators.aggregators import agg_expr
-from ..operators.downsample import combine_series, downsample
+from pyspark.sql import DataFrame
+
+from ..functions.viz import viz_filter, viz_predicate_sql
+from ..model import projected_tags_sql, series_id_sql, sql_literal
+from ..functions.time import query_aligned_bucket_sql
+from ..operators.downsample import combine_series, downsample, group_stage
 from ..operators.rate import rate
 from ..parse import is_tag_regex
 from .request import QueryRequest, SubQuery
+
+DAY_MS = 86_400_000
 
 
 def _decode_tsuid(t: str) -> str:
@@ -59,20 +77,40 @@ def encode_tsuid(series: str) -> str:
     return series.encode("utf-8").hex()
 
 
-def _tag_predicates(df: DataFrame, tags: dict[str, str]) -> DataFrame:
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def tag_predicates_sql(tags: dict[str, str], columns: list[str]) -> list[str]:
+    """One SQL predicate per tag filter. A promoted ``tag_<k>`` column
+    (sources/store.with_promoted_tags) is preferred: a plain string
+    column's predicate reaches PushedFilters + row-group stats, which a
+    tags-map access never can."""
+    out = []
     for k, v in tags.items():
-        # prefer a promoted tag_<k> column (sources/store.with_promoted_tags):
-        # a plain string column's predicate reaches PushedFilters + row-group
-        # stats, which a tags-map access never can
         pc = f"tag_{k}"
-        col = F.col(pc) if pc in df.columns else F.col("tags").getItem(k)
+        col = _ident(pc) if pc in columns else f"tags[{sql_literal(k)}]"
         if v == "*" or v == ".*":
-            df = df.filter(col.isNotNull())
+            out.append(f"{col} IS NOT NULL")
         elif is_tag_regex(v):
-            df = df.filter(col.rlike(f"^(?:{v})$"))  # Matcher.matches() semantics
+            # Matcher.matches() semantics
+            out.append(f"{col} RLIKE {sql_literal(f'^(?:{v})$')}")
         else:
-            df = df.filter(col == v)
-    return df
+            out.append(f"{col} = {sql_literal(v)}")
+    return out
+
+
+def _tag_predicates(df: DataFrame, tags: dict[str, str]) -> DataFrame:
+    preds = tag_predicates_sql(tags, df.columns)
+    return df.filter(" AND ".join(f"({p})" for p in preds)) if preds else df
+
+
+def query_start(q: SubQuery, start_ms: int) -> int:
+    """The request start floored to the SubQuery's downsample period
+    (DataStore.java:693-695): the first timestamp the SubQuery reads."""
+    spec = q.downsample_spec()
+    period = spec.period_ms if spec else 1
+    return start_ms - (start_ms % period) if period > 1 else start_ms
 
 
 def build_subquery(
@@ -83,17 +121,19 @@ def build_subquery(
     auths: set[str] | None = None,
     viz_exprs: list[str] | None = None,
     bucket_metrics: int | None = None,
+    columns: list[str] | None = None,
 ) -> DataFrame:
     """Returns (metric, tags, bucket_ts, value) for one SubQuery.
 
     ``bucket_metrics``: the store's metric-bucket modulus (layout
     sidecar, sources/store.read_layout) — lets the metric predicate
     reconstruct its directory bucket so partition pruning survives the
-    bucketed layout a >100k-metric deployment needs."""
+    bucketed layout a >100k-metric deployment needs. ``columns``:
+    ``points.columns`` when the caller already read it."""
+    cols = columns if columns is not None else points.columns
     spec = q.downsample_spec()
-    period = spec.period_ms if spec else 1
-    # floor the query start to the bucket period (DataStore.java:693-695)
-    start_ms = start_ms - (start_ms % period) if period > 1 else start_ms
+    start_ms = query_start(q, start_ms)
+    series_key = "series_key" if "series_key" in cols else None
 
     if q.tsuids:
         # tsuid SubQuery (GET ?tsuid=agg:id,.. — QueryRequest.java:615-627):
@@ -102,108 +142,84 @@ def build_subquery(
         # comma-separated list stays unambiguous (the reference's tsuids are
         # likewise hex UID strings). Raw series-id strings are accepted too
         # (JSON path). Selects the listed series directly; the metric
-        # predicate is skipped (metric is "" on these SubQueries).
-        ids = [_decode_tsuid(t) for t in q.tsuids]
-        if "series_key" in points.columns:
-            # series-bucketed store: the materialized key is a plain string
-            # column, so the IN-list reaches PushedFilters and the
-            # (series_key, ts)-sorted row groups prune
-            df = points.filter(F.col("series_key").isin(ids))
-        else:
-            df = points.filter(series_id().isin(ids))
+        # predicate is skipped (metric is "" on these SubQueries). Over a
+        # series-bucketed store the materialized key is a plain string
+        # column, so the IN-list reaches PushedFilters and the
+        # (series_key, ts)-sorted row groups prune.
+        ids = ", ".join(sql_literal(_decode_tsuid(t)) for t in q.tsuids)
+        preds = [f"{series_key or series_id_sql()} IN ({ids})"]
     else:
-        df = points.filter(F.col("metric") == q.metric)
-        if bucket_metrics and "metric_bucket" in df.columns:
+        preds = [f"metric = {sql_literal(q.metric)}"]
+        if bucket_metrics and "metric_bucket" in cols:
             # directory pruning under the bucketed layout: the bucket id
             # is a pure function of the metric literal, so this predicate
             # folds to a constant and lands in PartitionFilters
-            df = df.filter(
-                F.col("metric_bucket")
-                == F.pmod(F.xxhash64(F.lit(q.metric)), F.lit(bucket_metrics))
+            preds.append(
+                f"metric_bucket = pmod(xxhash64({sql_literal(q.metric)}), {bucket_metrics})"
             )
-    if "metric_bucket" in df.columns:
-        df = df.drop("metric_bucket")
-    df = df.filter((F.col("ts") >= start_ms) & (F.col("ts") <= end_ms))
-    if "dt" in df.columns:
+    preds.append(f"ts >= {start_ms} AND ts <= {end_ms}")
+    if "dt" in cols:
         # partition pruning: dt = ts div 1d is a store partition column
         # (sources/store.py), so this predicate prunes whole directories —
         # the F1 hour-range-scan analogue (DataStore.java:997-1039)
-        day_ms = 86_400_000
-        df = df.filter(
-            (F.col("dt") >= start_ms // day_ms) & (F.col("dt") <= end_ms // day_ms)
-        ).drop("dt")
-    df = _tag_predicates(df, q.tags)
+        preds.append(f"dt >= {start_ms // DAY_MS} AND dt <= {end_ms // DAY_MS}")
+    preds += tag_predicates_sql(q.tags, cols)
     # non-grouping filters (Filter.groupBy=false): predicate only — the
     # tag key does NOT enter the projected tag set / series identity
-    df = _tag_predicates(df, q.filters)
-    promoted = [c for c in df.columns if c.startswith("tag_")]
-    if promoted:  # layout columns: filtered on above, never projected
-        df = df.drop(*promoted)
-    if auths is not None:
+    preds += tag_predicates_sql(q.filters, cols)
+    viz_scan = False
+    if auths is not None and "viz" in cols:
         # ALWAYS before any aggregation; viz_exprs (from the meta catalog)
         # saves the per-query distinct-viz scan
+        viz = viz_predicate_sql(auths, viz_exprs)
+        if viz is None:
+            viz_scan = True
+        else:
+            preds.append(viz)
+    df = points.filter(" AND ".join(f"({p})" for p in preds))
+    if viz_scan:
         df = viz_filter(df, auths, known_exprs=viz_exprs)
+    # layout columns (dt, metric_bucket, promoted tag_*) were filtered on
+    # above and are never projected
+    df = df.selectExpr("metric", "tags", "ts", "value", *([series_key] if series_key else []))
 
     if q.rate:
         opts = q.rate_options
         if spec and opts.interval_ms is None:
             # DataStore.java:713-721: rate interval defaults to the
             # downsample period when one is set
-            from dataclasses import replace
-
             opts = replace(opts, interval_ms=spec.period_ms)
         # series-bucketed store: window on the materialized series_key —
         # the bucketed scan's HashPartitioning already satisfies the
         # window distribution, so the rate stage adds NO Exchange
-        df = rate(
-            df,
-            opts,
-            series_col="series_key" if "series_key" in df.columns else None,
-        )
+        df = rate(df, opts, series_col=series_key)
 
     group_keys = sorted(q.tags.keys())
 
     if q.aggregator == "none":
         # 'none' disables downsampling AND cross-series combine
         # (Aggregator.java:40-59): raw points, tags projected
-        return df.select(
-            "metric",
-            projected_tags(group_keys).alias("tags"),
-            F.col("ts").alias("bucket_ts"),
-            "value",
+        return df.selectExpr(
+            "metric", f"{projected_tags_sql(group_keys)} AS tags", "ts AS bucket_ts", "value"
         )
 
     if spec is None or spec.aggregator == "none" or spec.aggregator == q.aggregator:
         # single-shuffle path: one aggregation over (projected tags, bucket)
-        agg_name = q.aggregator
-        projected = projected_tags(group_keys)
         if spec is None or spec.aggregator == "none":
-            bucket = F.col("ts")
+            bucket = "ts"
         else:
-            off = F.col("ts") - F.lit(start_ms)
-            bucket = F.lit(start_ms) + (off - (off % F.lit(spec.period_ms)))
-        pre = df.withColumn("tags", projected).withColumn("bucket_ts", bucket)
-        pre = pre.withColumn("__gkey", series_id())
-        return (
-            pre.groupBy("__gkey", "bucket_ts")
-            .agg(
-                F.first("metric").alias("metric"),
-                F.first("tags").alias("tags"),
-                agg_expr(agg_name).alias("value"),
-            )
-            .select("metric", "tags", "bucket_ts", "value")
+            bucket = query_aligned_bucket_sql("ts", start_ms, spec.period_ms)
+        pre = df.selectExpr(
+            "metric", f"{projected_tags_sql(group_keys)} AS tags", f"{bucket} AS bucket_ts",
+            "value",
         )
+        return group_stage(pre, series_id_sql(), "bucket_ts", q.aggregator)
 
     # two-stage path: downsample agg differs from the cross-series agg.
     # Over a series-bucketed store the per-series stage groups on the
     # materialized series_key — HashPartitioning(series_key) satisfies the
     # grouping distribution, so only the cross-series combine shuffles.
-    ds = downsample(
-        df,
-        spec,
-        start_ms=start_ms,
-        series_col="series_key" if "series_key" in df.columns else None,
-    )
+    ds = downsample(df, spec, start_ms=start_ms, series_col=series_key)
     return combine_series(ds, group_keys, q.aggregator)
 
 
@@ -214,8 +230,10 @@ def run_query(
     viz_exprs: list[str] | None = None,
     bucket_metrics: int | None = None,
 ) -> list[DataFrame]:
-    """One result DataFrame per SubQuery (concatenated by the API layer,
-    QueryRequest.java:370-372 / DataStore.java:645)."""
+    """One result DataFrame per SubQuery over the same ``points`` (read
+    once per request); ``plans/response.to_query_response`` fuses them
+    into one plan (QueryRequest.java:370-372 / DataStore.java:645)."""
+    cols = points.columns
     return [
         build_subquery(
             points,
@@ -225,6 +243,7 @@ def run_query(
             auths=auths,
             viz_exprs=viz_exprs,
             bucket_metrics=bucket_metrics,
+            columns=cols,
         )
         for q in request.queries
     ]

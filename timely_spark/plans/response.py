@@ -1,28 +1,95 @@
-"""OpenTSDB-style JSON response shaping.
+"""OpenTSDB-style JSON response shaping, with the request's one collect.
 
 Reference: server/.../api/response/timeseries/QueryResponse.java:8-60 —
 one element per surviving series: ``{"metric", "tags", "aggregatedTags",
 "dps": {ts: value}}``; dps keys are epoch seconds unless msResolution
 (DataStore.java:774, QueryRequest.java:375).
 
-This runs driver-side on the (small) aggregated result — the heavy
-lifting stayed distributed.
+One collect per request: :func:`fuse` tags each SubQuery frame with its
+index and unions them, so a request is ONE plan whose branches share a
+job graph; the rows come back in one ``collect`` and are split by index
+on the driver. There is no global ``orderBy`` (it cost a range-partition
+sampling job and an extra exchange per SubQuery): each SubQuery's rows
+are sorted on the driver, where the result is aggregate-sized.
+
+Order: the response lists SubQueries in request order. Within one, rows
+sort by ``(metric, bucket_ts, sorted tag pairs)`` and a series appears
+at its first row, so series order by metric, then earliest bucket, and
+series that tie on both order by their sorted ``(key, value)`` tag
+pairs (the tie rule). ``dps`` keys ascend.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+INDEX = "__q"  # the SubQuery index column of a fused plan
 
 
-def to_query_response(result: DataFrame, ms_resolution: bool = False) -> list[dict]:
-    rows = result.orderBy("metric", "bucket_ts").collect()
-    series: dict[tuple, dict] = {}
+def fuse(frames: list[DataFrame]) -> DataFrame:
+    """One plan for a request: every SubQuery frame (metric, tags,
+    bucket_ts, value) tagged with its index and unioned by name. A
+    single frame is its own plan."""
+    if len(frames) == 1:
+        return frames[0]
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        (f.withColumn(INDEX, F.lit(i)) for i, f in enumerate(frames)),
+    )
+
+
+def _series(rows, ms_resolution: bool, integral: bool) -> list[dict]:
+    keyed = []
     for r in rows:
-        tags = dict(r["tags"] or {})
-        key = (r["metric"], tuple(sorted(tags.items())))
-        s = series.setdefault(
-            key, {"metric": r["metric"], "tags": tags, "aggregatedTags": [], "dps": {}}
-        )
-        ts = r["bucket_ts"] if ms_resolution else r["bucket_ts"] // 1000
-        s["dps"][str(ts)] = r["value"]
+        tags = r["tags"] or {}
+        pairs = tuple(sorted(tags.items()))
+        keyed.append((r["metric"], r["bucket_ts"], pairs, tags, r["value"]))
+    keyed.sort(key=lambda e: e[:3])
+    series: dict[tuple, dict] = {}
+    for metric, ts, pairs, tags, v in keyed:
+        s = series.get((metric, pairs))
+        if s is None:
+            s = series[(metric, pairs)] = {
+                "metric": metric, "tags": dict(tags), "aggregatedTags": [], "dps": {}
+            }
+        if integral and v is not None:
+            v = int(v)
+        s["dps"][str(ts if ms_resolution else ts // 1000)] = v
     return list(series.values())
+
+
+def to_query_response(
+    result: DataFrame | list[DataFrame],
+    ms_resolution: bool = False,
+    on_empty: Callable[[int], None] | None = None,
+) -> list[dict]:
+    """Collect ``result`` once and shape it: a single frame, or the
+    SubQuery frames of one request, fused into one plan. ``on_empty(i)``
+    runs for every SubQuery ``i`` that returned no rows (the strict
+    "No matching tags" check raises from it)."""
+    frames = result if isinstance(result, list) else [result]
+    if not frames:
+        return []
+    integral = [False] * len(frames)
+    if len(frames) > 1:
+        kinds = [f.schema["value"].dataType.typeName() for f in frames]
+        if "double" in kinds:  # the union widens bigint values to double
+            integral = [k in ("long", "integer") for k in kinds]
+    rows = fuse(frames).collect()
+    if len(frames) == 1:
+        parts = [rows]
+    else:
+        parts = [[] for _ in frames]
+        for r in rows:
+            parts[r[INDEX]].append(r)
+    out: list[dict] = []
+    for i, rows in enumerate(parts):
+        series = _series(rows, ms_resolution, integral[i])
+        if not series and on_empty is not None:
+            on_empty(i)
+        out.extend(series)
+    return out

@@ -23,11 +23,11 @@ from pyspark.sql import functions as F
 
 from timely_spark.api import ALL_AUTHS, NoMatchingTagsError, TimelyEngine
 from timely_spark.functions.viz import evaluate_visibility
-from timely_spark.model import projected_tags, series_id
+from timely_spark.model import series_id
 from timely_spark.parse import is_tag_regex
 from timely_spark.plans.builder import _decode_tsuid, encode_tsuid
 from timely_spark.plans.request import QueryRequest
-from timely_spark.plans.response import fuse
+from timely_spark.plans.response import _series, fuse
 
 BASE = 1_699_920_000_000  # a UTC midnight
 MIN = 60_000
@@ -59,8 +59,18 @@ def _ref_tags(df, tags):
     return df
 
 
+def _ref_series():
+    return series_id(F.col("metric"), F.col("tags"))
+
+
+def _ref_projected(keys):
+    if not keys:
+        return F.map_filter("tags", lambda k, v: F.lit(False))
+    return F.map_filter("tags", lambda k, v: k.isin(keys))
+
+
 def _ref_rate(df, opt, series_col):
-    key = F.col(series_col) if series_col else series_id()
+    key = F.col(series_col) if series_col else _ref_series()
     w = Window.partitionBy(key).orderBy(F.col("ts"))
     prev_v, prev_t = F.lag("value").over(w), F.lag("ts").over(w)
     dt = (F.col("ts") - prev_t).cast("double")
@@ -101,7 +111,7 @@ def _ref_build(points, q, start, end, auths, viz_exprs, bucket_metrics):
     sk = "series_key" if "series_key" in points.columns else None
     if q.tsuids:
         ids = [_decode_tsuid(t) for t in q.tsuids]
-        df = points.filter((F.col(sk) if sk else series_id()).isin(ids))
+        df = points.filter((F.col(sk) if sk else _ref_series()).isin(ids))
     else:
         df = points.filter(F.col("metric") == q.metric)
         if bucket_metrics and "metric_bucket" in df.columns:
@@ -130,7 +140,7 @@ def _ref_build(points, q, start, end, auths, viz_exprs, bucket_metrics):
     keys = sorted(q.tags)
     if q.aggregator == "none":
         return df.select(
-            "metric", projected_tags(keys).alias("tags"),
+            "metric", _ref_projected(keys).alias("tags"),
             F.col("ts").alias("bucket_ts"), "value",
         )
     off = F.col("ts") - F.lit(start)
@@ -141,11 +151,11 @@ def _ref_build(points, q, start, end, auths, viz_exprs, bucket_metrics):
     )
     if spec is None or spec.aggregator in ("none", q.aggregator):
         return _ref_group(
-            df.withColumn("tags", projected_tags(keys)), series_id(), bucket, q.aggregator
+            df.withColumn("tags", _ref_projected(keys)), _ref_series(), bucket, q.aggregator
         )
-    ds = _ref_group(df, F.col(sk) if sk else series_id(), bucket, spec.aggregator)
+    ds = _ref_group(df, F.col(sk) if sk else _ref_series(), bucket, spec.aggregator)
     return _ref_group(
-        ds.withColumn("tags", projected_tags(keys)), series_id(), F.col("bucket_ts"),
+        ds.withColumn("tags", _ref_projected(keys)), _ref_series(), F.col("bucket_ts"),
         q.aggregator,
     )
 
@@ -382,6 +392,35 @@ def test_strict_empty_subquery_raises_like_reference(engines, rng):
     assert _ref_query(eng, empty, {"OPS"}, strict=True) == [[]]
 
 
+def test_series_order_is_independent_of_collect_order():
+    """The driver-side ordering: series by (metric, first bucket, sorted
+    tag pairs), dps ascending, a duplicate bucket's last collected value
+    wins, and a series keeps the tags map of its earliest row."""
+    from pyspark.sql import Row
+
+    R = Row("metric", "tags", "bucket_ts", "value")
+    rows = [
+        R("b", {"h": "2"}, 2000, 1.0),
+        R("a", {"h": "1", "r": "x"}, 3000, 2.0),
+        R("a", {"r": "x", "h": "1"}, 1000, 3.0),
+        R("a", {"h": "0"}, 1000, 4.0),
+        R("a", None, 5000, 5.0),
+        R("a", {"h": "1", "r": "x"}, 3000, 6.0),
+    ]
+    want = [
+        {"metric": "a", "tags": {"h": "0"}, "aggregatedTags": [], "dps": {"1": 4.0}},
+        {"metric": "a", "tags": {"r": "x", "h": "1"}, "aggregatedTags": [],
+         "dps": {"1": 3.0, "3": 6.0}},
+        {"metric": "a", "tags": {}, "aggregatedTags": [], "dps": {"5": 5.0}},
+        {"metric": "b", "tags": {"h": "2"}, "aggregatedTags": [], "dps": {"2": 1.0}},
+    ]
+    got = _series(rows, ms_resolution=False, integral=False)
+    assert json.dumps(got) == json.dumps(want)
+    # any collect order that keeps the two duplicate-bucket rows in order
+    for perm in itertools.permutations(rows[:5]):
+        assert json.dumps(_series([*perm, rows[5]], False, False)) == json.dumps(want)
+
+
 # ----------------------------------------------------------- plan shape
 
 
@@ -441,17 +480,16 @@ def test_seam_request_still_scans_the_store(engines):
     assert "InMemoryTableScan" in nodes
 
 
-def test_rejected_metric_cold_side_is_only_the_rejected_rows(engines):
-    """Past the cut with admission rejecting ``lat``, the store side of
-    the read carries only rejected-metric rows."""
-    eng = engines["regex"]
-    since = BASE + 150 * MIN
-    assert not eng._hot.serves(since)
-    pts = eng.points(since_ms=since)
-    old = pts.filter(F.col("ts") <= BASE + 119 * MIN).select("metric").distinct()
-    assert [r[0] for r in old.collect()] == ["lat"]
-    recent = {r[0] for r in pts.filter(F.col("ts") >= since).select("metric").distinct().collect()}
-    assert recent == {"cpu", "req", "lat"}
+def test_admission_rejections_keep_the_seam(engines):
+    """Past the cut, a metric that admission keeps out of the window
+    still needs the store: the request scans it as well as the cache."""
+    for name in ("regex", "budget"):
+        eng = engines[name]
+        frame = fuse(eng.query_frames(_request(*RANGES["hot"], PANEL), auths={"OPS"}))
+        frame.collect()
+        nodes = _scan_nodes(frame._jdf.queryExecution().executedPlan())
+        assert [n for n in nodes if n.startswith("Scan parquet")], (name, nodes)
+        assert "InMemoryTableScan" in nodes, (name, nodes)
 
 
 # ------------------------------------------------------- strict probe

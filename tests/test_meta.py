@@ -59,7 +59,7 @@ def test_time_bucket_expressions(spark):
     """functions.time: epoch-aligned vs query-start-aligned bucketing
     (Downsample.java:31-42 — buckets align to the QUERY start; epoch
     alignment is the start=0 special case)."""
-    from timely_spark.functions.time import query_aligned_bucket, time_bucket_ms
+    from timely_spark.functions.time import query_aligned_bucket_sql, time_bucket_ms
 
     df = spark.createDataFrame([(1_000_017,), (1_059_999,), (1_080_000,)], "ts long")
     assert [r[0] for r in df.select(time_bucket_ms("ts", 60_000)).collect()] == [
@@ -71,7 +71,7 @@ def test_time_bucket_expressions(spark):
     got = [
         r[0]
         for r in df.select(
-            query_aligned_bucket("ts", 1_000_017, 60_000)
+            F.expr(query_aligned_bucket_sql("ts", 1_000_017, 60_000))
         ).collect()
     ]
     assert got == [1_000_017, 1_000_017, 1_060_017]

@@ -211,7 +211,7 @@ def test_tag_filter_reference_counts(spark):
     AND across tag keys, Matcher.matches() per value — the comma-class
     regex, plain regex, wildcard and alternation cases return exactly
     the reference's row counts (15 / 30 / 30 / 12)."""
-    from timely_spark.plans.builder import _tag_predicates
+    from timely_spark.plans.builder import tag_predicates_sql
 
     rows = []
     for rack in range(1, 11):
@@ -233,7 +233,8 @@ def test_tag_filter_reference_counts(spark):
         ({"rack": "r08", "host": "r08n01|r08n02|r08n03|r08n04"}, 12),  # testHostOrRegex
     ]
     for tags, want in cases:
-        assert _tag_predicates(df, tags).count() == want, tags
+        preds = " AND ".join(f"({p})" for p in tag_predicates_sql(tags, df.columns))
+        assert df.filter(preds).count() == want, tags
 
 
 def test_metric_braces_escaped_commas():

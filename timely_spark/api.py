@@ -255,13 +255,11 @@ class TimelyEngine:
         time instead of freezing the registration-time clock.
         ``since_ms``: the earliest timestamp the reader needs; with the
         hot tier on, a range wholly inside the pinned window reads the
-        window alone (sources/hot_cache.py, plan-time tier selection)."""
-        if self._hot is not None and self._hot.serves(since_ms):
-            df = self._hot.window
+        window alone (``HotCache.read``, plan-time tier selection)."""
+        if self._hot is not None:
+            df = self._hot.read(self._durable_points, since_ms)
         else:
             df = self._durable_points()
-            if self._hot is not None:
-                df = self._hot.hybrid(df, since_ms)
         if self.default_ttl_ms is not None:
             import time
 

@@ -1,4 +1,4 @@
-from .time import time_bucket_ms, query_aligned_bucket
+from .time import time_bucket_ms, query_aligned_bucket_sql
 from .viz import viz_filter
 
-__all__ = ["time_bucket_ms", "query_aligned_bucket", "viz_filter"]
+__all__ = ["time_bucket_ms", "query_aligned_bucket_sql", "viz_filter"]

@@ -26,8 +26,3 @@ def query_aligned_bucket_sql(ts: str, start_ms: int, period_ms: int) -> str:
     The engine renders its stages as SQL text."""
     off = f"({ts} - {start_ms})"
     return f"{start_ms} + ({off} - ({off} % {period_ms}))"
-
-
-def query_aligned_bucket(ts: str, start_ms: int, period_ms: int) -> Column:
-    """:func:`query_aligned_bucket_sql` as a ``bucket_ts`` column."""
-    return F.expr(query_aligned_bucket_sql(ts, start_ms, period_ms)).alias("bucket_ts")

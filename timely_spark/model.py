@@ -86,20 +86,15 @@ def series_id(metric: Column | str = "metric", tags: Column | str = "tags") -> C
 
 
 def projected_tags_sql(group_tag_keys: list[str], tags: str = "tags") -> str:
-    """SQL text of :func:`projected_tags`."""
+    """SQL text of the queried tag projection: ``tags`` filtered to the
+    named keys (DataStore.java:752-762), one ``map_filter`` so the
+    per-request driver cost is one parse instead of a lambda-builder
+    py4j exchange. Keys are SQL-escaped (:func:`sql_literal`)."""
     if not group_tag_keys:
         # no queried keys -> empty projection (array() would not type)
         return f"map_filter({tags}, (__k, __v) -> false)"
     lits = ", ".join(sql_literal(k) for k in group_tag_keys)
     return f"map_filter({tags}, (__k, __v) -> array_contains(array({lits}), __k))"
-
-
-def projected_tags(group_tag_keys: list[str], tags: str = "tags") -> Column:
-    """The queried tag projection: ``tags`` filtered to the named keys
-    (DataStore.java:752-762), rendered as one SQL ``map_filter`` so the
-    per-request driver cost is one parse instead of a lambda-builder
-    py4j exchange. Keys are SQL-escaped (:func:`sql_literal`)."""
-    return F.expr(projected_tags_sql(group_tag_keys, tags))
 
 
 #: uniform pre-round nudge for cross-engine float parity: DuckDB's

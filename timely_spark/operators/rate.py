@@ -64,17 +64,26 @@ def _double(x: float) -> str:
     return f"CAST('{float(x)!r}' AS DOUBLE)"
 
 
-def rate_sql(
+def rate(
+    df: DataFrame,
     options: RateOptions | None = None,
     ts_col: str = "ts",
     value_col: str = "value",
-    series_key: str | None = None,
-) -> str:
-    """SQL text of the per-series rate of ``value_col``: NULL on each
-    series' first point. ``series_key`` is the window's partition key
-    (a column name or SQL expression; default the computed series id)."""
+    series_col: str | None = None,
+) -> DataFrame:
+    """Replace ``value`` with its per-series rate; drops each series' first point.
+
+    ``series_col``: name of a MATERIALIZED series-key column to window on
+    instead of the computed ``series_id()`` expression. When the input is
+    a series-bucketed table (store.write_points_bucketed), windowing on
+    the stored column lets the bucketed scan satisfy the window's
+    distribution — the Exchange disappears from the plan entirely.
+
+    The stage is rendered as SQL text, so building it costs two py4j
+    calls whatever the options.
+    """
     opt = options or RateOptions()
-    key = series_key or series_id_sql()
+    key = series_col or series_id_sql()
     w = f"OVER (PARTITION BY {key} ORDER BY {ts_col})"
     dt = f"CAST({ts_col} - lag({ts_col}) {w} AS DOUBLE)"
     dv = f"({value_col} - lag({value_col}) {w})"
@@ -102,26 +111,4 @@ def rate_sql(
         # RateIterator.java:101-104: only a rate EXCEEDING resetValue clamps
         # to 0 — signed compare; a large negative post-wrap rate passes through
         r = f"CASE WHEN {r} > {_double(opt.reset_value)} THEN {_double(0)} ELSE {r} END"
-    return r
-
-
-def rate(
-    df: DataFrame,
-    options: RateOptions | None = None,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    series_col: str | None = None,
-) -> DataFrame:
-    """Replace ``value`` with its per-series rate; drops each series' first point.
-
-    ``series_col``: name of a MATERIALIZED series-key column to window on
-    instead of the computed ``series_id()`` expression. When the input is
-    a series-bucketed table (store.write_points_bucketed), windowing on
-    the stored column lets the bucketed scan satisfy the window's
-    distribution — the Exchange disappears from the plan entirely.
-
-    The stage is rendered as SQL text (:func:`rate_sql`), so building it
-    costs two py4j calls whatever the options.
-    """
-    r = rate_sql(options, ts_col, value_col, series_col)
     return df.withColumn(value_col, F.expr(r)).filter(f"{value_col} IS NOT NULL")

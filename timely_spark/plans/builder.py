@@ -21,7 +21,8 @@ Every stage is rendered as SQL text: the predicates as one ``filter``
 string, the rate window, bucket and aggregations as ``selectExpr`` /
 ``F.expr`` strings. Building a SubQuery therefore costs a few dozen
 py4j calls instead of a Column-builder exchange per expression node,
-and the schema is read once per request. All predicates are plain
+and the schema is read once per SubQuery (PySpark caches it on the
+shared ``points`` frame, so only the first read is a py4j call). All predicates are plain
 comparisons, so Catalyst pushes them into the Parquet scan (the
 analogue of the reference's hour-range planning
 DataStore.getQueryRanges:997-1039 + column-family fetch :936-947 —
@@ -100,11 +101,6 @@ def tag_predicates_sql(tags: dict[str, str], columns: list[str]) -> list[str]:
     return out
 
 
-def _tag_predicates(df: DataFrame, tags: dict[str, str]) -> DataFrame:
-    preds = tag_predicates_sql(tags, df.columns)
-    return df.filter(" AND ".join(f"({p})" for p in preds)) if preds else df
-
-
 def query_start(q: SubQuery, start_ms: int) -> int:
     """The request start floored to the SubQuery's downsample period
     (DataStore.java:693-695): the first timestamp the SubQuery reads."""
@@ -121,16 +117,14 @@ def build_subquery(
     auths: set[str] | None = None,
     viz_exprs: list[str] | None = None,
     bucket_metrics: int | None = None,
-    columns: list[str] | None = None,
 ) -> DataFrame:
     """Returns (metric, tags, bucket_ts, value) for one SubQuery.
 
     ``bucket_metrics``: the store's metric-bucket modulus (layout
     sidecar, sources/store.read_layout) — lets the metric predicate
     reconstruct its directory bucket so partition pruning survives the
-    bucketed layout a >100k-metric deployment needs. ``columns``:
-    ``points.columns`` when the caller already read it."""
-    cols = columns if columns is not None else points.columns
+    bucketed layout a >100k-metric deployment needs."""
+    cols = points.columns
     spec = q.downsample_spec()
     start_ms = query_start(q, start_ms)
     series_key = "series_key" if "series_key" in cols else None
@@ -233,7 +227,6 @@ def run_query(
     """One result DataFrame per SubQuery over the same ``points`` (read
     once per request); ``plans/response.to_query_response`` fuses them
     into one plan (QueryRequest.java:370-372 / DataStore.java:645)."""
-    cols = points.columns
     return [
         build_subquery(
             points,
@@ -243,7 +236,6 @@ def run_query(
             auths=auths,
             viz_exprs=viz_exprs,
             bucket_metrics=bucket_metrics,
-            columns=cols,
         )
         for q in request.queries
     ]

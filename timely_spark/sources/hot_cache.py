@@ -6,14 +6,14 @@ answers the recent part of a query from memory; a subquery spanning the
 cache boundary is split at the cache's oldest timestamp and the partial
 results merge per series (DataStore.java:655-690).
 
-Tier selection happens when the plan is built: ``TimelyEngine.points``
-passes the request's earliest (period-floored) start. Past the cut
-with nothing rejected by admission (:meth:`HotCache.serves`) the read
-is the pinned window alone — no store listing, no Parquet scan; with
-rejections the cold side is only the rejected metrics' rows; otherwise
-the hybrid seam below. Results never change: the seam already reads
-only ``ts <= cut`` (plus rejected metrics) from the store, so admitted
-rows past the cut were only ever visible through the window.
+Tier selection happens when the plan is built, in one place
+(:meth:`HotCache.read`): ``TimelyEngine.points`` passes the request's
+earliest (period-floored) start. Past the cut with nothing rejected by
+admission, the read is the pinned window alone — no store listing, no
+Parquet scan; otherwise the hybrid seam below. Results never change:
+the seam reads only ``ts <= cut`` (plus rejected metrics) from the
+store, so admitted rows past the cut were only ever visible through
+the window.
 
 Spark shape: there is only ONE durable tier (partitioned Parquet), so the
 hot tier is an *optimization*, not a semantic feature — a recent-window
@@ -50,6 +50,8 @@ pressure and lineage recomputes from Parquet — degradation, not failure.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -209,34 +211,30 @@ class HotCache:
 
     # -------------------------------------------------------------- reads
 
-    def serves(self, since_ms: int | None) -> bool:
-        """True when the pinned window alone holds every row a read from
-        ``since_ms`` on can see: the range starts past the cut and
-        admission keeps no metric out. ``TimelyEngine.points`` then
-        reads :attr:`window` and never lists or scans the store."""
-        return (
+    def read(
+        self, store_reader: Callable[[], DataFrame], since_ms: int | None = None
+    ) -> DataFrame:
+        """The points a reader from ``since_ms`` on can see, from the
+        tier that holds them: the pinned window alone when the range
+        starts past the cut and admission keeps no metric out (then
+        ``store_reader`` is never called, so the store is neither listed
+        nor scanned), else :meth:`hybrid` over ``store_reader()``."""
+        if (
             self._df is not None
             and since_ms is not None
             and since_ms > self._cut
             and not self.non_cached_metrics
             and not self._evicted
-        )
+        ):
+            return self._df
+        return self.hybrid(store_reader())
 
-    @property
-    def window(self) -> DataFrame | None:
-        """The pinned recent window (admitted rows with ``ts > cut``)."""
-        return self._df
-
-    def hybrid(self, store_points: DataFrame, since_ms: int | None = None) -> DataFrame:
+    def hybrid(self, store_points: DataFrame) -> DataFrame:
         """Union view: recent rows from the cached tier, older rows from
         the store, split at the cache's oldest ts (DataStore.java:655-690).
         A metric the admission policy keeps OUT of the hot tier reads
         its recent rows from the cold scan instead — placement changes,
         results never do.
-
-        ``since_ms``: the earliest timestamp the reader needs. Past the
-        cut, the cold side shrinks to the rejected metrics' rows (the
-        store's ``ts <= cut`` rows are all before the range).
 
         Returns a plain DataFrame — callers (the query builder) see one
         logical table; the cached side serves from memory, the store side
@@ -244,10 +242,9 @@ class HotCache:
         """
         if self._df is None or self._cut is None:
             return store_points
-        if since_ms is not None and since_ms > self._cut:
-            cold = store_points.filter(self._rejected())
-        else:
-            cold = store_points.filter((F.col("ts") <= self._cut) | self._rejected())
+        cold = store_points.filter(
+            (F.col("ts") <= self._cut) | self._rejected()
+        )
         hot = self._df
         cols = [c for c in store_points.columns if c in hot.columns]
         return cold.select(*cols).unionByName(hot.select(*cols))

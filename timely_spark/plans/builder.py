@@ -22,9 +22,9 @@ string, the rate window, bucket and aggregations as ``selectExpr`` /
 ``F.expr`` strings. Building a SubQuery therefore costs a few dozen
 py4j calls instead of a Column-builder exchange per expression node,
 and the schema is read once per SubQuery (PySpark caches it on the
-shared ``points`` frame, so only the first read is a py4j call). All predicates are plain
-comparisons, so Catalyst pushes them into the Parquet scan (the
-analogue of the reference's hour-range planning
+shared ``points`` frame, so only the first read is a py4j call). All
+predicates are plain comparisons, so Catalyst pushes them into the
+Parquet scan (the analogue of the reference's hour-range planning
 DataStore.getQueryRanges:997-1039 + column-family fetch :936-947 —
 with a time/metric-partitioned store these become partition pruning).
 

@@ -1,0 +1,265 @@
+"""The driver-resident meta catalog (sources/catalog.py).
+
+``TimelyEngine.suggest`` and the visibility lookups read the catalog;
+``operators.meta.suggest`` over ``TimelyEngine.meta()`` is the Spark
+reference it must equal with no tolerance. Also pinned: the job counts
+(no job without new files, one job for new files), freshness across two
+engines on one store, and concurrent puts and suggests over HTTP against
+a serial replay.
+"""
+
+import json
+import sys
+import threading
+import urllib.parse
+import urllib.request
+
+import pytest
+
+from timely_spark.api import TimelyEngine
+from timely_spark.fsutil import data_file_lister
+from timely_spark.http_facade import TimelyHttpServer
+from timely_spark.operators.meta import suggest
+from timely_spark.sources.catalog import MetaCatalog
+
+B = 1_447_767_913_000
+
+# upper/lower case and non-ASCII names: Spark orders strings by UTF-8
+# bytes, Python by code point, and the two orders agree
+LINES = [
+    f"put sys.cpu.user {B} 1.0 host=web01 rack=r1",
+    f"put sys.cpu.user {B + 1000} 2.0 host=Web02 rack=r1",
+    f"put sys.cpu.idle {B} 3.0 host=web01 Rack=R2",
+    f"put Sys.CPU.user {B} 4.0 host=db01",
+    f"put mé.trïc {B} 5.0 hôst=é rack=ß",
+    f"put mé.trïc {B + 2000} 6.0 hôst=z rack=Ω",
+    f"put 日本.load {B} 7.0 host=東京 host2=ａ",
+    f"put bare {B} 8.0",
+    f"put bare {B + 3000} 9.0",
+]
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def engine(spark, tmp_path_factory):
+    eng = TimelyEngine(spark, store_path=str(tmp_path_factory.mktemp("catalog") / "m"))
+    # two puts: the fold spans more than one _meta file
+    eng.put_lines(LINES[:4])
+    eng.put_lines(LINES[4:])
+    return eng
+
+
+def test_suggest_parity_with_the_spark_operator(engine):
+    meta = engine.meta().cache()
+    metrics = ["sys.cpu.user", "Sys.CPU.user", "mé.trïc", "日本.load", "bare"]
+    cases = [("metrics", q, None) for q in ("", "sys", "cpu", "CPU", "é", ".", "nope")]
+    cases += [("tagk", q, None) for q in ("", *metrics, "nope")]
+    cases += [
+        ("tagv", m, t)
+        for m in ("", *metrics)
+        for t in (None, "host", "hôst", "rack", "Rack", "nope")
+    ]
+    cases += [("bogus", "sys", None), ("TAGK", "bare", None)]
+    try:
+        for kind, q, tag in cases:
+            for max_results in (-1, 0, 1, 25):
+                want = [
+                    r["suggestion"]
+                    for r in suggest(meta, q, kind, max_results, tag=tag).collect()
+                ]
+                got = engine.suggest(q, kind, max_results, tag=tag)
+                assert got == want, (kind, q, tag, max_results)
+    finally:
+        meta.unpersist()
+    # the cases above reach past the trivial answers
+    assert engine.suggest("", "metrics", -1) == [
+        "Sys.CPU.user", "bare", "mé.trïc", "sys.cpu.idle", "sys.cpu.user", "日本.load",
+    ]
+    assert engine.suggest("mé.trïc", "tagv", -1, tag="rack") == ["ß", "Ω"]
+    assert engine.suggest("日本.load", "tagk", -1) == ["host", "host2"]
+
+
+def test_fold_equals_the_spark_fold(engine):
+    """The folded (metric, tag_key, tag_value) -> last_seen map is the
+    groupBy/max that ``meta()`` computes."""
+    want = {
+        (r["metric"], r["tag_key"], r["tag_value"]): r["last_seen"]
+        for r in engine.meta().collect()
+    }
+    assert engine.catalog.last_seen() == want
+    assert want[("mé.trïc", "rack", "Ω")] == B + 2000
+
+
+def test_tagk_on_a_tagless_metric_is_empty(engine):
+    """build_meta keeps a tagless metric as a (metric, null, null) row;
+    neither path may suggest the null."""
+    assert engine.suggest("bare", "tagk") == []
+    assert [r[0] for r in suggest(engine.meta(), "bare", "tagk").collect()] == []
+    assert engine.suggest("bare", "metrics") == ["bare"]
+
+
+def test_reads_run_a_job_only_for_new_files(spark, tmp_path):
+    eng = TimelyEngine(spark, store_path=str(tmp_path / "m"))
+    assert eng.suggest("", "metrics") == []  # no _meta yet: no job, no error
+    eng.put_lines([f"put a.b {B} 1.0 host=h1 viz=X"])
+    out, jobs = _jobs(spark, "catalog-first", lambda: eng.suggest("a", "metrics"))
+    assert (out, jobs) == (["a.b"], 1)
+    out, jobs = _jobs(spark, "catalog-warm", lambda: eng.suggest("a.b", "tagv", tag="host"))
+    assert (out, jobs) == (["h1"], 0)
+    eng.put_lines([f"put a.b {B + 1000} 1.0 host=h2"])
+    out, jobs = _jobs(spark, "catalog-new", lambda: eng.suggest("a.b", "tagv", tag="host"))
+    assert (out, jobs) == (["h1", "h2"], 1)
+    # the second put's _record_viz already folded the X file
+    assert _jobs(spark, "catalog-viz", eng._viz_known) == ({"X"}, 0)
+
+
+def test_lister_skips_hidden_files_and_missing_dirs(spark, tmp_path):
+    d = tmp_path / "dir"
+    assert data_file_lister(spark, str(d))() is None
+    d.mkdir()
+    for name in ("part-0.parquet", "_SUCCESS", ".part-0.parquet.crc", "a,b c.parquet"):
+        (d / name).write_bytes(b"")
+    (d / "_temporary").mkdir()
+    listed = data_file_lister(spark, str(d))()
+    assert sorted(p.rsplit("/", 1)[-1] for p in listed) == ["a,b c.parquet", "part-0.parquet"]
+
+
+def test_rewritten_directory_folds_from_scratch(spark, tmp_path):
+    """A folded file that disappears (retention/compaction rewrote the
+    directory) drops what only it held."""
+    meta, viz = str(tmp_path / "meta"), str(tmp_path / "viz")
+    cat = MetaCatalog(spark, meta, viz)
+    spark.createDataFrame([("m", "k", "old", 1)], "metric string, tag_key string, tag_value string, last_seen long").write.parquet(meta)
+    assert cat.suggest("m", "tagv", tag="k") == ["old"]
+    assert cat.viz() is None  # no _viz directory: unknown, not empty
+    spark.createDataFrame([("m", "k", "new", 2)], "metric string, tag_key string, tag_value string, last_seen long").write.mode("overwrite").parquet(meta)
+    assert cat.suggest("m", "tagv", tag="k") == ["new"]
+    spark.createDataFrame([], "viz string").coalesce(1).write.parquet(viz)
+    assert cat.viz() == frozenset()
+
+
+def test_second_engine_writes_are_seen(spark, tmp_path):
+    """Engine B adds a metric under a new visibility label; engine A,
+    whose catalog is already warm, sees both in suggest and query."""
+    store = str(tmp_path / "m")
+    a = TimelyEngine(spark, store_path=store)
+    a.put_lines([f"put old.m {B} 1.0 host=h1 viz=OPS"])
+    q = {
+        "start": B - 1000,
+        "end": B + 60_000,
+        "msResolution": True,
+        "queries": [{"aggregator": "sum", "metric": "new.m", "tags": {}}],
+    }
+    assert a.suggest("", "metrics") == ["old.m"]
+    assert a.query(q, auths={"OPS", "SEC"}) == []  # warms the viz catalog
+    b = TimelyEngine(spark, store_path=store)
+    b.put_lines([f"put new.m {B + 1000} 5.0 host=h2 viz=SEC"])
+    assert a.suggest("", "metrics") == ["new.m", "old.m"]
+    out = a.query(q, auths={"OPS", "SEC"})
+    assert [s["dps"] for s in out] == [{str(B + 1000): 5.0}]
+    assert out == TimelyEngine(spark, store_path=store).query(q, auths={"OPS", "SEC"})
+
+
+def _get(base: str, params: dict) -> list:
+    url = f"{base}/api/suggest?{urllib.parse.urlencode(params)}"
+    with urllib.request.urlopen(url, timeout=120) as r:
+        return json.loads(r.read())
+
+
+def _put(base: str, body: list) -> None:
+    req = urllib.request.Request(
+        f"{base}/api/put", data=json.dumps(body).encode(),
+        headers={"Content-Type": "application/json"}, method="POST",
+    )
+    with urllib.request.urlopen(req, timeout=120) as r:
+        assert r.status == 200
+
+
+def test_concurrent_puts_and_suggests_match_a_serial_replay(spark, tmp_path):
+    """One client puts while three others suggest over HTTP. Every
+    answer must be the serial replay's answer after some number of puts,
+    that number never goes back within one client, and the putter reads
+    its own writes."""
+    n_puts = 4
+
+    def body(j):
+        return [
+            {"metric": f"c.m{j}", "timestamp": B + j, "value": 1.0, "tags": {"host": f"h{j}"}},
+            {"metric": "c.shared", "timestamp": B + j, "value": 1.0, "tags": {"host": f"s{j}"}},
+        ]
+
+    asks = [
+        {"type": "metrics", "m": "c.", "max": "-1"},
+        {"type": "tagv", "m": "c.shared", "t": "host", "max": "-1"},
+        {"type": "tagk", "m": f"c.m{n_puts}", "max": "-1"},
+    ]
+    replay = TimelyEngine(spark, store_path=str(tmp_path / "replay"))
+    want = []  # want[j][a]: answer to asks[a] after puts 0..j
+    for j in range(n_puts + 1):
+        replay.put_json(body(j))
+        want.append([
+            [r[0] for r in suggest(replay.meta(), a["m"], a["type"], -1, tag=a.get("t")).collect()]
+            for a in asks
+        ])
+    assert want[0] != want[-1]
+
+    eng = TimelyEngine(spark, store_path=str(tmp_path / "live"))
+    eng.put_json(body(0))
+    srv = TimelyHttpServer(eng).start()
+    base = srv.base_url
+    done = threading.Event()
+    errors: list = []
+
+    def putter():
+        try:
+            for j in range(1, n_puts + 1):
+                _put(base, body(j))
+                got = [_get(base, a) for a in asks]
+                assert got == want[j], (j, got)
+        except Exception as e:  # reported by the main thread
+            errors.append(e)
+        finally:
+            done.set()
+
+    def suggester(k):
+        try:
+            seen = [0] * len(asks)
+            while True:
+                last = done.is_set()
+                for a, ask in enumerate(asks):
+                    got = _get(base, ask)
+                    states = [j for j in range(n_puts + 1) if want[j][a] == got]
+                    assert states, (k, ask, got)
+                    assert max(states) >= seen[a], (k, ask, got, seen[a])
+                    seen[a] = min(j for j in states if j >= seen[a])
+                if last:
+                    assert [_get(base, a) for a in asks] == want[-1]
+                    return
+        except Exception as e:
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=putter)]
+        threads += [threading.Thread(target=suggester, args=(k,)) for k in range(3)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+        srv.stop()
+    assert not errors, errors
+    assert eng.suggest("c.", "metrics", -1) == want[-1][0]

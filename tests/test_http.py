@@ -951,3 +951,25 @@ def test_http_gzip_multi_member_body(spark, tmp_path):
         )
         with urllib.request.urlopen(req, timeout=60) as r:
             assert r.status == 200
+
+
+def test_accepted_connections_disable_nagle(spark, tmp_path):
+    """The handler writes headers and body in two sends; with Nagle on,
+    the body waits for the client's delayed ACK (~40 ms a response)."""
+    import socket
+
+    with server(spark, tmp_path) as srv:
+        handler = srv._httpd.RequestHandlerClass
+        setup = handler.setup
+        seen = []
+
+        def recording_setup(self):
+            setup(self)
+            seen.append(self.connection.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY))
+
+        handler.setup = recording_setup
+        try:
+            assert get(srv.base_url + "/version")[0] == 200
+        finally:
+            handler.setup = setup
+    assert seen and all(seen)

@@ -738,3 +738,39 @@ def test_read_wet_documents(spark, tmp_path):
         spark, str(tmp_path / "w"), main_content=True
     ).collect()
     assert "value < 10 and <tag> stays" in {r["text"] for r in rows2}
+
+
+def test_put_write_is_sized_to_its_batch(spark, tmp_path):
+    """TimelyEngine._store counts the batch's (metric, dt) groups in its
+    stats job and writes with at most that many tasks, not one per
+    shuffle partition; the stored rows and the one file per (metric, dt)
+    directory are unchanged."""
+    from timely_spark.api import TimelyEngine
+
+    b = 1_447_767_913_000
+    lines = [f"put m{k} {b + d * DAY + i} {float(i)} host=h{i}" for k in range(2) for d in range(2) for i in range(5)]
+    eng = TimelyEngine(spark, store_path=str(tmp_path / "s"))
+    sc = spark.sparkContext
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    sc.setJobGroup("sized-put", "sized-put")
+    try:
+        assert eng.put_lines(lines) == 20
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup("sized-put")
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    ]
+    assert tasks and 32 not in tasks
+    got = sorted((r["metric"], r["ts"], r["value"]) for r in read_points(spark, str(tmp_path / "s")).collect())
+    assert got == sorted((f"m{k}", b + d * DAY + i, float(i)) for k in range(2) for d in range(2) for i in range(5))
+    dirs = [d for d, _, names in os.walk(tmp_path / "s") if os.path.basename(d).startswith("dt=")]
+    assert len(dirs) == 4
+    for d in dirs:
+        assert len([n for n in os.listdir(d) if n.endswith(".parquet")]) == 1

@@ -20,14 +20,15 @@ from pyspark.sql import functions as F
 
 from .model import META_SCHEMA, METRIC_SCHEMA, sql_literal
 from .operators.exclusions import apply_exclusions
-from .operators.meta import build_meta, metrics_dump, search_lookup, suggest
+from .operators.meta import build_meta, metrics_dump, search_lookup
 from .operators.retention import ageoff_filter, retention_delete_plan
 from .parse import parse_put_line
 from .plans.builder import query_start, run_query
 from .plans.request import QueryRequest
 from .plans.response import to_query_response
+from .sources.catalog import MetaCatalog
 from .sources.lineprotocol import parse_lines_df
-from .sources.store import compact_partitions, read_points, write_points
+from .sources.store import DAY_MS, compact_partitions, read_points, write_points
 
 VERSION = "0.0.3"  # parity with VersionRequest.java
 
@@ -115,11 +116,12 @@ class TimelyEngine:
                 )
         self.bucket_metrics = bucket_metrics
         self._hot = None  # optional recent-window tier (enable_hot_cache)
-        # distinct viz-expression catalog (sidecar of the meta side-write):
-        # queries evaluate visibility against this driver-cached set instead
-        # of a per-query distinct scan over the point store
+        # distinct viz-expression sidecar of the meta side-write: queries
+        # evaluate visibility against it instead of a per-query distinct
+        # scan over the point store
         self._viz_path = self.meta_path.rstrip("/") + "_viz"
-        self._viz_exprs: set[str] | None = None
+        # driver-resident copy of both side-writes, kept fresh by listing
+        self.catalog = MetaCatalog(spark, self.meta_path, self._viz_path)
 
     # ------------------------------------------------------------- ingest
 
@@ -172,10 +174,18 @@ class TimelyEngine:
         # (observed as a duplicate 'sample' tag). Truncating lineage pins
         # the batch contents; it stays distributed (executor blocks).
         pts = pts.localCheckpoint(eager=True)
-        # one stats job covers the emptiness check AND the hot tier's
-        # window anchor, so the cache refresh below issues zero jobs
+        # one stats job covers the emptiness check, the hot tier's window
+        # anchor (so the cache refresh below issues zero jobs), the batch's
+        # viz expressions and its (metric, dt) write groups; a global
+        # aggregate, so none of them adds an exchange. An undercount of
+        # the groups only puts two of them in one write task.
         stats = pts.agg(
-            F.count(F.lit(1)).alias("n"), F.max("ts").alias("hi")
+            F.count(F.lit(1)).alias("n"),
+            F.max("ts").alias("hi"),
+            F.collect_set("viz").alias("viz"),
+            F.approx_count_distinct(
+                F.struct("metric", (F.col("ts") / F.lit(DAY_MS)).cast("long"))
+            ).alias("groups"),
         ).collect()[0]
         n = stats["n"]
         if n:
@@ -189,10 +199,11 @@ class TimelyEngine:
                     self.store_path,
                     promote_tags=self.promote_tags or None,
                     bucket_metrics=self.bucket_metrics,
+                    n_groups=stats["groups"],
                 )
             # meta side-write (DataStore.java:415-433)
             build_meta(pts).write.mode("append").parquet(self.meta_path)
-            self._record_viz(pts)
+            self._record_viz(set(stats["viz"]))
             if self._hot is not None:
                 # cache append analogue (DataStoreCache.store:635-644)
                 self._hot.refresh(self._durable_points(), now_ms=stats["hi"])
@@ -491,14 +502,11 @@ class TimelyEngine:
             outs.append(combine_series(ds, keys, q.aggregator))
         return outs
 
-    def _record_viz(self, pts: DataFrame) -> None:
-        """Fold the batch's distinct viz expressions into the sidecar
-        catalog (one tiny job on the already-checkpointed batch; queries
-        then never scan the store for them)."""
-        batch = {
-            r[0]
-            for r in pts.select("viz").filter(F.col("viz").isNotNull()).distinct().collect()
-        }
+    def _record_viz(self, batch: set[str]) -> None:
+        """Append the batch's viz expressions that the catalog does not
+        hold yet to the ``_viz`` sidecar (queries then never scan the
+        store for them). Any engine on this store sees the new file at
+        its next catalog read."""
         known = self._viz_known()
         new = batch - (known or set())
         if new or known is None:
@@ -507,20 +515,14 @@ class TimelyEngine:
             self.spark.createDataFrame(
                 [(e,) for e in sorted(new)], "viz string"
             ).coalesce(1).write.mode("append").parquet(self._viz_path)
-        self._viz_exprs = (known or set()) | new
 
-    def _viz_known(self) -> set[str] | None:
-        """The catalog's distinct viz expressions, or None when this store
-        has no sidecar (populated outside the engine) — callers then fall
-        back to viz_filter's distinct scan."""
-        if self._viz_exprs is None:
-            import os
-
-            if os.path.isdir(self._viz_path):
-                self._viz_exprs = {
-                    r[0] for r in self.spark.read.parquet(self._viz_path).collect()
-                }
-        return self._viz_exprs
+    def _viz_known(self) -> frozenset[str] | None:
+        """The distinct viz expressions from the driver-resident catalog
+        (``MetaCatalog.viz``: fresh as of this call's listing of
+        ``_viz``, so expressions another engine appended are included),
+        or None when this store has no sidecar (populated outside the
+        engine) — callers then fall back to viz_filter's distinct scan."""
+        return self.catalog.viz()
 
     def _catalog_has_tags(self, q) -> bool:
         """True iff the meta catalog holds a series matching the SubQuery's
@@ -594,8 +596,12 @@ class TimelyEngine:
 
     def suggest(self, q: str, kind: str = "metrics", max_results: int = 25,
                 tag: str | None = None) -> list[str]:
-        rows = suggest(self.meta(), q, kind, max_results, tag=tag).collect()
-        return [r["suggestion"] for r in rows]
+        """/api/suggest from the driver-resident catalog
+        (``MetaCatalog.suggest``): the answers of ``operators.meta.suggest``
+        over :meth:`meta`, with no Spark job unless puts landed new
+        ``_meta`` files since the last read, and then one job that reads
+        only those files."""
+        return self.catalog.suggest(q, kind, max_results, tag=tag)
 
     def search_lookup(self, metric: str | None = None, tag_key: str | None = None,
                       tag_value_pattern: str | None = None, limit: int = 25) -> dict:

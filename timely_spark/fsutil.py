@@ -63,6 +63,34 @@ def sidecar_read_json(spark: SparkSession, path: str) -> dict | None:
     return json.loads(data)
 
 
+def data_file_lister(spark: SparkSession, path: str):
+    """A function that lists the qualified paths of the data files
+    directly under directory ``path``, skipping ``_``/``.`` names the way
+    Spark's file reader does (``_SUCCESS``, ``_temporary``, ``.crc``),
+    or answers ``None`` while the directory does not exist.
+
+    Zero Spark jobs. The FileSystem, the path and the JVM members are
+    resolved once, here, and the names cross the gateway as one
+    NUL-joined string, so a listing costs a fixed handful of py4j calls
+    whatever the file count (``genericWrapArray`` takes the ``Path[]``
+    as the erased ``Object`` that py4j can pass, where Java's
+    ``Object[]`` joiners refuse it)."""
+    fs, p = _fs_path(spark, path)
+    stat2paths = spark._jvm.org.apache.hadoop.fs.FileUtil.stat2Paths
+    wrap = spark._jvm.scala.Predef.genericWrapArray
+
+    def listing() -> frozenset[str] | None:
+        if not fs.exists(p):
+            return None
+        joined = wrap(stat2paths(fs.listStatus(p))).mkString("\0")
+        return frozenset(
+            f for f in joined.split("\0")
+            if f and not f.rsplit("/", 1)[-1].startswith(("_", "."))
+        )
+
+    return listing
+
+
 def sidecar_delete(spark: SparkSession, path: str) -> None:
     """Recursively delete a stale sidecar path (used by writers to
     retire the pre-r12 one-row-parquet layout on overwrite)."""

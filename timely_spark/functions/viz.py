@@ -146,9 +146,12 @@ def viz_filter(
     plans/builder.py apply it as the first transformation after the scan.
 
     ``known_exprs``: the corpus' distinct visibility expressions, when the
-    caller already knows them (TimelyEngine maintains them in the meta
-    side-write). Passing them skips the per-query distinct scan — at 100 TB
-    the distinct-viz set must come from the catalog, not a data scan.
+    caller already knows them (TimelyEngine appends them to its ``_viz``
+    side-write and reads them from its driver-resident catalog,
+    ``sources.catalog.MetaCatalog.viz``, which lists the side-write on
+    each read, so expressions another engine wrote are included).
+    Passing them skips the per-query distinct scan — at 100 TB the
+    distinct-viz set must come from the catalog, not a data scan.
     """
     if viz_col not in df.columns:
         return df

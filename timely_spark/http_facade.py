@@ -224,6 +224,10 @@ class TimelyHttpServer:
 
         class Handler(BaseHTTPRequestHandler):
             protocol_version = "HTTP/1.1"
+            # TCP_NODELAY: a response goes out as two sends (headers, then
+            # body), and with Nagle on the body waits for the client's
+            # delayed ACK of the headers, about 40 ms per response
+            disable_nagle_algorithm = True
 
             def log_message(self, *args):  # quiet: tests spin many requests
                 pass

@@ -15,6 +15,8 @@ Spark: the catalog is a tiny derived DataFrame
 stream's tags with max(ts). At 100 TB it is maintained incrementally by
 the ingest path (sources/store.py foreachBatch upsert), never recomputed
 from raw points; it is small enough to broadcast into any planning join.
+The engine serves suggest from a driver-resident fold of the same rows
+(sources/catalog.py); lookup and metrics stay on these operators.
 """
 
 from __future__ import annotations
@@ -55,6 +57,15 @@ def suggest(
     when ``request.getMax() >= 0`` (DataStore.java:538,551,567), and the
     Grafana datasource relies on it (``max: '-1'`` for the metric list,
     grafana/timely-datasource/src/TimelyDataSource.ts:228).
+
+    Nulls never suggest: ``build_meta``'s ``explode_outer`` keeps a
+    tagless metric as a ``(metric, null, null)`` row, and the reference
+    holds no tag-key row for such a metric.
+
+    This is the Spark-native form (the ``ts_suggest`` registry row).
+    ``TimelyEngine.suggest`` answers the same from its driver-resident
+    copy, ``sources.catalog.MetaCatalog.suggest``, and the tests hold
+    the two equal.
     """
     if kind == "metrics":
         out = meta if not q else meta.filter(F.col("metric").contains(q))
@@ -76,7 +87,10 @@ def suggest(
         out = meta.limit(0)
         col = "metric"
     out = (
-        out.select(F.col(col).alias("suggestion")).distinct().orderBy("suggestion")
+        out.select(F.col(col).alias("suggestion"))
+        .filter(F.col("suggestion").isNotNull())
+        .distinct()
+        .orderBy("suggestion")
     )
     return out.limit(max_results) if max_results >= 0 else out
 

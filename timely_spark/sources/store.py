@@ -83,6 +83,7 @@ def write_points(
     mode: str = "append",
     bucket_metrics: int | None = None,
     promote_tags: list[str] | None = None,
+    n_groups: int | None = None,
 ) -> None:
     """Durable write (the BatchWriter-sink analogue, DataStore.java:385-510).
 
@@ -90,6 +91,11 @@ def write_points(
     top-level column (see ``with_promoted_tags``). Use the same list for
     every append — a mixed store still reads (missing values null) but
     unpromoted files lose the pushdown.
+
+    ``n_groups``: the batch's (metric, dt) group count when the caller
+    already knows it (``TimelyEngine._store`` counts it in its stats
+    job); the write then runs at most that many tasks instead of leaving
+    shuffle-partition tasks with nothing to write.
     """
     if promote_tags:
         points = with_promoted_tags(points, promote_tags)
@@ -123,6 +129,8 @@ def write_points(
     #   (2.51 vs 2.71 s, within noise).
     sort_cols = part_cols + [c for c in ("metric", "ts") if c not in part_cols]
     n_write = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if n_groups:
+        n_write = min(n_write, n_groups)
     (
         df.repartition(n_write, *[F.col(c) for c in part_cols])
         .sortWithinPartitions(*sort_cols)

@@ -54,3 +54,26 @@ def test_sidecar_delete_retires_directory_layout(spark, tmp_path):
     assert not os.path.exists(str(stale))
     # deleting a non-existent path is a no-op, not an error
     sidecar_delete(spark, str(stale))
+
+
+def test_replace_dir_swaps_and_restores_a_parked_directory(spark, tmp_path):
+    """``replace_dir`` swaps a directory in; a directory a crash left
+    parked at ``__old`` (current already moved aside) is restored, not
+    deleted, before the next swap."""
+    from timely_spark.fsutil import replace_dir
+
+    cur, new = tmp_path / "t", tmp_path / "t_new"
+    cur.mkdir()
+    (cur / "a").write_text("old")
+    new.mkdir()
+    (new / "a").write_text("new")
+    replace_dir(spark, str(new), str(cur))
+    assert (cur / "a").read_text() == "new"
+    assert not new.exists() and not (tmp_path / "t__old").exists()
+
+    os.rename(cur, tmp_path / "t__old")  # crash between the two renames
+    new.mkdir()
+    (new / "a").write_text("newer")
+    replace_dir(spark, str(new), str(cur))
+    assert (cur / "a").read_text() == "newer"
+    assert not (tmp_path / "t__old").exists()

@@ -13,8 +13,11 @@ from the reference and come in sorted-tag-pair order from the engine
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import itertools
 import json
+import os
 from dataclasses import replace
 
 import pytest
@@ -172,7 +175,7 @@ def _ref_query(eng, request, auths=None, strict=False):
     for q in req.queries:
         frame = _ref_build(
             pts, q, req.start, req.end, eff,
-            sorted(known) if known is not None else None, eng.bucket_metrics,
+            sorted(known) if known is not None else None, eng.store.bucket_metrics,
         )
         series: dict[tuple, dict] = {}
         for r in frame.orderBy("metric", "bucket_ts").collect():
@@ -317,6 +320,99 @@ def test_layouts_match_reference(engines, name):
     for rng in ("hot", "seam"):
         req = _request(*RANGES[rng], PANEL)
         _assert_parity(eng.query(req, auths=ALL_AUTHS), _ref_query(eng, req, ALL_AUTHS))
+
+
+# ------------------------------------------------------ layout parity
+#
+# Every store layout, with the hot tier on and off, must answer with the
+# exact response and build the exact per-SubQuery SQL filter text that
+# the engine produced before the layout moved behind
+# ``sources/store.PointStore`` (commit cb4c0c9). LAYOUT_GOLDEN holds
+# those filters and a SHA-256 of each response's JSON, recorded by
+# running :func:`layout_cases` against that commit.
+
+LAYOUT_GOLDEN = os.path.join(os.path.dirname(__file__), "fixtures", "layout_parity.json")
+LAYOUTS = {
+    "flat": {},
+    "promoted": {"promote_tags": ["host"]},
+    "bucketed": {"bucket_metrics": 2},
+    "series": {"series_table": "fused_layout_series"},
+}
+LAYOUT_REQUESTS = {
+    "panel_hot": (_request(*RANGES["hot"], PANEL), {"OPS"}),
+    "panel_seam": (_request(*RANGES["seam"], PANEL), {"OPS"}),
+    "tsuid_none": (_request(150, 240, [
+        {"metric": "", "aggregator": "avg",
+         "tsuids": [encode_tsuid("cpu,host=h05,path=it's,rack=r1")]},
+        {"metric": "cpu", "aggregator": "none", "tags": {"host": "h0[5-7]"}},
+        {"metric": "req", "aggregator": "max", "downsample": "10m-min",
+         "tags": {"host": "h06", "path": "*"}},
+    ], ms=False), ALL_AUTHS),
+}
+
+
+@contextlib.contextmanager
+def _filter_strings():
+    """Record the SQL text of every ``DataFrame.filter(str)`` call."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    seen, original = [], DataFrame.filter
+
+    def recording(self, condition):
+        if isinstance(condition, str):
+            seen.append(condition)
+        return original(self, condition)
+
+    DataFrame.filter = recording
+    try:
+        yield seen
+    finally:
+        DataFrame.filter = original
+
+
+def layout_cases(spark, root) -> dict:
+    """``{"<layout>/<hot|cold>/<request>": {"filters", "response",
+    "series"}}`` for every layout, tier setting and request, over stores
+    made under ``root``: the SubQueries' filter strings, the SHA-256 of
+    the response JSON and its series count. To re-record the golden
+    file from a checkout, run this with that checkout's ``timely_spark``
+    first on ``sys.path`` and dump ``{"cases": ...}`` as JSON."""
+    out = {}
+    for layout, opts in LAYOUTS.items():
+        table = opts.get("series_table")
+        if table:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
+        store = os.path.join(str(root), layout)
+        writer = TimelyEngine(spark, store_path=store, **opts)
+        writer.put_json(_payload())
+        for tier in ("hot", "cold"):
+            eng = TimelyEngine(spark, store_path=store, **opts)
+            if tier == "hot":
+                eng.enable_hot_cache(window_ms=HOT_MS)
+            for name, (req, auths) in LAYOUT_REQUESTS.items():
+                with _filter_strings() as filters:
+                    eng.query_frames(req, auths=auths)
+                resp = eng.query(req, auths=auths)
+                out[f"{layout}/{tier}/{name}"] = {
+                    "filters": list(filters),
+                    "response": hashlib.sha256(json.dumps(resp).encode()).hexdigest(),
+                    "series": len(resp),
+                }
+            if eng._hot is not None:
+                eng._hot.close()
+        if table:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
+    return out
+
+
+def test_layouts_match_recorded_filters_and_responses(spark, tmp_path):
+    with open(LAYOUT_GOLDEN) as f:
+        golden = json.load(f)["cases"]
+    got = layout_cases(spark, tmp_path)
+    assert sorted(got) == sorted(golden)
+    for case, want in golden.items():
+        assert want["series"], case
+        assert got[case] == want, case
 
 
 @pytest.mark.parametrize("auths", [None, {"OPS"}, {"OPS", "SEC"}, ALL_AUTHS],

@@ -254,7 +254,7 @@ def test_engine_refuses_mixed_store_layout(spark, tmp_path):
     with pytest.raises(ValueError, match="mixed layout"):
         TimelyEngine(spark, store_path=store, bucket_metrics=8)
     # matching explicit layout still constructs
-    assert TimelyEngine(spark, store_path=store).bucket_metrics is None
+    assert TimelyEngine(spark, store_path=store).store.bucket_metrics is None
 
 
 def test_query_get_mini_language(spark, tmp_path):

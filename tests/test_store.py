@@ -7,9 +7,9 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from timely_spark.operators.retention import ageoff_filter, retention_delete_plan, ttl_for_metric
+from timely_spark.operators.retention import ageoff_filter, ttl_for_metric
 from timely_spark.sources.lineprotocol import parse_lines_df
-from timely_spark.sources.store import read_points, write_points
+from timely_spark.sources.store import PointStore, read_points, write_points
 
 DAY = 86_400_000
 
@@ -74,8 +74,8 @@ def test_ttl_longest_prefix(spark):
 def test_retention_delete_plan(spark, store):
     b, path = store
     now = b + 47 * 3_600_000
-    doomed = retention_delete_plan(
-        spark, path, now_ms=now, ttls={"sys.": DAY}, default_ttl_ms=30 * DAY
+    doomed = PointStore(spark, path).expired_partitions(
+        now_ms=now, ttls={"sys.": DAY}, default_ttl_ms=30 * DAY
     )
     assert all("metric=sys.cpu.user" in p for p in doomed)
     assert all(p.startswith(path) for p in doomed)
@@ -330,7 +330,6 @@ def test_metric_bucketed_layout_prunes_and_matches(spark, tmp_path_factory):
     directory bucket, so the predicate folds to a constant and lands in
     PartitionFilters; results equal the unbucketed store exactly."""
     from timely_spark.api import TimelyEngine
-    from timely_spark.sources.store import read_layout
 
     b = 1_447_767_913_000
     lines = [
@@ -346,10 +345,10 @@ def test_metric_bucketed_layout_prunes_and_matches(spark, tmp_path_factory):
     plain.put_lines(list(lines))
     bucketed.put_lines(list(lines))
 
-    assert read_layout(str(root / "bucketed")) == {"bucket_metrics": 4}
+    assert PointStore(spark, str(root / "bucketed")).layout == {"bucket_metrics": 4}
     # rediscovery from the sidecar (fresh engine, no explicit param)
     rediscovered = TimelyEngine(spark, store_path=str(root / "bucketed"))
-    assert rediscovered.bucket_metrics == 4
+    assert rediscovered.store.bucket_metrics == 4
 
     req = {
         "start": b,
@@ -373,7 +372,6 @@ def test_metric_bucketed_layout_prunes_and_matches(spark, tmp_path_factory):
         SubQuery(metric="m3", aggregator="sum"),
         b,
         b + 60_000,
-        bucket_metrics=4,
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "metric_bucket" in plan.split("PartitionFilters")[1][:200], plan
@@ -385,7 +383,6 @@ def test_retention_drops_bucketed_partitions(spark, tmp_path_factory):
     conservative cutoff applies); newer days survive."""
     import os
 
-    from timely_spark.operators.retention import retention_delete_plan
     from timely_spark.sources.lineprotocol import parse_lines_df
     from timely_spark.sources.store import write_points
 
@@ -403,8 +400,8 @@ def test_retention_drops_bucketed_partitions(spark, tmp_path_factory):
         store,
         bucket_metrics=2,
     )
-    doomed = retention_delete_plan(
-        spark, store, now_ms=now, ttls={"m0": 5 * day_ms}, default_ttl_ms=50 * day_ms
+    doomed = PointStore(spark, store).expired_partitions(
+        now_ms=now, ttls={"m0": 5 * day_ms}, default_ttl_ms=50 * day_ms
     )
     # max TTL = 50 days -> cutoff day base+150: days 10 and 100 drop
     assert doomed and all(f"dt={base + 199}" not in p for p in doomed)
@@ -418,7 +415,6 @@ def test_compaction_preserves_bucketed_layout(spark, tmp_path_factory):
     """Compaction rewrites the store directory; the layout sidecar (and
     with it bucket pruning + engine modulus discovery) must survive."""
     from timely_spark.api import TimelyEngine
-    from timely_spark.sources.store import read_layout
 
     b = 1_447_767_913_000
     store = str(tmp_path_factory.mktemp("compact_bucketed") / "m")
@@ -429,9 +425,9 @@ def test_compaction_preserves_bucketed_layout(spark, tmp_path_factory):
          "queries": [{"aggregator": "sum", "metric": "m1", "downsample": "5s-avg", "tags": {}}]}
     )
     eng.compact()
-    assert read_layout(store) == {"bucket_metrics": 2}
+    assert PointStore(spark, store).layout == {"bucket_metrics": 2}
     fresh = TimelyEngine(spark, store_path=store)
-    assert fresh.bucket_metrics == 2
+    assert fresh.store.bucket_metrics == 2
     assert fresh.query(
         {"start": b, "end": b + 60_000, "msResolution": True,
          "queries": [{"aggregator": "sum", "metric": "m1", "downsample": "5s-avg", "tags": {}}]}
@@ -774,3 +770,115 @@ def test_put_write_is_sized_to_its_batch(spark, tmp_path):
     assert len(dirs) == 4
     for d in dirs:
         assert len([n for n in os.listdir(d) if n.endswith(".parquet")]) == 1
+
+
+def _job_count(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_all_digit_metric_round_trips_through_query(spark, tmp_path):
+    """The store is read with the schema its writer produces, so a metric
+    directory named ``metric=00`` stays the string "00" (partition-type
+    inference would read it as the integer 0)."""
+    from timely_spark.api import ALL_AUTHS, TimelyEngine
+
+    b = 1_447_767_913_000
+    eng = TimelyEngine(spark, store_path=str(tmp_path / "s"))
+    eng.put_lines([f"put 00 {b + i * 1000} {float(i)} host=h1" for i in range(5)])
+    req = {"start": b, "end": b + 60_000, "msResolution": True,
+           "queries": [{"aggregator": "sum", "metric": "00", "tags": {}}]}
+    got = eng.query(req, auths=ALL_AUTHS)
+    assert [s["metric"] for s in got] == ["00"]
+    assert got[0]["dps"] == {str(b + i * 1000): float(i) for i in range(5)}
+    assert eng.suggest("0") == ["00"]
+
+
+def test_store_read_runs_no_spark_job(spark, tmp_path):
+    from timely_spark.api import TimelyEngine
+
+    b = 1_447_767_913_000
+    eng = TimelyEngine(spark, store_path=str(tmp_path / "s"), promote_tags=["host"])
+    for k in range(6):
+        eng.put_lines([f"put m{k} {b + k * DAY + i} 1.0 host=h{i}" for i in range(3)])
+    df, jobs = _job_count(spark, "store-read", eng.store.read)
+    assert jobs == 0
+    assert df.columns == ["metric", "ts", "value", "tags", "viz", "dt", "tag_host"]
+    assert df.count() == 18
+
+
+def test_bucketed_store_under_a_file_uri(spark, tmp_path):
+    """Every store filesystem operation goes through the Hadoop
+    FileSystem: a bucketed store named by a ``file://`` URI records its
+    layout, takes puts (with their meta side-writes), answers queries,
+    drops expired partitions, ages off the catalog and compacts."""
+    import time
+
+    from timely_spark.api import ALL_AUTHS, TimelyEngine
+
+    now = int(time.time() * 1000)  # queries age off against the wall clock
+    root = tmp_path / "uri"
+    uri = f"file://{root}"
+    eng = TimelyEngine(spark, store_path=uri, bucket_metrics=2, default_ttl_ms=10 * DAY)
+    eng.put_lines([f"put old.m {now - 30 * DAY + i} 1.0 host=h1" for i in range(3)])
+    for half in range(2):  # two appends: two files per live partition
+        eng.put_lines([f"put m{k} {now - (2 * i + half) * 1000} {float(i)} host=h{i % 2}"
+                       for k in range(3) for i in range(10)])
+    assert PointStore(spark, str(root)).layout == {"bucket_metrics": 2}
+    assert eng.suggest("old") == ["old.m"]
+    req = {"start": now - 60_000, "end": now, "msResolution": True,
+           "queries": [{"aggregator": "sum", "metric": "m1", "downsample": "5s-avg",
+                        "tags": {"host": "h1"}}]}
+    before = eng.query(req, auths=ALL_AUTHS)
+    assert before and before[0]["dps"]
+
+    doomed = eng.run_retention(now_ms=now)
+    assert doomed and all(p.startswith(uri) and "/dt=" in p for p in doomed)
+    assert not any(os.path.exists(p[len("file://"):]) for p in doomed)
+    assert eng.suggest("old") == []  # the catalog aged off too
+
+    def files_per_partition():
+        return sorted(
+            len([n for n in names if n.endswith(".parquet")])
+            for d, _, names in os.walk(root)
+            if os.path.basename(d).startswith("dt=")
+        )
+
+    assert max(files_per_partition()) == 2
+    eng.compact()
+    assert set(files_per_partition()) == {1}
+    assert eng.query(req, auths=ALL_AUTHS) == before
+    assert TimelyEngine(spark, store_path=uri).store.bucket_metrics == 2
+
+
+def test_store_survives_a_failed_swap(spark, tmp_path, monkeypatch):
+    """Compaction swaps its rewrite in through ``fsutil.replace_dir``: if
+    moving the rewrite into place fails, the previous contents are back
+    at the store's path and nothing is left parked."""
+    import timely_spark.sources.store as st
+    from timely_spark.fsutil import replace_dir, sidecar_delete
+
+    path = str(tmp_path / "s")
+    b = 1_447_767_913_000
+    for batch in range(2):
+        write_points(parse_lines_df(spark.createDataFrame(
+            [(f"put m {b + batch * 1000 + i} 1.0 host=h1",) for i in range(5)], ["value"]
+        )), path, bucket_metrics=2)
+    before = sorted(read_points(spark, path).collect())
+
+    def failing_swap(spark_, tmp, target):
+        sidecar_delete(spark_, tmp)  # the rewrite is gone: tmp -> target fails
+        replace_dir(spark_, tmp, target)
+
+    monkeypatch.setattr(st, "replace_dir", failing_swap)
+    with pytest.raises(Exception):
+        PointStore(spark, path).compact()
+    assert sorted(read_points(spark, path).collect()) == before
+    assert PointStore(spark, path).layout == {"bucket_metrics": 2}
+    assert not os.path.exists(path + "__old")

@@ -21,14 +21,20 @@ from pyspark.sql import functions as F
 from .model import META_SCHEMA, METRIC_SCHEMA, sql_literal
 from .operators.exclusions import apply_exclusions
 from .operators.meta import build_meta, metrics_dump, search_lookup
-from .operators.retention import ageoff_filter, retention_delete_plan
+from .operators.retention import ageoff_filter
 from .parse import parse_put_line
 from .plans.builder import query_start, run_query
 from .plans.request import QueryRequest
 from .plans.response import to_query_response
 from .sources.catalog import MetaCatalog
 from .sources.lineprotocol import parse_lines_df
-from .sources.store import DAY_MS, compact_partitions, read_points, write_points
+from .sources.store import (
+    PointStore,
+    compact_meta_with_cutoff,
+    read_points,
+    write_group_count,
+    write_points,
+)
 
 VERSION = "0.0.3"  # parity with VersionRequest.java
 
@@ -70,51 +76,21 @@ class TimelyEngine:
         series_table: str | None = None,
     ):
         self.spark = spark
-        self.store_path = store_path
-        # series-bucketed durable tier (sources/store.write_points_bucketed):
-        # when named, points() reads this saveAsTable catalog table instead
-        # of the partitioned-Parquet path, and ingest appends into it. The
-        # materialized series_key column rides into the query pipeline, so
-        # per-series window stages (rate W1) run with zero Exchange straight
-        # through engine.query() — the 100x lever of SCALE.md §2 available
-        # on the full request path, not just the operator API.
-        self.series_table = series_table
+        # the durable tier; its layout is the store's alone
+        # (sources/store.PointStore)
+        self.store = PointStore(
+            spark,
+            store_path,
+            bucket_metrics=bucket_metrics,
+            promote_tags=promote_tags,
+            series_table=series_table,
+        )
         self.meta_path = meta_path or store_path.rstrip("/") + "_meta"
         self.default_visibility = default_visibility
         self.metric_blocklist = metric_blocklist or []
         self.tag_strips = tag_strips or {}
         self.ttls = ttls or {}
         self.default_ttl_ms = default_ttl_ms
-        # hot-tag column promotion (SURVEY §4 / store.with_promoted_tags):
-        # list the deployment's high-selectivity tag keys once at engine
-        # construction; every write materializes them as pushdown columns
-        self.promote_tags = promote_tags or []
-        # metric-bucketed layout (>100k metric names, SCALE.md §1):
-        # explicit for new stores, else discovered from the layout sidecar
-        from .sources.store import read_layout
-
-        sidecar = read_layout(store_path).get("bucket_metrics")
-        if bucket_metrics is None:
-            bucket_metrics = sidecar
-        else:
-            # an explicit bucket_metrics over an existing store with a
-            # different layout would append metric_bucket=*/dt=* dirs next
-            # to metric=*/dt=* ones; Spark partition discovery then fails
-            # on conflicting partition columns and every read of the store
-            # breaks. Validate against the sidecar / existing dirs instead.
-            import glob
-            import os
-
-            existing = sidecar
-            if existing is None and glob.glob(os.path.join(store_path, "metric=*")):
-                existing = 0  # unbucketed partition dirs already present
-            if existing is not None and existing != bucket_metrics:
-                raise ValueError(
-                    f"store {store_path!r} has layout bucket_metrics="
-                    f"{existing or None}; refusing to write a mixed layout "
-                    f"with bucket_metrics={bucket_metrics}"
-                )
-        self.bucket_metrics = bucket_metrics
         self._hot = None  # optional recent-window tier (enable_hot_cache)
         # distinct viz-expression sidecar of the meta side-write: queries
         # evaluate visibility against it instead of a per-query distinct
@@ -176,37 +152,23 @@ class TimelyEngine:
         pts = pts.localCheckpoint(eager=True)
         # one stats job covers the emptiness check, the hot tier's window
         # anchor (so the cache refresh below issues zero jobs), the batch's
-        # viz expressions and its (metric, dt) write groups; a global
-        # aggregate, so none of them adds an exchange. An undercount of
-        # the groups only puts two of them in one write task.
+        # viz expressions and its write groups; a global aggregate, so none
+        # of them adds an exchange
         stats = pts.agg(
             F.count(F.lit(1)).alias("n"),
             F.max("ts").alias("hi"),
             F.collect_set("viz").alias("viz"),
-            F.approx_count_distinct(
-                F.struct("metric", (F.col("ts") / F.lit(DAY_MS)).cast("long"))
-            ).alias("groups"),
+            write_group_count().alias("groups"),
         ).collect()[0]
         n = stats["n"]
         if n:
-            if self.series_table is not None:
-                from .sources.store import write_points_bucketed
-
-                write_points_bucketed(pts, self.series_table, mode="append")
-            else:
-                write_points(
-                    pts,
-                    self.store_path,
-                    promote_tags=self.promote_tags or None,
-                    bucket_metrics=self.bucket_metrics,
-                    n_groups=stats["groups"],
-                )
+            write_points(pts, self.store, n_groups=stats["groups"])
             # meta side-write (DataStore.java:415-433)
             build_meta(pts).write.mode("append").parquet(self.meta_path)
             self._record_viz(set(stats["viz"]))
             if self._hot is not None:
                 # cache append analogue (DataStoreCache.store:635-644)
-                self._hot.refresh(self._durable_points(), now_ms=stats["hi"])
+                self._hot.refresh(read_points(self.spark, self.store), now_ms=stats["hi"])
         return n
 
     # ----------------------------------------------------------- hot tier
@@ -232,7 +194,7 @@ class TimelyEngine:
             max_unique_tag_sets=max_unique_tag_sets,
         )
         try:
-            self._hot.refresh(self._durable_points())
+            self._hot.refresh(read_points(self.spark, self.store))
         except Exception:
             pass  # empty store: first ingest will refresh
 
@@ -248,14 +210,6 @@ class TimelyEngine:
 
     # -------------------------------------------------------------- reads
 
-    def _durable_points(self) -> DataFrame:
-        """The durable tier, whichever layout backs it: the series-bucketed
-        catalog table (series_key column rides along) or the partitioned
-        Parquet path."""
-        if self.series_table is not None:
-            return self.spark.table(self.series_table)
-        return read_points(self.spark, self.store_path)
-
     def points(self, now_ms: int | None = None,
                dynamic_now: bool = False, since_ms: int | None = None) -> DataFrame:
         """Stored points with the query-time age-off guard applied
@@ -268,9 +222,9 @@ class TimelyEngine:
         hot tier on, a range wholly inside the pinned window reads the
         window alone (``HotCache.read``, plan-time tier selection)."""
         if self._hot is not None:
-            df = self._hot.read(self._durable_points, since_ms)
+            df = self._hot.read(lambda: read_points(self.spark, self.store), since_ms)
         else:
-            df = self._durable_points()
+            df = read_points(self.spark, self.store)
         if self.default_ttl_ms is not None:
             import time
 
@@ -573,13 +527,7 @@ class TimelyEngine:
         viz_exprs = sorted(known) if known is not None else None
         # the tier is picked here, from the earliest row any SubQuery reads
         since = min((query_start(q, req.start) for q in req.queries), default=req.start)
-        return run_query(
-            self.points(since_ms=since),
-            req,
-            auths=eff,
-            viz_exprs=viz_exprs,
-            bucket_metrics=self.bucket_metrics,
-        )
+        return run_query(self.points(since_ms=since), req, auths=eff, viz_exprs=viz_exprs)
 
     def _run(self, req: QueryRequest, auths, strict: bool = False) -> list[dict]:
         """One plan, one collect: the SubQuery frames fuse inside
@@ -641,61 +589,16 @@ class TimelyEngine:
     # -------------------------------------------------------- maintenance
 
     def run_retention(self, now_ms: int) -> list[str]:
-        """Drop wholly-expired point partitions AND age off the meta
-        catalog (F6/F7 as one maintenance job — MetricAgeOffIterator +
-        MetaAgeOffIterator).
-
-        Series-bucketed tier: the catalog table carries no dt partitions
-        to drop, so age-off is a filtered REWRITE of the table — the
-        documented trade of that layout (query-time ageoff_filter keeps
-        results correct between maintenance runs either way)."""
-        import shutil
-
-        from .sources.store import compact_meta_with_cutoff
-
-        if self.series_table is not None:
-            doomed = [f"table:{self.series_table} rewrite"]
-            self._rewrite_series_table(
-                ageoff_filter(
-                    self.spark.table(self.series_table),
-                    now_ms=now_ms,
-                    ttls=self.ttls,
-                    default_ttl_ms=self.default_ttl_ms or 7 * 86_400_000,
-                )
-            )
-        else:
-            doomed = retention_delete_plan(
-                self.spark,
-                self.store_path,
-                now_ms,
-                self.ttls,
-                self.default_ttl_ms or 7 * 86_400_000,
-            )
-            for p in doomed:
-                shutil.rmtree(p, ignore_errors=True)
-        compact_meta_with_cutoff(
-            self.spark,
-            self.meta_path,
-            now_ms,
-            self.ttls,
-            self.default_ttl_ms or 7 * 86_400_000,
-        )
+        """Drop wholly-expired points AND age off the meta catalog (F6/F7
+        as one maintenance job — MetricAgeOffIterator +
+        MetaAgeOffIterator); returns what the store dropped
+        (``PointStore.expire``). The query-time ageoff_filter keeps
+        results correct between maintenance runs."""
+        ttl = self.default_ttl_ms or 7 * 86_400_000
+        doomed = self.store.expire(now_ms, self.ttls, ttl)
+        compact_meta_with_cutoff(self.spark, self.meta_path, now_ms, self.ttls, ttl)
         return doomed
 
-    def _rewrite_series_table(self, rows: DataFrame) -> None:
-        """Overwrite the series-bucketed table with ``rows`` (which may
-        derive from the table itself — localCheckpoint pins the contents
-        before the overwrite truncates the source)."""
-        from .sources.store import write_points_bucketed
-
-        pinned = rows.drop("series_key").localCheckpoint(eager=True)
-        write_points_bucketed(pinned, self.series_table, mode="overwrite")
-
     def compact(self) -> None:
-        """Fold small append files (S6 maintenance). Series-bucketed tier:
-        appends stack one file set per batch inside each bucket; a rewrite
-        restores one sorted file per bucket."""
-        if self.series_table is not None:
-            self._rewrite_series_table(self.spark.table(self.series_table))
-        else:
-            compact_partitions(self.spark, self.store_path)
+        """Fold small append files (S6 maintenance, ``PointStore.compact``)."""
+        self.store.compact()

@@ -64,10 +64,11 @@ def sidecar_read_json(spark: SparkSession, path: str) -> dict | None:
 
 
 def data_file_lister(spark: SparkSession, path: str):
-    """A function that lists the qualified paths of the data files
-    directly under directory ``path``, skipping ``_``/``.`` names the way
-    Spark's file reader does (``_SUCCESS``, ``_temporary``, ``.crc``),
-    or answers ``None`` while the directory does not exist.
+    """A function that lists the qualified paths of the entries (data
+    files, partition directories) directly under directory ``path``,
+    skipping ``_``/``.`` names the way Spark's file reader does
+    (``_SUCCESS``, ``_temporary``, ``.crc``), or answers ``None`` while
+    the directory does not exist.
 
     Zero Spark jobs. The FileSystem, the path and the JVM members are
     resolved once, here, and the names cross the gateway as one
@@ -91,8 +92,43 @@ def data_file_lister(spark: SparkSession, path: str):
     return listing
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _fs_path(spark, path)
+    return fs.exists(p)
+
+
 def sidecar_delete(spark: SparkSession, path: str) -> None:
-    """Recursively delete a stale sidecar path (used by writers to
-    retire the pre-r12 one-row-parquet layout on overwrite)."""
+    """Recursively delete ``path`` (a stale sidecar, an expired store
+    partition); a missing path is a no-op."""
     fs, p = _fs_path(spark, path)
     fs.delete(p, True)
+
+
+def replace_dir(spark: SparkSession, tmp: str, path: str) -> None:
+    """Make directory ``tmp`` the new ``path`` in a recoverable order:
+    current -> ``<path>__old``, ``tmp`` -> current, delete ``__old``.
+
+    A failed second rename moves the previous contents back before it
+    raises, and a crash between the renames leaves them at ``__old``,
+    which the next swap restores before it starts; deleting first, then
+    moving, would lose the whole directory in that window."""
+    fs, cur = _fs_path(spark, path)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    old, new = hpath(path.rstrip("/") + "__old"), hpath(tmp)
+    if fs.exists(old):
+        if fs.exists(cur):
+            fs.delete(old, True)
+        elif not fs.rename(old, cur):  # a crash left the data parked
+            raise IOError(f"could not restore {old} to {path}")
+    had = fs.exists(cur)
+    if had and not fs.rename(cur, old):
+        raise IOError(f"could not move {path} aside")
+    ok = False
+    try:
+        ok = fs.rename(new, cur)
+    finally:
+        if not ok and had:
+            fs.rename(old, cur)
+    if not ok:
+        raise IOError(f"could not move {tmp} to {path}; previous contents kept")
+    fs.delete(old, True)

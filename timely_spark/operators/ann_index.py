@@ -55,27 +55,15 @@ def _compact_table(spark: SparkSession, path: str, rows_per_file: int) -> None:
     Maintenance job, never inline with queries (readers between the
     swap renames see a missing table).
 
-    Swap goes through the Hadoop FileSystem API (shared-FS safe) in a
-    RECOVERABLE order: current -> ``__old``, compacted tmp -> current,
-    delete ``__old`` — a crash mid-swap leaves the data in ``__old``
-    instead of deleted (delete-first would not)."""
+    The swap is ``fsutil.replace_dir`` (Hadoop FileSystem, recoverable
+    order)."""
+    from ..fsutil import replace_dir
+
     df = spark.read.parquet(path)
     n = max(1, -(-df.count() // rows_per_file))
     tmp = path.rstrip("/") + "__compacting"
     df.repartition(n).write.mode("overwrite").parquet(tmp)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    cur, tmp_p = hpath(path), hpath(tmp)
-    old = hpath(path.rstrip("/") + "__old")
-    fs = cur.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(old, True)  # stale leftover from a crashed prior swap
-    if not fs.rename(cur, old):
-        raise IOError(f"compact: could not move {path} aside")
-    if not fs.rename(tmp_p, cur):
-        raise IOError(
-            f"compact: swap failed; previous table preserved at {old}"
-        )
-    fs.delete(old, True)
+    replace_dir(spark, tmp, path)
 
 
 def _encode_cells_codes(

@@ -11,10 +11,11 @@ Spark split (SURVEY.md §4): age-off is two pieces —
    (the cache applies the same guard, DataStoreCache.java:747-750). A pure
    Column predicate; with the store partitioned by day it prunes whole
    partitions.
-2. ``retention_delete_plan`` — the MAINTENANCE job: enumerate the
-   partition directories wholly older than the TTL and drop them (the
-   Parquet analogue of seek-skipping + TieredCompactionStrategy's
-   drop-RFiles-wholesale, TieredCompactionStrategy.java:25-156).
+2. the MAINTENANCE job, ``sources/store.PointStore.expire``: drop the
+   partition directories wholly older than the TTL (the Parquet analogue
+   of seek-skipping + TieredCompactionStrategy's drop-RFiles-wholesale,
+   TieredCompactionStrategy.java:25-156). Only the store knows its
+   layout; this module holds the TTL expressions both pieces use.
 """
 
 from __future__ import annotations
@@ -56,52 +57,3 @@ def ageoff_filter(
     now = now_ms if isinstance(now_ms, Column) else F.lit(now_ms)
     ttl = ttl_for_metric("metric", ttls or {}, default_ttl_ms)
     return df.filter(F.col(ts_col) >= (now - ttl))
-
-
-def retention_delete_plan(
-    spark, store_path: str, now_ms: int, ttls: dict[str, int], default_ttl_ms: int
-) -> list[str]:
-    """Enumerate store partition directories (layout: metric=<m>/dt=<day>)
-    that are wholly expired. Returns the paths; the caller deletes them.
-    Partition-drop is metadata-only — no row-level rewrite at 100 TB.
-    """
-    import math
-    import os
-
-    doomed: list[str] = []
-    if not os.path.isdir(store_path):
-        return doomed
-    for bdir in sorted(os.listdir(store_path)):
-        # metric-bucketed layout: a bucket directory mixes metrics, so it
-        # may only drop once past EVERY metric's TTL (conservative =
-        # max over configured TTLs). The query-time ageoff_filter hides
-        # shorter-TTL metrics in the meantime; per-metric reclamation
-        # inside a bucket would be a row-level rewrite, deliberately not
-        # done at rest (compaction can fold it in if storage pressure
-        # demands).
-        if not bdir.startswith("metric_bucket="):
-            continue
-        ttl = max([default_ttl_ms, *ttls.values()]) if ttls else default_ttl_ms
-        cutoff_day = (now_ms - ttl) // 86_400_000
-        for ddir in sorted(os.listdir(os.path.join(store_path, bdir))):
-            if not ddir.startswith("dt="):
-                continue
-            if int(ddir.split("=", 1)[1]) < cutoff_day:
-                doomed.append(os.path.join(store_path, bdir, ddir))
-    for mdir in sorted(os.listdir(store_path)):
-        if not mdir.startswith("metric="):
-            continue
-        metric = mdir.split("=", 1)[1]
-        ttl = default_ttl_ms
-        best = -1
-        for prefix, t in ttls.items():
-            if metric.startswith(prefix) and len(prefix) > best:
-                best, ttl = len(prefix), t
-        cutoff_day = (now_ms - ttl) // 86_400_000
-        for ddir in sorted(os.listdir(os.path.join(store_path, mdir))):
-            if not ddir.startswith("dt="):
-                continue
-            day = int(ddir.split("=", 1)[1])
-            if day < cutoff_day:  # whole day strictly older than the cutoff day
-                doomed.append(os.path.join(store_path, mdir, ddir))
-    return doomed

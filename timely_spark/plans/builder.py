@@ -4,8 +4,8 @@ Pipeline per SubQuery, mirroring the reference's iterator stack order
 (DataStore.java:711-745: TagFilter(100) -> Rate(499) -> Downsample(500)
 -> Aggregation(501), then the coordinator merge at :748-779):
 
-    scan -> one SQL filter: metric + time + dt + metric_bucket + tag
-            + visibility predicates
+    scan -> one SQL filter: the store's scan predicates (metric, time,
+            partition pruning) + tag + visibility predicates
          -> [rate]
          -> downsample (per-series buckets)
          -> cross-series combine on the projected tag keys
@@ -26,7 +26,8 @@ shared ``points`` frame, so only the first read is a py4j call). All
 predicates are plain comparisons, so Catalyst pushes them into the
 Parquet scan (the analogue of the reference's hour-range planning
 DataStore.getQueryRanges:997-1039 + column-family fetch :936-947 —
-with a time/metric-partitioned store these become partition pruning).
+``sources/store.scan_predicates`` adds the partition predicates of the
+store's layout, so they become directory pruning).
 
 Semantics notes:
 - Tag values that are not ``^\\w+$`` are regexes (DataStore.java:860-862),
@@ -57,9 +58,8 @@ from ..functions.time import query_aligned_bucket_sql
 from ..operators.downsample import combine_series, downsample, group_stage
 from ..operators.rate import rate
 from ..parse import is_tag_regex
+from ..sources.store import scan_predicates
 from .request import QueryRequest, SubQuery
-
-DAY_MS = 86_400_000
 
 
 def _decode_tsuid(t: str) -> str:
@@ -116,19 +116,14 @@ def build_subquery(
     end_ms: int,
     auths: set[str] | None = None,
     viz_exprs: list[str] | None = None,
-    bucket_metrics: int | None = None,
 ) -> DataFrame:
-    """Returns (metric, tags, bucket_ts, value) for one SubQuery.
-
-    ``bucket_metrics``: the store's metric-bucket modulus (layout
-    sidecar, sources/store.read_layout) — lets the metric predicate
-    reconstruct its directory bucket so partition pruning survives the
-    bucketed layout a >100k-metric deployment needs."""
+    """Returns (metric, tags, bucket_ts, value) for one SubQuery."""
     cols = points.columns
     spec = q.downsample_spec()
     start_ms = query_start(q, start_ms)
     series_key = "series_key" if "series_key" in cols else None
 
+    preds = []
     if q.tsuids:
         # tsuid SubQuery (GET ?tsuid=agg:id,.. — QueryRequest.java:615-627):
         # a tsuid here IS the canonical series_id (metric + sorted k=v tag
@@ -141,22 +136,8 @@ def build_subquery(
         # column, so the IN-list reaches PushedFilters and the
         # (series_key, ts)-sorted row groups prune.
         ids = ", ".join(sql_literal(_decode_tsuid(t)) for t in q.tsuids)
-        preds = [f"{series_key or series_id_sql()} IN ({ids})"]
-    else:
-        preds = [f"metric = {sql_literal(q.metric)}"]
-        if bucket_metrics and "metric_bucket" in cols:
-            # directory pruning under the bucketed layout: the bucket id
-            # is a pure function of the metric literal, so this predicate
-            # folds to a constant and lands in PartitionFilters
-            preds.append(
-                f"metric_bucket = pmod(xxhash64({sql_literal(q.metric)}), {bucket_metrics})"
-            )
-    preds.append(f"ts >= {start_ms} AND ts <= {end_ms}")
-    if "dt" in cols:
-        # partition pruning: dt = ts div 1d is a store partition column
-        # (sources/store.py), so this predicate prunes whole directories —
-        # the F1 hour-range-scan analogue (DataStore.java:997-1039)
-        preds.append(f"dt >= {start_ms // DAY_MS} AND dt <= {end_ms // DAY_MS}")
+        preds.append(f"{series_key or series_id_sql()} IN ({ids})")
+    preds += scan_predicates(points.schema, None if q.tsuids else q.metric, start_ms, end_ms)
     preds += tag_predicates_sql(q.tags, cols)
     # non-grouping filters (Filter.groupBy=false): predicate only — the
     # tag key does NOT enter the projected tag set / series identity
@@ -173,8 +154,8 @@ def build_subquery(
     df = points.filter(" AND ".join(f"({p})" for p in preds))
     if viz_scan:
         df = viz_filter(df, auths, known_exprs=viz_exprs)
-    # layout columns (dt, metric_bucket, promoted tag_*) were filtered on
-    # above and are never projected
+    # the store's layout columns were filtered on above and are never
+    # projected
     df = df.selectExpr("metric", "tags", "ts", "value", *([series_key] if series_key else []))
 
     if q.rate:
@@ -222,7 +203,6 @@ def run_query(
     request: QueryRequest,
     auths: set[str] | None = None,
     viz_exprs: list[str] | None = None,
-    bucket_metrics: int | None = None,
 ) -> list[DataFrame]:
     """One result DataFrame per SubQuery over the same ``points`` (read
     once per request); ``plans/response.to_query_response`` fuses them
@@ -235,7 +215,6 @@ def run_query(
             request.end,
             auths=auths,
             viz_exprs=viz_exprs,
-            bucket_metrics=bucket_metrics,
         )
         for q in request.queries
     ]

@@ -1,21 +1,33 @@
-"""The Parquet point store: partition layout, writers, compaction.
+"""The durable point tier: ``PointStore`` owns its layout.
 
 Replaces the reference's Accumulo metrics-table layout (hour-rounded row
 keys + per-tag cell duplication, MetricAdapter.toMutation,
-common/.../accumulo/MetricAdapter.java:87-110). In a columnar store the
-N-cells-per-tag write amplification disappears entirely — one row per
-point, filter on ``tags[k]`` directly (SURVEY.md §1.4).
+common/.../accumulo/MetricAdapter.java:87-110), behind one class as the
+reference's is behind ``DataStore`` (store() :385-510, range planning
+:997-1039, age-off :370-383). One row per point: the N-cells-per-tag
+write amplification disappears (SURVEY.md §1.4).
 
-Layout: ``partitionBy(metric, dt)`` where dt = epoch day, with
-``sortWithinPartitions(ts)`` so Parquet gets sorted column chunks (row
-groups then carry tight ts min/max stats -> range predicates prune at the
-row-group level, the columnar analogue of Accumulo's hour-range seek).
+This module is the only code that knows which of three layouts a store
+uses: partitioned Parquet ``metric=<m>/dt=<day>`` (dt = epoch day, rows
+sorted by ts within each file so row-group ts stats prune like
+Accumulo's hour-range seek); metric-bucketed Parquet
+``metric_bucket=<b>/dt=<day>`` (``bucket_metrics``; :func:`bucket_sql`
+is the one hash the writer and the pruning predicate share); or the
+series-bucketed catalog table (``series_table``,
+:func:`write_points_bucketed`). Parquet stores may also promote tag keys
+to ``tag_<k>`` columns (:func:`with_promoted_tags`). A layout is explicit
+when a store is created, else read from its ``_layout.json`` sidecar,
+and a bucketing that differs from the one on disk is refused (a mixed
+layout breaks partition discovery for every read). Reads pass the
+writer's schema (no inference job; an all-digit metric stays a string);
+:func:`scan_predicates` renders a (metric, start, end) as the predicates
+that prune the layout's directories. All filesystem work goes through
+the Hadoop FileSystem (``fsutil``): ``file://``, ``hdfs://``, ``s3a://``.
 
 Scale notes (100 TB / 1000 executors):
 - day-level directories keep the partition count ~O(metrics x days); a
   deployment whose metric count pushes that past ~5k directories should
-  bucket the metric dimension (``metric_bucket = hash(metric) % N``) —
-  provided via ``bucket_metrics``.
+  bucket the metric dimension (``bucket_metrics``).
 - **metric_bucket sizing rule (MEASURED, r10 x100 store probe —
   SCALE.md round-10 table):** bucket when ``metrics x retention_days``
   exceeds ~5 000 directories, and pick
@@ -24,12 +36,11 @@ Scale notes (100 TB / 1000 executors):
   the sf0.1 backlog: the flat layout's 15 000 dirs cost 2.7x on ingest
   and 4.4-4.7x on engine queries (listing + footer reads dominate);
   ``bucket_metrics=64`` (1 920 dirs) restored both to within noise of
-  the small-metric-set store, because ``_layout.json`` lets the query
-  side prune ``metric_bucket = hash(metric) % N`` + dt exactly like
-  metric-directory pruning. The SERIES dimension needs no knob: 100x
-  rows per partition left both query tiers flat (sortWithinPartitions
-  keeps row-group ts stats tight — the seek reads the same row groups
-  it read at x1).
+  the small-metric-set store, because the bucket predicate prunes
+  ``metric_bucket`` + dt exactly like metric-directory pruning. The
+  SERIES dimension needs no knob: 100x rows per partition left both
+  query tiers flat (sortWithinPartitions keeps row-group ts stats
+  tight — the seek reads the same row groups it read at x1).
 - compaction (the TieredCompactionStrategy analogue,
   server/.../store/compaction/TieredCompactionStrategy.java:25-156) is a
   per-partition rewrite targeting ~512 MB files.
@@ -38,11 +49,32 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import os
+import re
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..fsutil import (
+    data_file_lister,
+    path_exists,
+    replace_dir,
+    sidecar_delete,
+    sidecar_read_json,
+    sidecar_write_json,
+)
+from ..model import METRIC_SCHEMA, sql_literal
+from ..operators.retention import ageoff_filter, ttl_for_metric
 
 DAY_MS = 86_400_000
+
+
+def bucket_sql(metric: str, n: int) -> str:
+    """The metric-bucket hash over SQL expression ``metric`` (a column
+    name or a quoted literal): the writer's partition value and the
+    constant the pruning predicate compares it with."""
+    return f"pmod(xxhash64({metric}), {n})"
 
 
 def with_promoted_tags(points: DataFrame, promote_tags: list[str]) -> DataFrame:
@@ -59,8 +91,6 @@ def with_promoted_tags(points: DataFrame, promote_tags: list[str]) -> DataFrame:
     promoted column when present; the ``tags`` map stays authoritative
     for projection, so promotion is purely a layout optimization.
     """
-    import re
-
     for k in promote_tags:
         if not re.fullmatch(r"\w+", k):
             raise ValueError(f"cannot promote non-identifier tag key {k!r}")
@@ -68,115 +98,265 @@ def with_promoted_tags(points: DataFrame, promote_tags: list[str]) -> DataFrame:
     return points
 
 
-def with_partition_cols(points: DataFrame, bucket_metrics: int | None = None) -> DataFrame:
-    df = points.withColumn("dt", (F.col("ts") / F.lit(DAY_MS)).cast("long"))
-    if bucket_metrics:
-        df = df.withColumn(
-            "metric_bucket", F.pmod(F.xxhash64("metric"), F.lit(bucket_metrics))
+def write_group_count() -> Column:
+    """Aggregate column: the approximate number of (metric, day) groups
+    in a batch, the ``n_groups`` an append may be given. An undercount
+    only puts two groups in one write task."""
+    return F.approx_count_distinct(
+        F.struct("metric", (F.col("ts") / F.lit(DAY_MS)).cast("long"))
+    )
+
+
+def scan_predicates(
+    schema: T.StructType, metric: str | None, start_ms: int, end_ms: int
+) -> list[str]:
+    """SQL predicates selecting ``metric`` (skipped when None) over
+    ``[start_ms, end_ms]`` from a frame :meth:`PointStore.read` returned
+    (or one derived from it, such as the hot tier), with the partition
+    predicates its layout prunes directories on — the analogue of
+    DataStore.getQueryRanges:997-1039. The bucket id is a pure function
+    of the metric literal, so its predicate folds to a constant and
+    lands in PartitionFilters."""
+    names = schema.names
+    preds = []
+    if metric is not None:
+        preds.append(f"metric = {sql_literal(metric)}")
+        # the modulus rides on the metric_bucket column (PointStore.read)
+        n = schema["metric_bucket"].metadata.get("bucket_metrics") if "metric_bucket" in names else None
+        if n:
+            preds.append(f"metric_bucket = {bucket_sql(sql_literal(metric), n)}")
+    preds.append(f"ts >= {start_ms} AND ts <= {end_ms}")
+    if "dt" in names:
+        preds.append(f"dt >= {start_ms // DAY_MS} AND dt <= {end_ms // DAY_MS}")
+    return preds
+
+
+class PointStore:
+    """One durable tier: read, append, expire, compact and rewrite, for
+    whichever layout backs it.
+
+    ``bucket_metrics`` / ``promote_tags``: the Parquet layout of a new
+    store; ``None`` adopts what the store's sidecar records. A
+    ``bucket_metrics`` that differs from the bucketing on disk raises.
+    ``series_table``: keep the points in that series-bucketed catalog
+    table instead of under ``path``."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        bucket_metrics: int | None = None,
+        promote_tags: list[str] | None = None,
+        series_table: str | None = None,
+    ):
+        self.spark = spark
+        self.path = path
+        self.series_table = series_table
+        self._sidecar = path.rstrip("/") + "/_layout.json"
+        self._recorded = {} if series_table else sidecar_read_json(spark, self._sidecar) or {}
+        on_disk = self._recorded.get("bucket_metrics")
+        if bucket_metrics is not None and on_disk is None and any(
+            n.startswith("metric=") for n in _names(spark, path)
+        ):
+            on_disk = 0  # unbucketed partition dirs already present
+        if bucket_metrics is not None and on_disk is not None and on_disk != bucket_metrics:
+            raise ValueError(
+                f"store {path!r} has layout bucket_metrics={on_disk or None}; "
+                f"refusing to write a mixed layout with bucket_metrics={bucket_metrics}"
+            )
+        self.bucket_metrics = bucket_metrics or self._recorded.get("bucket_metrics")
+        self.promote_tags = list(promote_tags or self._recorded.get("promote_tags") or [])
+
+    @property
+    def layout(self) -> dict:
+        """What the ``_layout.json`` sidecar records ({} for a flat
+        unpromoted store)."""
+        out: dict = {}
+        if self.bucket_metrics:
+            out["bucket_metrics"] = self.bucket_metrics
+        if self.promote_tags:
+            out["promote_tags"] = list(self.promote_tags)
+        return out
+
+    # -------------------------------------------------------------- read
+
+    def schema(self) -> T.StructType:
+        """The schema the Parquet writer produces: the point model, the
+        promoted tag columns, and the partition columns with the types
+        partition inference gives them (ints), except ``metric``, which
+        stays a string."""
+        fields = list(METRIC_SCHEMA.fields)
+        fields += [T.StructField(f"tag_{k}", T.StringType()) for k in self.promote_tags]
+        if self.bucket_metrics:
+            fields.append(T.StructField("metric_bucket", T.IntegerType()))
+        fields.append(T.StructField("dt", T.IntegerType()))
+        return T.StructType(fields)
+
+    def read(self) -> DataFrame:
+        """The store in point-model shape. The partition and promoted
+        columns ride along for the query builder's predicates (which drop
+        them before projection); ``metric_bucket`` carries the modulus
+        that :func:`scan_predicates` needs."""
+        if self.series_table is not None:
+            return self.spark.table(self.series_table)
+        df = self.spark.read.schema(self.schema()).parquet(self.path)
+        cols = ["metric", "ts", "value", "tags", "viz", "dt"]
+        if self.bucket_metrics:
+            cols.append(
+                F.col("metric_bucket").alias(
+                    "metric_bucket", metadata={"bucket_metrics": self.bucket_metrics}
+                )
+            )
+        return df.select(*cols, *[f"tag_{k}" for k in self.promote_tags])
+
+    # ------------------------------------------------------------- write
+
+    def append(self, points: DataFrame, n_groups: int | None = None, mode: str = "append") -> None:
+        """Durable write (the BatchWriter-sink analogue,
+        DataStore.java:385-510).
+
+        ``n_groups``: the batch's (metric, dt) group count when the
+        caller already knows it (:func:`write_group_count`); the write
+        then runs at most that many tasks instead of leaving
+        shuffle-partition tasks with nothing to write."""
+        if self.series_table is not None:
+            write_points_bucketed(points, self.series_table, mode=mode)
+            return
+        self._write(points, self.path, mode, n_groups)
+        if self.layout and (mode != "append" or self._recorded != self.layout):
+            sidecar_write_json(self.spark, self._sidecar, self.layout)
+            self._recorded = self.layout
+
+    def _write(self, points: DataFrame, path: str, mode: str,
+               n_groups: int | None = None, max_records: int | None = None) -> None:
+        df = with_promoted_tags(points, self.promote_tags).withColumn(
+            "dt", (F.col("ts") / F.lit(DAY_MS)).cast("long")
         )
-    return df
+        part_cols = ["metric", "dt"]
+        if self.bucket_metrics:
+            df = df.withColumn("metric_bucket", F.expr(bucket_sql("metric", self.bucket_metrics)))
+            part_cols[0] = "metric_bucket"
+        # r13 (measured, plans/r13/write_points_writeplan_before.txt):
+        # - an EXPLICIT partition count, the session's shuffle.partitions
+        #   capped by n_groups: AQE would coalesce the keyed repartition
+        #   by bytes, but a dynamic-partition write costs per file per
+        #   task (sf0.1: 150 dirs in 2 tasks took 6.3 s, 2.5 s uncoalesced);
+        #   each group still lands whole in one task, one file per dir.
+        # - a partition-col-PREFIXED sort: it satisfies the writer's
+        #   required ordering, so V1Writes adds no sort of its own and
+        #   EliminateSorts cannot drop ours; within-file ts order is then
+        #   guaranteed by construction (dt is monotone in ts).
+        sort_cols = part_cols + [c for c in ("metric", "ts") if c not in part_cols]
+        n_write = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        if n_groups:
+            n_write = min(n_write, n_groups)
+        writer = (
+            df.repartition(n_write, *[F.col(c) for c in part_cols])
+            .sortWithinPartitions(*sort_cols)
+            .write.mode(mode)
+            .partitionBy(*part_cols)
+        )
+        if max_records:
+            writer = writer.option("maxRecordsPerFile", max_records)
+        writer.parquet(path)
+
+    # ------------------------------------------------------- maintenance
+
+    def rewrite(self, rows: DataFrame) -> None:
+        """Replace the store's contents with ``rows``, which may derive
+        from the store itself. Parquet layouts write a sibling directory
+        and swap it in (``fsutil.replace_dir``); the series table pins
+        ``rows`` (localCheckpoint) before the overwrite truncates its
+        source."""
+        if self.series_table is not None:
+            pinned = rows.drop("series_key").localCheckpoint(eager=True)
+            write_points_bucketed(pinned, self.series_table, mode="overwrite")
+            return
+        tmp = self.path.rstrip("/") + "__compacting"
+        self._write(rows, tmp, "overwrite", max_records=4_000_000)
+        if self.layout:
+            sidecar_write_json(self.spark, tmp.rstrip("/") + "/_layout.json", self.layout)
+        replace_dir(self.spark, tmp, self.path)
+
+    def compact(self) -> None:
+        """Small-file compaction (S6 maintenance, the metadata-level
+        analogue of MetricCompactionStrategy.java:1-187): one sorted file
+        set per partition, or per bucket of the series table. Run as a
+        maintenance job, never inline with queries."""
+        self.rewrite(self.read())
+
+    def expired_partitions(self, now_ms: int, ttls: dict[str, int], default_ttl_ms: int) -> list[str]:
+        """The partition directories wholly older than their TTL, as
+        ``<path>/<partition>/dt=<day>``. Dropping them is metadata-only —
+        no row-level rewrite at 100 TB. A ``metric_bucket`` directory
+        mixes metrics, so it drops only past EVERY metric's TTL (the max
+        over the configured TTLs); the query-time age-off guard hides
+        shorter-TTL metrics in the meantime."""
+        root = self.path.rstrip("/")
+        doomed: list[str] = []
+        for top in sorted(_names(self.spark, root)):
+            key, _, value = top.partition("=")
+            if key == "metric_bucket":
+                ttl = max([default_ttl_ms, *ttls.values()])
+            elif key == "metric":
+                # longest matching prefix wins (MetricAgeOffIterator.java:78-120)
+                metric = unquote(value)
+                hits = [p for p in ttls if metric.startswith(p)]
+                ttl = ttls[max(hits, key=len)] if hits else default_ttl_ms
+            else:
+                continue
+            cutoff_day = (now_ms - ttl) // DAY_MS
+            for day in sorted(_names(self.spark, f"{root}/{top}")):
+                if day.startswith("dt=") and int(day[3:]) < cutoff_day:
+                    doomed.append(f"{root}/{top}/{day}")
+        return doomed
+
+    def expire(self, now_ms: int, ttls: dict[str, int], default_ttl_ms: int) -> list[str]:
+        """Retention (MetricAgeOffIterator): drop the expired partition
+        directories and return them. The series table has no day
+        partitions to drop, so its age-off is a filtered rewrite — the
+        documented trade of that layout."""
+        if self.series_table is not None:
+            self.rewrite(ageoff_filter(self.read(), now_ms, ttls, default_ttl_ms))
+            return [f"table:{self.series_table} rewrite"]
+        doomed = self.expired_partitions(now_ms, ttls, default_ttl_ms)
+        for p in doomed:
+            sidecar_delete(self.spark, p)
+        return doomed
+
+
+def _names(spark: SparkSession, path: str) -> list[str]:
+    """The entry names directly under ``path`` ([] when missing)."""
+    return [p.rsplit("/", 1)[-1] for p in data_file_lister(spark, path)() or ()]
 
 
 def write_points(
     points: DataFrame,
-    path: str,
+    path: str | PointStore,
     mode: str = "append",
     bucket_metrics: int | None = None,
     promote_tags: list[str] | None = None,
     n_groups: int | None = None,
 ) -> None:
-    """Durable write (the BatchWriter-sink analogue, DataStore.java:385-510).
-
-    ``promote_tags``: also write each listed tag key as a pushdown-able
-    top-level column (see ``with_promoted_tags``). Use the same list for
-    every append — a mixed store still reads (missing values null) but
-    unpromoted files lose the pushdown.
-
-    ``n_groups``: the batch's (metric, dt) group count when the caller
-    already knows it (``TimelyEngine._store`` counts it in its stats
-    job); the write then runs at most that many tasks instead of leaving
-    shuffle-partition tasks with nothing to write.
-    """
-    if promote_tags:
-        points = with_promoted_tags(points, promote_tags)
-    df = with_partition_cols(points, bucket_metrics)
-    part_cols = (["metric_bucket"] if bucket_metrics else ["metric"]) + ["dt"]
-    # r13 (guide §6/§2.4, measured): two changes to the write plan, same
-    # store layout byte-for-byte (one file per (metric, dt) dir, ts-
-    # sorted row groups):
-    # - EXPLICIT shuffle-partition count. A keyed repartition without a
-    #   count is AQE-coalesced to byte-right-sized partitions — correct
-    #   for shuffles, wrong for a dynamic-partition WRITE, whose cost
-    #   driver is files-per-task (each task opens/closes/commits its
-    #   directories sequentially). At sf0.1 AQE coalesced 150 dirs into
-    #   2 tasks and the write ran near-serial: 6.3 s vs 2.5 s with the
-    #   session's configured parallelism (A/B, best-of-3). The count is
-    #   the session's shuffle.partitions — cluster-sized, not a local
-    #   constant; each (metric, dt) group still lands whole in one task,
-    #   so the one-file-per-directory layout is unchanged.
-    # - Partition-col-PREFIXED sort. sortWithinPartitions(metric, ts)
-    #   did not satisfy the writer's required ordering (the partition
-    #   columns), so V1Writes added its own sort by (metric, dt) above
-    #   it — and EliminateSorts then REMOVED ours as redundant: the old
-    #   executed plan's only sort was [metric, dt] (committed evidence,
-    #   plans/r13/write_points_writeplan_before.txt), i.e. the tight-
-    #   ts-row-group contract held only through local-mode fetch-order
-    #   luck, not by construction. Prefixing the partition cols makes
-    #   our sort satisfy the writer's requirement, so it SURVIVES as
-    #   the plan's one sort and within-file ts order is guaranteed —
-    #   dt = floor(ts/day) is monotone in ts within a metric, so the
-    #   row order equals the intended (metric, ts) order. A/B: parity
-    #   (2.51 vs 2.71 s, within noise).
-    sort_cols = part_cols + [c for c in ("metric", "ts") if c not in part_cols]
-    n_write = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if n_groups:
-        n_write = min(n_write, n_groups)
-    (
-        df.repartition(n_write, *[F.col(c) for c in part_cols])
-        .sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
-        .partitionBy(*part_cols)
-        .parquet(path)
-    )
-    if bucket_metrics:
-        # layout sidecar: queries need the modulus to reconstruct a
-        # metric's bucket for directory pruning (underscore files are
-        # invisible to Spark's parquet reader)
-        import json
-        import os
-
-        with open(os.path.join(path, "_layout.json"), "w") as f:
-            json.dump({"bucket_metrics": bucket_metrics}, f)
+    """Write ``points`` to the store at ``path`` (or to the given
+    :class:`PointStore`, whose layout then governs). A path opens the
+    store with ``bucket_metrics`` / ``promote_tags`` as its layout."""
+    if not isinstance(path, PointStore):
+        path = PointStore(points.sparkSession, path, bucket_metrics, promote_tags)
+    path.append(points, n_groups=n_groups, mode=mode)
 
 
-def read_layout(path: str) -> dict:
-    """The store's layout sidecar ({} for unbucketed stores)."""
-    import json
-    import os
-
-    p = os.path.join(path, "_layout.json")
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {}
+def read_points(spark: SparkSession, path: str | PointStore) -> DataFrame:
+    """Read the store at ``path`` (or the given :class:`PointStore`) back
+    in point-model shape (:meth:`PointStore.read`)."""
+    if not isinstance(path, PointStore):
+        path = PointStore(spark, path)
+    return path.read()
 
 
-def read_points(spark: SparkSession, path: str) -> DataFrame:
-    """Read the store back in point-model shape. The ``dt`` partition
-    column rides along so the query builder can emit directory-level
-    pruning predicates (the analogue of Accumulo hour-range planning,
-    DataStore.getQueryRanges:997-1039); it is dropped from query output
-    by the projection stages."""
-    df = spark.read.parquet(path)
-    cols = [
-        c
-        for c in ["metric", "ts", "value", "tags", "viz", "dt", "metric_bucket"]
-        if c in df.columns
-    ]
-    # promoted tag columns ride along like dt: the builder filters on them
-    # (scan pushdown) and drops them before projection
-    cols += [c for c in df.columns if c.startswith("tag_") and c not in cols]
-    return df.select(*cols)
+def compact_partitions(spark: SparkSession, path: str) -> None:
+    """Compact the Parquet store at ``path`` (:meth:`PointStore.compact`)."""
+    PointStore(spark, path).compact()
 
 
 def _clear_stale_table_location(spark: SparkSession, table: str) -> None:
@@ -242,35 +422,6 @@ def write_points_bucketed(
     )
 
 
-def write_points_stream(
-    points: DataFrame,
-    path: str,
-    checkpoint: str,
-    meta_path: str | None = None,
-    trigger_seconds: int = 5,
-):
-    """Streaming ingest sink: partitioned Parquet + per-batch meta upsert.
-
-    The 5 s trigger mirrors the reference's BatchWriter max-latency
-    (WriteProperties.java:11); exactly-once comes from the checkpoint
-    rather than BatchWriter recreate-on-reject retry (DataStore.java:462-505).
-    """
-    from ..operators.meta import build_meta
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_points(batch_df, path)
-        if meta_path is not None:
-            # meta side-write (DataStore.java:415-433): tiny upsert per batch
-            build_meta(batch_df).write.mode("append").parquet(meta_path)
-
-    return (
-        points.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-
-
 def compact_meta(spark: SparkSession, meta_path: str) -> DataFrame:
     """Fold appended meta deltas to one row per (metric, tag_key, tag_value)."""
     m = spark.read.parquet(meta_path)
@@ -292,53 +443,12 @@ def compact_meta_with_cutoff(
     rewrite is fine at any data scale — the catalog is O(distinct tag
     values), not O(points). Run from the retention maintenance job.
     """
-    import os
-    import shutil
-
-    if not os.path.isdir(meta_path):
+    if not path_exists(spark, meta_path):
         return
-    from ..operators.retention import ttl_for_metric
-
     ttl = ttl_for_metric("metric", ttls or {}, default_ttl_ms)
     kept = compact_meta(spark, meta_path).filter(
         F.col("last_seen") >= F.lit(now_ms) - ttl
     )
     tmp = meta_path.rstrip("/") + "__compacting"
     kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(meta_path)
-    shutil.move(tmp, meta_path)
-
-
-def compact_partitions(
-    spark: SparkSession, path: str, target_file_mb: int = 512
-) -> None:
-    """Small-file compaction: rewrite each partition into ~target-size files.
-
-    Metadata-level analogue of MetricCompactionStrategy.java:1-187; run as a
-    maintenance job, never inline with queries.
-    """
-    df = spark.read.parquet(path)
-    part_cols = [c for c in ("metric", "metric_bucket", "dt") if c in df.columns]
-    tmp = path.rstrip("/") + "__compacting"
-    # same write-plan shape as write_points (r13): explicit parallelism
-    # (files-per-task is the cost driver, not bytes-per-task) and a
-    # partition-col-prefixed sort so the writer adds no second sort
-    n_write = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    (
-        df.repartition(n_write, *[F.col(c) for c in part_cols])
-        .sortWithinPartitions(*part_cols, "ts")
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .option("maxRecordsPerFile", 4_000_000)
-        .parquet(tmp)
-    )
-    import os
-    import shutil
-
-    # the layout sidecar must survive the rewrite (bucketed-store
-    # pruning and engine modulus discovery read it)
-    sidecar = os.path.join(path, "_layout.json")
-    if os.path.exists(sidecar):
-        shutil.copy(sidecar, os.path.join(tmp, "_layout.json"))
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+    replace_dir(spark, tmp, meta_path)

@@ -13,9 +13,9 @@ partitioned-Parquet append) every ``flush_seconds`` or
 ``flush_lines``, whichever first. The socket accept loop is I/O-bound
 plumbing; all real work happens in the flushed Spark batch. For
 sustained firehose ingest the scale path remains the Structured
-Streaming socket/file source (``sources/lineprotocol.put_socket_stream``
-/ ``store.write_points_stream``) — this facade is the wire-protocol
-compatibility seam, like the reference's own put socket.
+Streaming socket/file source (``sources/lineprotocol.put_socket_stream``)
+— this facade is the wire-protocol compatibility seam, like the
+reference's own put socket.
 """
 
 from __future__ import annotations

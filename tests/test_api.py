@@ -942,6 +942,33 @@ def test_hot_cache_archive_restore(spark, tmp_path_factory):
     with _pytest.raises(ValueError, match="refresh"):
         empty.archive(str(root / "never"))
 
+    # a bucketed store: the restored window keeps the store's schema, the
+    # metric_bucket modulus included (Spark keeps field metadata in the
+    # Parquet footer), and the segment a put appends matches it
+    bstore = str(root / "bucketed")
+    eng = TimelyEngine(spark, store_path=bstore, bucket_metrics=4)
+    eng.put_lines(lines)
+    eng.enable_hot_cache(window_ms=10_000)
+    eng._hot.archive(str(root / "barch"))
+    restored = HotCache(spark)
+    restored.restore(str(root / "barch"))
+    eng.attach_hot_cache(restored)
+    try:
+        assert restored._window.frame.schema == eng.store.read().schema
+        assert restored._window.frame.schema["metric_bucket"].metadata == {"bucket_metrics": 4}
+        eng.put_lines([f"put m {b + 30_000} 30.0 host=h0"])
+        assert restored._window.frame.schema == eng.store.read().schema
+        q = {
+            "start": b + 25_000, "end": b + 31_000, "msResolution": True,
+            "queries": [{"aggregator": "sum", "metric": "m", "tags": {"host": "*"}}],
+        }
+        got = eng.query(q)
+        assert got == TimelyEngine(spark, store_path=bstore).query(q)
+        by_host = {s["tags"]["host"]: s["dps"] for s in got}
+        assert by_host["h0"] == {str(b + 27_000): 27.0, str(b + 30_000): 30.0}, got
+    finally:
+        restored.close()
+
 
 def test_hot_cache_restore_carries_admission_budget(spark, tmp_path_factory):
     """ADVICE r11 (medium): restore() must carry max_unique_tag_sets —

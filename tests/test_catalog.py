@@ -3,12 +3,13 @@
 ``TimelyEngine.suggest`` and the visibility lookups read the catalog;
 ``operators.meta.suggest`` over ``TimelyEngine.meta()`` is the Spark
 reference it must equal with no tolerance. Also pinned: the job counts
-(no job without new files, one job for new files), freshness across two
-engines on one store, and concurrent puts and suggests over HTTP against
-a serial replay.
+(no job without new files or after this engine's own put, one job for
+files another engine wrote), freshness across two engines on one store,
+and concurrent puts and suggests over HTTP against a serial replay.
 """
 
 import json
+import os
 import sys
 import threading
 import urllib.parse
@@ -117,10 +118,42 @@ def test_reads_run_a_job_only_for_new_files(spark, tmp_path):
     out, jobs = _jobs(spark, "catalog-warm", lambda: eng.suggest("a.b", "tagv", tag="host"))
     assert (out, jobs) == (["h1"], 0)
     eng.put_lines([f"put a.b {B + 1000} 1.0 host=h2"])
+    # the put handed its own _meta file to the catalog
+    out, jobs = _jobs(spark, "catalog-own", lambda: eng.suggest("a.b", "tagv", tag="host"))
+    assert (out, jobs) == (["h1", "h2"], 0)
+    # a file another engine wrote is new to this catalog
+    TimelyEngine(spark, store_path=str(tmp_path / "m")).put_lines([f"put a.b {B + 2000} 1.0 host=h3"])
     out, jobs = _jobs(spark, "catalog-new", lambda: eng.suggest("a.b", "tagv", tag="host"))
-    assert (out, jobs) == (["h1", "h2"], 1)
+    assert (out, jobs) == (["h1", "h2", "h3"], 1)
     # the second put's _record_viz already folded the X file
     assert _jobs(spark, "catalog-viz", eng._viz_known) == ({"X"}, 0)
+
+
+@pytest.mark.parametrize("hot", [False, True], ids=["tier_off", "tier_on"])
+def test_first_suggest_after_a_put_runs_no_job(spark, tmp_path, hot):
+    """A put writes its _meta rows as one file it names and folds the
+    same rows into the catalog, so suggest reads nothing back; the file
+    it published is the one the catalog lists as folded."""
+    eng = TimelyEngine(spark, store_path=str(tmp_path / "m"))
+    if hot:
+        eng.enable_hot_cache(window_ms=60_000)
+    eng.put_lines([f"put p.q {B} 1.0 host=h0"])
+    assert eng.suggest("p", "metrics") == ["p.q"]
+    for i in range(1, 3):
+        eng.put_json([
+            {"metric": "p.q", "timestamp": B + i, "value": 1.0, "tags": {"host": f"h{i}"}},
+            {"metric": f"bare{i}", "timestamp": B + i, "value": 1.0},
+        ])
+        out, jobs = _jobs(spark, f"first-suggest-{hot}-{i}", lambda: (
+            eng.suggest("p.q", "tagv", -1, tag="host"), eng.suggest("bare", "metrics", -1)))
+        assert out == ([f"h{j}" for j in range(i + 1)], [f"bare{j}" for j in range(1, i + 1)])
+        assert jobs == 0
+    files = data_file_lister(spark, eng.meta_path)()
+    assert eng.catalog._meta._state[0] == files and len(files) == 3
+    assert [f for f in os.listdir(eng.meta_path) if f.startswith("_")] == []
+    assert eng.catalog.last_seen() == {
+        (r["metric"], r["tag_key"], r["tag_value"]): r["last_seen"] for r in eng.meta().collect()
+    }
 
 
 def test_lister_skips_hidden_files_and_missing_dirs(spark, tmp_path):

@@ -13,11 +13,16 @@ classes under common/src/main/java/timely/api/request/.
 from __future__ import annotations
 
 import json
+import uuid
+from contextlib import nullcontext
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from . import pins
+from .fsutil import write_parquet_rows
 from .model import META_SCHEMA, METRIC_SCHEMA, sql_literal
 from .operators.exclusions import apply_exclusions
 from .operators.meta import build_meta, metrics_dump, search_lookup
@@ -37,6 +42,11 @@ from .sources.store import (
 )
 
 VERSION = "0.0.3"  # parity with VersionRequest.java
+
+# the columns of the _meta and _viz side-write files; a tagless metric's
+# meta row carries a null tag key and value
+META_FILE_SCHEMA = T.StructType([T.StructField(f.name, f.dataType) for f in META_SCHEMA.fields])
+VIZ_FILE_SCHEMA = T.StructType([T.StructField("viz", T.StringType())])
 
 
 class _AllAuths:
@@ -148,28 +158,63 @@ class TimelyEngine:
         # below auto-invalidates any cache reading the store path — a plain
         # cache would then re-evaluate the batch against its own output
         # (observed as a duplicate 'sample' tag). Truncating lineage pins
-        # the batch contents; it stays distributed (executor blocks).
-        pts = pts.localCheckpoint(eager=True)
-        # one stats job covers the emptiness check, the hot tier's window
-        # anchor (so the cache refresh below issues zero jobs), the batch's
-        # viz expressions and its write groups; a global aggregate, so none
-        # of them adds an exchange
-        stats = pts.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("ts").alias("hi"),
-            F.collect_set("viz").alias("viz"),
-            write_group_count().alias("groups"),
-        ).collect()[0]
-        n = stats["n"]
-        if n:
-            write_points(pts, self.store, n_groups=stats["groups"])
-            # meta side-write (DataStore.java:415-433)
-            build_meta(pts).write.mode("append").parquet(self.meta_path)
-            self._record_viz(set(stats["viz"]))
-            if self._hot is not None:
-                # cache append analogue (DataStoreCache.store:635-644)
-                self._hot.refresh(read_points(self.spark, self.store), now_ms=stats["hi"])
+        # the batch contents; it stays distributed (executor blocks). The
+        # pin is released at the end of the put, unless the hot tier keeps
+        # the batch as a window segment (then it goes with the segment).
+        pts = pins.pin(pts)
+        hot = self._hot
+        kept = False
+        try:
+            # one stats job covers the emptiness check, the hot tier's
+            # window anchor, the batch's viz expressions and its write
+            # groups; a global aggregate, so none of them adds an exchange
+            stats = pts.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.max("ts").alias("hi"),
+                F.collect_set("viz").alias("viz"),
+                write_group_count().alias("groups"),
+            ).collect()[0]
+            n = stats["n"]
+            if n:
+                # before the write: a lazy window must not see the batch
+                token = hot.prepare() if hot is not None else None
+                write_points(pts, self.store, n_groups=stats["groups"])
+                try:
+                    self._record_meta(pts)
+                    self._record_viz(set(stats["viz"]))
+                    if token is not None:
+                        # cache append analogue (DataStoreCache.store:635-644)
+                        kept = hot.append(self.store.like_read(pts), stats["hi"], n, token)
+                    elif hot is not None:
+                        # no window yet: build it from the store
+                        hot.refresh(read_points(self.spark, self.store), now_ms=stats["hi"])
+                except Exception:
+                    if token is not None:
+                        # the batch is stored but not in the window, which
+                        # would hide its rows past the cut: drop the window,
+                        # and the next put rebuilds it from the store
+                        hot.close()
+                    raise
+        finally:
+            if not kept:
+                pins.unpin(pts)
         return n
+
+    def _record_meta(self, pts: DataFrame) -> None:
+        """Meta side-write (DataStore.java:415-433): the batch's
+        ``build_meta`` rows, collected once, written as one ``_meta``
+        file and folded into the catalog, so the next suggest reads
+        nothing back."""
+        rows = build_meta(pts).collect()
+        self.catalog.add_meta(self._write_side_file(self.meta_path, META_FILE_SCHEMA, rows), rows)
+
+    def _write_side_file(self, directory: str, schema: T.StructType, rows: list) -> str:
+        """Write ``rows`` as one Parquet file in ``directory`` under a
+        name chosen here (``fsutil.write_parquet_rows``), and return it as
+        a listing names it. Puts running side by side write distinct
+        files."""
+        name = f"{directory.rstrip('/')}/put-{uuid.uuid4().hex}.parquet"
+        return write_parquet_rows(self.spark, name, schema, rows)
 
     # ----------------------------------------------------------- hot tier
 
@@ -459,16 +504,16 @@ class TimelyEngine:
     def _record_viz(self, batch: set[str]) -> None:
         """Append the batch's viz expressions that the catalog does not
         hold yet to the ``_viz`` sidecar (queries then never scan the
-        store for them). Any engine on this store sees the new file at
-        its next catalog read."""
+        store for them) as one file, folded into this engine's catalog
+        at once. Any engine on this store sees the new file at its next
+        catalog read."""
         known = self._viz_known()
         new = batch - (known or set())
         if new or known is None:
             # the write also *establishes* the catalog on first ingest, so
             # an all-unlabeled store is "known empty", not "unknown"
-            self.spark.createDataFrame(
-                [(e,) for e in sorted(new)], "viz string"
-            ).coalesce(1).write.mode("append").parquet(self._viz_path)
+            rows = [(e,) for e in sorted(new)]
+            self.catalog.add_viz(self._write_side_file(self._viz_path, VIZ_FILE_SCHEMA, rows), rows)
 
     def _viz_known(self) -> frozenset[str] | None:
         """The distinct viz expressions from the driver-resident catalog
@@ -538,9 +583,11 @@ class TimelyEngine:
             if strict and not self._catalog_has_tags(req.queries[i]):
                 raise NoMatchingTagsError("No matching tags")
 
-        return to_query_response(
-            self._frames(req, auths), ms_resolution=req.ms_resolution, on_empty=no_rows
-        )
+        # the lease keeps the window's pins alive until the collect is done
+        with self._hot.lease() if self._hot is not None else nullcontext():
+            return to_query_response(
+                self._frames(req, auths), ms_resolution=req.ms_resolution, on_empty=no_rows
+            )
 
     def suggest(self, q: str, kind: str = "metrics", max_results: int = 25,
                 tag: str | None = None) -> list[str]:

@@ -17,6 +17,11 @@ unchanged listing runs no job. A folded file that is gone from the
 listing means retention or compaction rewrote the directory, so the
 fold starts again from the files present.
 
+A put hands the catalog the rows of the ``_meta`` (and ``_viz``) file it
+just wrote, under the name it gave that file (``add_meta``,
+``add_viz``), so the first read after it lists the file as folded and
+runs no job.
+
 Folding holds one lock; readers take the current fold, which is never
 mutated after it is published.
 """
@@ -108,6 +113,15 @@ class _FoldedDir:
             self._state = files, self._fold(value, rows)
             return self._state[1]
 
+    def add(self, path: str, rows) -> None:
+        """Fold ``rows``, the contents of file ``path`` that this process
+        just wrote, without reading the file back. Before the first read
+        there is no fold to extend: that read lists and folds everything."""
+        with self._lock:
+            done, value = self._state
+            if done is not None:
+                self._state = done | {path}, self._fold(value, rows)
+
 
 class MetaCatalog:
     """The engine's in-memory copy of its ``_meta`` and ``_viz``
@@ -141,6 +155,16 @@ class MetaCatalog:
         else:
             out = ()
         return list(out if max_results < 0 else out[:max_results])
+
+    def add_meta(self, path: str, rows) -> None:
+        """Fold a put's ``_meta`` rows, which it wrote as file ``path``
+        (qualified as the listing names it), so the next read runs no
+        Spark job for that file."""
+        self._meta.add(path, rows)
+
+    def add_viz(self, path: str, rows) -> None:
+        """:meth:`add_meta` for a ``_viz`` file of ``(viz,)`` rows."""
+        self._viz.add(path, rows)
 
     def last_seen(self) -> dict:
         """The folded ``(metric, tag_key, tag_value) -> last_seen`` map

@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -64,10 +65,22 @@ from ..fsutil import (
     sidecar_read_json,
     sidecar_write_json,
 )
-from ..model import METRIC_SCHEMA, sql_literal
+from ..model import METRIC_SCHEMA, series_id_sql, sql_literal
 from ..operators.retention import ageoff_filter, ttl_for_metric
 
 DAY_MS = 86_400_000
+
+
+# Spark's file committer keeps one ``_temporary`` directory per output
+# path and a job's commit deletes it, so two appends to one store at once
+# fail; writes to one store (path or table) from this process take turns
+_WRITE_LOCKS: dict[str, threading.RLock] = {}
+_WRITE_LOCKS_GUARD = threading.Lock()
+
+
+def _write_lock(key: str) -> threading.RLock:
+    with _WRITE_LOCKS_GUARD:
+        return _WRITE_LOCKS.setdefault(key, threading.RLock())
 
 
 def bucket_sql(metric: str, n: int) -> str:
@@ -166,6 +179,7 @@ class PointStore:
             )
         self.bucket_metrics = bucket_metrics or self._recorded.get("bucket_metrics")
         self.promote_tags = list(promote_tags or self._recorded.get("promote_tags") or [])
+        self._write_lock = _write_lock(series_table or path.rstrip("/"))
 
     @property
     def layout(self) -> dict:
@@ -192,6 +206,24 @@ class PointStore:
         fields.append(T.StructField("dt", T.IntegerType()))
         return T.StructType(fields)
 
+    def _read_fields(self) -> list[T.StructField]:
+        """The fields of a Parquet layout's :meth:`read` frame, in order:
+        the point model and ``dt``, then ``metric_bucket`` (carrying the
+        modulus) and the promoted tag columns. A file scan reports every
+        column nullable."""
+        types = {f.name: f.dataType for f in self.schema().fields}
+        names = ["metric", "ts", "value", "tags", "viz", "dt"]
+        if self.bucket_metrics:
+            names.append("metric_bucket")
+        names += [f"tag_{k}" for k in self.promote_tags]
+        return [
+            T.StructField(
+                n, types[n], True,
+                {"bucket_metrics": self.bucket_metrics} if n == "metric_bucket" else {},
+            )
+            for n in names
+        ]
+
     def read(self) -> DataFrame:
         """The store in point-model shape. The partition and promoted
         columns ride along for the query builder's predicates (which drop
@@ -200,14 +232,49 @@ class PointStore:
         if self.series_table is not None:
             return self.spark.table(self.series_table)
         df = self.spark.read.schema(self.schema()).parquet(self.path)
-        cols = ["metric", "ts", "value", "tags", "viz", "dt"]
+        return df.select(*[
+            F.col(f.name).alias(f.name, metadata=f.metadata) if f.metadata else f.name
+            for f in self._read_fields()
+        ])
+
+    def read_schema(self) -> T.StructType:
+        """The schema of :meth:`read`'s frame, metadata included, without
+        listing the store."""
+        if self.series_table is not None:
+            return self.spark.table(self.series_table).schema
+        return T.StructType(self._read_fields())
+
+    def like_read(self, points: DataFrame) -> DataFrame:
+        """Point-model rows in exactly :meth:`read`'s columns, types,
+        nullability and metadata, with the partition, promoted-tag and
+        series-key columns derived per row as the writer derives them.
+        Lazy: no Spark job and no listing. The hot tier appends a put's
+        batch in this shape. Rendered as SQL text: built from Columns,
+        the projection cost ~540 py4j round trips (~190 ms) per put."""
+        derived = {
+            "dt": f"CAST(ts / {DAY_MS} AS BIGINT)",
+            **{f"tag_{k}": f"tags[{sql_literal(k)}]" for k in self.promote_tags},
+        }
         if self.bucket_metrics:
-            cols.append(
-                F.col("metric_bucket").alias(
-                    "metric_bucket", metadata={"bucket_metrics": self.bucket_metrics}
-                )
-            )
-        return df.select(*cols, *[f"tag_{k}" for k in self.promote_tags])
+            derived["metric_bucket"] = bucket_sql("metric", self.bucket_metrics)
+        if self.series_table is not None:
+            derived["series_key"] = series_id_sql()
+        target = self.read_schema()
+        df = points.selectExpr(*[
+            f"CAST({derived.get(f.name, f.name)} AS {f.dataType.simpleString()}) AS {f.name}"
+            for f in target.fields
+        ])
+        # a column the batch knows to be non-null: read() reports it nullable
+        widen = [f.name for f, got in zip(target.fields, df.schema.fields) if f.nullable and not got.nullable]
+        if widen:
+            df = df.selectExpr(*[
+                f"CASE WHEN {n} IS NOT NULL THEN {n} END AS {n}" if n in widen else n
+                for n in target.names
+            ])
+        for f in target.fields:
+            if f.metadata:
+                df = df.withMetadata(f.name, f.metadata)
+        return df
 
     # ------------------------------------------------------------- write
 
@@ -218,14 +285,17 @@ class PointStore:
         ``n_groups``: the batch's (metric, dt) group count when the
         caller already knows it (:func:`write_group_count`); the write
         then runs at most that many tasks instead of leaving
-        shuffle-partition tasks with nothing to write."""
-        if self.series_table is not None:
-            write_points_bucketed(points, self.series_table, mode=mode)
-            return
-        self._write(points, self.path, mode, n_groups)
-        if self.layout and (mode != "append" or self._recorded != self.layout):
-            sidecar_write_json(self.spark, self._sidecar, self.layout)
-            self._recorded = self.layout
+        shuffle-partition tasks with nothing to write. Writes to one store
+        take turns (Spark's committer shares one staging directory per
+        path)."""
+        with self._write_lock:
+            if self.series_table is not None:
+                write_points_bucketed(points, self.series_table, mode=mode)
+                return
+            self._write(points, self.path, mode, n_groups)
+            if self.layout and (mode != "append" or self._recorded != self.layout):
+                sidecar_write_json(self.spark, self._sidecar, self.layout)
+                self._recorded = self.layout
 
     def _write(self, points: DataFrame, path: str, mode: str,
                n_groups: int | None = None, max_records: int | None = None) -> None:
@@ -268,15 +338,16 @@ class PointStore:
         and swap it in (``fsutil.replace_dir``); the series table pins
         ``rows`` (localCheckpoint) before the overwrite truncates its
         source."""
-        if self.series_table is not None:
-            pinned = rows.drop("series_key").localCheckpoint(eager=True)
-            write_points_bucketed(pinned, self.series_table, mode="overwrite")
-            return
-        tmp = self.path.rstrip("/") + "__compacting"
-        self._write(rows, tmp, "overwrite", max_records=4_000_000)
-        if self.layout:
-            sidecar_write_json(self.spark, tmp.rstrip("/") + "/_layout.json", self.layout)
-        replace_dir(self.spark, tmp, self.path)
+        with self._write_lock:
+            if self.series_table is not None:
+                pinned = rows.drop("series_key").localCheckpoint(eager=True)
+                write_points_bucketed(pinned, self.series_table, mode="overwrite")
+                return
+            tmp = self.path.rstrip("/") + "__compacting"
+            self._write(rows, tmp, "overwrite", max_records=4_000_000)
+            if self.layout:
+                sidecar_write_json(self.spark, tmp.rstrip("/") + "/_layout.json", self.layout)
+            replace_dir(self.spark, tmp, self.path)
 
     def compact(self) -> None:
         """Small-file compaction (S6 maintenance, the metadata-level
@@ -319,9 +390,10 @@ class PointStore:
         if self.series_table is not None:
             self.rewrite(ageoff_filter(self.read(), now_ms, ttls, default_ttl_ms))
             return [f"table:{self.series_table} rewrite"]
-        doomed = self.expired_partitions(now_ms, ttls, default_ttl_ms)
-        for p in doomed:
-            sidecar_delete(self.spark, p)
+        with self._write_lock:
+            doomed = self.expired_partitions(now_ms, ttls, default_ttl_ms)
+            for p in doomed:
+                sidecar_delete(self.spark, p)
         return doomed
 
 

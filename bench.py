@@ -517,11 +517,7 @@ def main() -> int:
         ).collect()
         return time.time() - t0
 
-    cal_best = None
-    for _ in range(BENCH_REPEATS):
-        dt = run_cal()
-        cal_best = dt if cal_best is None else min(cal_best, dt)
-    times["host_calibration"] = round(cal_best, 3)
+    times["host_calibration"] = round(min(run_cal() for _ in range(BENCH_REPEATS)), 3)
     print(f"  host_calibration: {times['host_calibration']}s", file=sys.stderr)
     # r12: an IN-SUITE calibration series — the same fixed synthetic
     # sampled every CAL_EVERY entries DURING the passes. The start/end
@@ -653,25 +649,22 @@ def main() -> int:
     # Gates carry PROVENANCE (VERDICT r11 #2): each entry is
     # {sec, first_green_sec, round_set, host_cal_at_set[, note]} so a
     # re-baseline is a visible, attributable record instead of a silent
-    # rebase of the 2x bar. Flat-float entries (pre-migration) still read.
-    gates = {
-        k: (v["sec"] if isinstance(v, dict) else v)
-        for k, v in raw_gates.items()
-    }
+    # rebase of the 2x bar.
+    gates = {k: v["sec"] for k, v in raw_gates.items()}
     # the ratchet: any gate sitting >1.5x its FIRST-green value is flagged
     # on the summary line every run — the driver artifact itself carries
     # the cumulative-raise record, not just the BASELINE.md narrative
     rebaselined = sorted(
         k
         for k, v in raw_gates.items()
-        if isinstance(v, dict)
-        and v["sec"] > 1.5 * v.get("first_green_sec", v["sec"])
+        if v["sec"] > 1.5 * v.get("first_green_sec", v["sec"])
     )
-    ratios = sorted(
-        round(v / gates[k], 3)
+    gate_ratios = {
+        k: round(v / gates[k], 3)
         for k, v in times.items()
         if v > 0 and gates.get(k, 0) > 0
-    )
+    }
+    ratios = sorted(gate_ratios.values())
     total = round(sum(v for v in times.values() if v >= 0), 3)
     # The ~125-entry per-query map is ~3.5 KB — bigger than the driver's
     # 2000-char tail capture, so it overflowed the summary line two rounds
@@ -685,25 +678,8 @@ def main() -> int:
     # on this fixed workload within minutes (r11 probes), so a single
     # start-of-run number can't attribute a late-suite degradation;
     # start/end bracket the run
-    cal_end = None
-    for _ in range(BENCH_REPEATS):
-        t0 = time.time()
-        spark.range(0, 100_000_000, 1, 32).selectExpr(
-            "id * 2654435761 % 1000003 AS k"
-        ).groupBy((F.col("k") % 64).alias("b")).agg(
-            F.sum("k").alias("s")
-        ).collect()
-        cal_end = min(cal_end or 1e9, time.time() - t0)
-    worst = dict(
-        sorted(
-            (
-                (k, round(v / gates[k], 3))
-                for k, v in times.items()
-                if v > 0 and gates.get(k, 0) > 0
-            ),
-            key=lambda kv: -kv[1],
-        )[:10]
-    )
+    cal_end = min(run_cal() for _ in range(BENCH_REPEATS))
+    worst = dict(sorted(gate_ratios.items(), key=lambda kv: -kv[1])[:10])
     ungated = sorted(k for k, v in times.items() if v > 0 and not gates.get(k))
     cal_gate = gates.get("host_calibration", 0)
     summary = {

@@ -439,15 +439,18 @@ def test_meta_ageoff_in_retention(spark, tmp_path_factory):
 
 
 def test_hot_cache_refresh_job_budget(spark, tmp_path_factory):
-    """VERDICT r2 item #10: refresh issues <=1 Spark job — zero when the
-    ingest path supplies the batch max as the window anchor, one max(ts)
-    aggregation otherwise (was: two driver collects per refresh)."""
+    """VERDICT r2 item #10: a refresh pins the window as one segment and
+    counts it — the pin's job and the count's — plus one max(ts)
+    aggregation when the caller gives no anchor (was: two driver
+    collects per refresh). The rebuild pays for the whole window, so the
+    first put after it runs no more jobs than the second."""
     from timely_spark.sources.hot_cache import HotCache
     from timely_spark.sources.lineprotocol import parse_lines_df
     from timely_spark.sources.store import read_points, write_points
 
     b = 1_447_767_913_000
-    store = str(tmp_path_factory.mktemp("hotjobs") / "m")
+    root = tmp_path_factory.mktemp("hotjobs")
+    store = str(root / "m")
     lines = [f"put m {b + i * 1000} {float(i)} host=h1" for i in range(30)]
     write_points(
         parse_lines_df(spark.createDataFrame([(l,) for l in lines], ["value"])),
@@ -457,29 +460,43 @@ def test_hot_cache_refresh_job_budget(spark, tmp_path_factory):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup("", "")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(tracker.getJobIdsForGroup(group))
+
     hc = HotCache(spark, window_ms=10_000)
     try:
-        sc.setJobGroup("refresh-anchored", "refresh with known now_ms")
-        hc.refresh(pts, now_ms=b + 29_000)
-        assert list(tracker.getJobIdsForGroup("refresh-anchored")) == []
+        # the pin's one job; the count's two (AQE runs the partial and
+        # the final aggregate as separate jobs)
+        assert jobs("refresh-anchored", lambda: hc.refresh(pts, now_ms=b + 29_000)) == 3
+        # plus one max(ts) action, two tracker jobs the same way
+        assert jobs("refresh-unanchored", lambda: hc.refresh(pts)) == 5
+        assert len(hc._window.segments) == 1
+        assert hc._window.segments[0].rows == 10
 
-        sc.setJobGroup("refresh-unanchored", "refresh computing max(ts)")
-        hc.refresh(pts)
-        # one max(ts) ACTION; AQE materializes the partial+final agg as
-        # up to two tracker jobs for the single query execution
-        assert len(tracker.getJobIdsForGroup("refresh-unanchored")) <= 2
-        sc.setJobGroup("after", "")
-
-        # the hybrid seam still covers every row exactly once
-        hybrid = hc.hybrid(pts)
-        assert hybrid.count() == 30
-        assert hybrid.select("ts").distinct().count() == 30
+        # the seam still covers every row exactly once
+        seam = hc.read(lambda: pts)
+        assert seam.count() == 30
+        assert seam.select("ts").distinct().count() == 30
         st = hc.status()
         assert st["newestTs"] == b + 29_000 and st["metrics"] == ["m"]
         assert st["oldestTs"] >= hc.oldest_ts - 1
     finally:
         hc.close()
-        sc.setJobGroup("", "")
+
+    eng = TimelyEngine(spark, store_path=store, meta_path=str(root / "meta"))
+    eng.enable_hot_cache(window_ms=10_000)
+    try:
+        first = jobs("put-1", lambda: eng.put_lines([f"put m {b + 30_000} 30.0 host=h1"]))
+        second = jobs("put-2", lambda: eng.put_lines([f"put m {b + 31_000} 31.0 host=h1"]))
+        assert first <= second, (first, second)
+    finally:
+        eng._hot.close()
 
 
 # Multi-round-green, plan-stable rows explicitly rotated out of the
@@ -884,12 +901,12 @@ def test_hot_cache_admission_control(spark, tmp_path_factory):
         # rejected 'skipme' is out BEFORE the budget count)
         assert st["evicted"] == ["noisy"]
         assert st["metrics"] == ["quiet"]  # the only admitted metric
-        # placement only: the hybrid still covers all 18 rows once
-        hybrid = hc.hybrid(pts)
-        assert hybrid.count() == 18
+        # placement only: the seam still covers all 18 rows once
+        seam = hc.read(lambda: pts)
+        assert seam.count() == 18
         per_metric = {
             r["metric"]: r["n"]
-            for r in hybrid.groupBy("metric").count().withColumnRenamed(
+            for r in seam.groupBy("metric").count().withColumnRenamed(
                 "count", "n"
             ).collect()
         }
@@ -923,14 +940,14 @@ def test_hot_cache_archive_restore(spark, tmp_path_factory):
     arch = str(root / "arch")
     try:
         hc.refresh(pts, now_ms=b + 29_000)
-        before = sorted(map(tuple, hc.hybrid(pts).collect()))
+        before = sorted(map(tuple, hc.read(lambda: pts).collect()))
         hc.archive(arch)
         restored = HotCache(spark)
         restored.restore(arch)
         assert restored.oldest_ts == hc.oldest_ts
         assert restored.newest_ts == hc.newest_ts
         assert restored.non_cached_metrics == ["^other"]
-        after = sorted(map(tuple, restored.hybrid(pts).collect()))
+        after = sorted(map(tuple, restored.read(lambda: pts).collect()))
         assert after == before
         restored.close()
     finally:

@@ -519,10 +519,11 @@ def test_series_order_is_independent_of_collect_order():
 
 # ----------------------------------------------------------- plan shape
 
+HOT_LEAF = "Scan ExistingRDD"  # a pinned window segment
+
 
 def _scan_nodes(plan) -> list[str]:
-    """Node names of an executed plan, through AQE stages (a cached
-    relation's inner plan is not a child of its InMemoryTableScan)."""
+    """Node names of an executed plan, through AQE stages."""
     names = []
 
     def walk(node):
@@ -556,7 +557,7 @@ def test_hot_request_is_one_plan_without_a_store_scan(spark, engines):
     frame = fuse(eng.query_frames(req, auths={"OPS"}))
     frame.collect()
     nodes = _scan_nodes(frame._jdf.queryExecution().executedPlan())
-    assert "InMemoryTableScan" in nodes
+    assert HOT_LEAF in nodes, nodes
     assert not [n for n in nodes if n.startswith("Scan parquet")], nodes
 
     got, fused_jobs = _jobs(spark, "fused-hot", lambda: eng.query(req, auths={"OPS"}))
@@ -573,7 +574,7 @@ def test_seam_request_still_scans_the_store(engines):
     frame.collect()
     nodes = _scan_nodes(frame._jdf.queryExecution().executedPlan())
     assert [n for n in nodes if n.startswith("Scan parquet")], nodes
-    assert "InMemoryTableScan" in nodes
+    assert HOT_LEAF in nodes, nodes
 
 
 def test_admission_rejections_keep_the_seam(engines):
@@ -585,7 +586,7 @@ def test_admission_rejections_keep_the_seam(engines):
         frame.collect()
         nodes = _scan_nodes(frame._jdf.queryExecution().executedPlan())
         assert [n for n in nodes if n.startswith("Scan parquet")], (name, nodes)
-        assert "InMemoryTableScan" in nodes, (name, nodes)
+        assert HOT_LEAF in nodes, (name, nodes)
 
 
 # ------------------------------------------------------- strict probe

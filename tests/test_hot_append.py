@@ -141,7 +141,7 @@ def test_appends_match_a_tier_off_engine(spark, tmp_path, monkeypatch, layout):
         return real_read(*a, **k)
 
     # the other layouts differ only in the read shape: the backlog, a
-    # snapshot, a merge, late rows and expiry cover it
+    # first append, a merge, late rows and expiry cover it
     steps = STEPS if layout == "flat" else [STEPS[k] for k in (0, 1, 2, 4, 7)]
     try:
         for i, (minutes, now) in enumerate(steps):
@@ -219,7 +219,7 @@ def test_a_put_failing_after_its_store_write_keeps_parity(spark, tmp_path, monke
         m = 10
         for target, name in ((TimelyEngine, "_record_meta"), (HotCache, "append")):
             for eng in (off, on):
-                eng.put_json(_minute(m))  # the snapshot, then appends
+                eng.put_json(_minute(m))  # appends to the rebuilt window
             assert on._hot._window.frame is not None
             monkeypatch.setattr(target, name, boom)
             for eng in (off, on) if name == "_record_meta" else (on,):
@@ -280,7 +280,7 @@ def test_a_frame_outlives_the_merge_that_retires_its_segments(spark, tmp_path):
         return sorted(map(repr, frame.collect()))
 
     try:
-        eng.put_json(_minute(10))  # the snapshot, then one batch segment
+        eng.put_json(_minute(10))  # the rebuilt window, then one batch segment
         with hot.lease():
             frame = eng.query_frames(request, auths={"OPS", "PUB"})[0]
             before = rows(frame)
@@ -343,8 +343,8 @@ def test_concurrent_putters_and_a_querier_match_a_serial_replay(spark, tmp_path)
 
     eng = TimelyEngine(spark, store_path=str(tmp_path / "live"))
     eng.put_json(backlog)
-    eng.enable_hot_cache(window_ms=60 * MIN)
     pinned = _persisted(spark)
+    eng.enable_hot_cache(window_ms=60 * MIN)
     srv = TimelyHttpServer(eng).start()
     done = threading.Event()
     errors: list = []

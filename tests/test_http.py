@@ -247,14 +247,52 @@ def test_engine_refuses_mixed_store_layout(spark, tmp_path):
     """Explicit bucket_metrics over an existing unbucketed store (or a
     different sidecar modulus) must raise instead of appending
     metric_bucket=* dirs next to metric=* ones, which would break
-    partition discovery for every subsequent read."""
+    partition discovery for every subsequent read. So must a
+    promote_tags list that differs from the one on disk: the older
+    files would read the new ``tag_<k>`` columns as null."""
     store = str(tmp_path / "metrics")
     eng = TimelyEngine(spark, store_path=store)
     eng.put_lines([f"put sys.cpu.idle {TEST_TIME} 1.0 host=h1"])
     with pytest.raises(ValueError, match="mixed layout"):
         TimelyEngine(spark, store_path=store, bucket_metrics=8)
+    with pytest.raises(ValueError, match="mixed layout with promote_tags"):
+        TimelyEngine(spark, store_path=store, promote_tags=["host"])
     # matching explicit layout still constructs
     assert TimelyEngine(spark, store_path=store).store.bucket_metrics is None
+
+    promoted = str(tmp_path / "promoted")
+    eng = TimelyEngine(spark, store_path=promoted, promote_tags=["host"])
+    eng.put_lines([f"put sys.cpu.idle {TEST_TIME} 1.0 host=h1 rack=r1"])
+    with pytest.raises(ValueError, match="mixed layout with promote_tags"):
+        TimelyEngine(spark, store_path=promoted, promote_tags=["host", "rack"])
+    assert TimelyEngine(spark, store_path=promoted, promote_tags=["host"]).store.promote_tags == ["host"]
+    assert TimelyEngine(spark, store_path=promoted).store.promote_tags == ["host"]
+
+
+@pytest.mark.parametrize("method", ["GET", "POST"])
+def test_a_failing_route_answers_500_and_logs_its_traceback(spark, tmp_path, monkeypatch, caplog, method):
+    """An exception no status maps answers 500 in the TimelyException
+    shape, and its stack trace goes to the facade's log."""
+
+    def boom(*a, **k):
+        raise RuntimeError("engine fell over")
+
+    monkeypatch.setattr(TimelyEngine, "suggest", boom)
+    with server(spark, tmp_path) as srv, caplog.at_level("ERROR", logger="timely_spark.http_facade"):
+        url = srv.base_url + "/api/suggest"
+        if method == "GET":
+            req = urllib.request.Request(url + "?type=metrics")
+        else:
+            req = urllib.request.Request(url, data=b"{}", method="POST",
+                                         headers={"Content-Type": "application/json"})
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(req, timeout=60)
+    assert err.value.code == 500
+    assert json.loads(err.value.read()) == {"message": "engine fell over", "detailMessage": "engine fell over"}
+    [record] = [r for r in caplog.records if r.name == "timely_spark.http_facade"]
+    assert record.getMessage() == f"{method} /api/suggest{'?type=metrics' if method == 'GET' else ''} failed"
+    assert record.exc_info[0] is RuntimeError
+    assert "engine fell over" in caplog.text and "Traceback" in caplog.text
 
 
 def test_query_get_mini_language(spark, tmp_path):

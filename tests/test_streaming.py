@@ -341,65 +341,6 @@ def test_summarization_writeback_loop(spark, tmp_path):
     assert out[0]["dps"][str(b)] == pytest.approx(30.0)
 
 
-def test_streaming_fir_state_across_microbatches(spark, tmp_path):
-    """W2 as a custom stateful streaming operator: the per-series ring
-    buffer of the last F-1 values carries across micro-batches; output
-    equals the batch FIR operator."""
-    from timely_spark.operators.fir import fir_filter
-    from timely_spark.sources.lineprotocol import parse_lines_df
-    from timely_spark.streaming.stateful_fir import streaming_fir
-
-    b = 1_447_767_913_000
-    src = tmp_path / "pts"
-    src.mkdir()
-    # two series interleaved; split mid-series so the 5-point window
-    # straddles the micro-batch boundary
-    f1 = [f"put m {b + i * 1000} {float(i * i)} host=h1" for i in range(6)] + [
-        f"put m {b + i * 2000} {float(i)} host=h2" for i in range(4)
-    ]
-    f2 = [f"put m {b + i * 1000} {float(i * i)} host=h1" for i in range(6, 12)] + [
-        f"put m {b + i * 2000} {float(i)} host=h2" for i in range(4, 8)
-    ]
-    (src / "f1.txt").write_text("\n".join(f1) + "\n")
-    (src / "f2.txt").write_text("\n".join(f2) + "\n")
-
-    weights = "0.2,0.2,0.2,0.2,0.2"
-    lines = spark.readStream.option("maxFilesPerTrigger", 1).text(str(src))
-    pts = parse_lines_df(lines)
-    q = (
-        streaming_fir(pts, weights)
-        .writeStream.format("memory")
-        .queryName("firs")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r["series_key"], r["ts"]): r["value"]
-        for r in spark.sql("select * from firs").collect()
-    }
-
-    batch_pts = parse_lines_df(
-        spark.createDataFrame([(l,) for l in f1 + f2], ["value"])
-    )
-    from timely_spark.model import series_id
-
-    expect = {
-        (r["__series"], r["ts"]): r["value"]
-        for r in fir_filter(batch_pts, weights)
-        .withColumn("__series", series_id())
-        .collect()
-    }
-    # each series loses its first F-1=4 points
-    assert len(got) == len(expect) == (12 - 4) + (8 - 4)
-    for k, v in expect.items():
-        assert got[k] == pytest.approx(v, rel=1e-12)
-
-
 def test_subscription_finite_range_completes(spark, tmp_path):
     """X1/X2 end-of-range: a finite subscription drains the range and then
     emits the complete:true marker (MetricScanner.java:254-281); close()

@@ -176,8 +176,9 @@ class TimelyEngine:
             ).collect()[0]
             n = stats["n"]
             if n:
-                # before the write: a lazy window must not see the batch
-                token = hot.prepare() if hot is not None else None
+                # before the write, so that a rebuild published after it
+                # counts as having read the batch
+                token = hot.token() if hot is not None else None
                 write_points(pts, self.store, n_groups=stats["groups"])
                 try:
                     self._record_meta(pts)

@@ -37,6 +37,7 @@ A query whose SubQuery matches zero series returns HTTP 400
 from __future__ import annotations
 
 import json
+import logging
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -50,6 +51,15 @@ JSON_TYPE = "application/json"  # netty Constants.JSON_TYPE
 TEXT_TYPE = "text/plain"
 HTML_TYPE = "text/html"
 HSTS_HEADER = "Strict-Transport-Security"  # StrictTransportHandler.java:12
+
+log = logging.getLogger(__name__)
+
+# what a route's exception answers with, first match wins; anything else
+# is a 500 whose stack trace goes to the log
+ERROR_STATUS = (
+    (UnauthorizedError, 401),
+    ((NoMatchingTagsError, KeyError, ValueError), 400),
+)
 
 
 class CorsConfig:
@@ -338,6 +348,22 @@ class TimelyHttpServer:
             class _TooLarge(Exception):
                 pass
 
+            def _fail(self, e: Exception) -> None:
+                """Answer a route's exception in the TimelyException shape."""
+                if isinstance(e, self._TooLarge):
+                    # HttpObjectAggregator semantics (Server.java:496):
+                    # refuse before buffering; close so the unread body
+                    # never parses as a next request
+                    self._error(413, f"Request entity too large: {e} bytes")
+                    self.close_connection = True
+                    return
+                for types, status in ERROR_STATUS:
+                    if isinstance(e, types):
+                        self._error(status, str(e))
+                        return
+                log.exception("%s %s failed", self.command, self.path)
+                self._error(500, str(e))
+
             def _body_json(self):
                 n = int(self.headers.get("Content-Length") or 0)
                 if n > server.max_body_bytes:
@@ -442,14 +468,8 @@ class TimelyHttpServer:
                         self._error(404, f"unknown path {parsed.path}")
                         return
                     route(self._params(parsed))
-                except NoMatchingTagsError as e:
-                    self._error(400, str(e))
-                except UnauthorizedError as e:
-                    self._error(401, str(e))
-                except (KeyError, ValueError) as e:
-                    self._error(400, str(e))
-                except Exception as e:  # pragma: no cover - defensive
-                    self._error(500, str(e))
+                except Exception as e:
+                    self._fail(e)
 
             def do_POST(self):  # noqa: N802
                 parsed = urlparse(self.path)
@@ -467,20 +487,8 @@ class TimelyHttpServer:
                         self._post_lookup(self._body_json() or {})
                     else:
                         self._error(404, f"unknown path {parsed.path}")
-                except self._TooLarge as e:
-                    # HttpObjectAggregator semantics (Server.java:496):
-                    # refuse before buffering; close so the unread body
-                    # never parses as a next request
-                    self._error(413, f"Request entity too large: {e} bytes")
-                    self.close_connection = True
-                except NoMatchingTagsError as e:
-                    self._error(400, str(e))
-                except UnauthorizedError as e:
-                    self._error(401, str(e))
-                except (KeyError, ValueError) as e:
-                    self._error(400, str(e))
-                except Exception as e:  # pragma: no cover - defensive
-                    self._error(500, str(e))
+                except Exception as e:
+                    self._fail(e)
 
             # -- routes --------------------------------------------------
             def _static(self, path: str) -> None:

@@ -17,7 +17,7 @@ the window.
 
 Spark shape: there is only ONE durable tier (partitioned Parquet), so the
 hot tier is an *optimization*, not a semantic feature — a recent-window
-DataFrame held in executor memory (Tungsten columnar blocks; no
+DataFrame pinned in executor memory (checkpointed row blocks; no
 per-series compressor needed — Parquet encodings already play Gorilla's
 compression role at rest). The hybrid read unions window + store with
 the split at the window's cut, exactly the reference's seam, and because
@@ -25,29 +25,27 @@ both sides share schema the downstream aggregation is one plan —
 Catalyst handles the per-series merge that DataStore.java:655-690 did by
 hand.
 
-Two ways the window changes:
+Every window is a tuple of pinned *segments*, and it changes two ways:
 
-- **Full rebuild** (:meth:`refresh`: ``enable_hot_cache``, and
-  :meth:`restore` from an archive). The window is the store read
-  filtered at the cut and pinned with a lazy ``.cache()``: zero Spark
-  jobs, and the first reader materializes it.
-- **Append** (:meth:`append`, every put). The reference adds each write
-  to its cache (DataStoreCache.store:635-644); here the put hands over
-  the batch it already checkpointed, its admitted rows rendered in the
-  store's read shape (``PointStore.like_read``), and the batch becomes
-  a new *segment* without a Spark job. The window is the union of its
-  segments filtered at the cut — Structured Streaming's way with state
-  (fold each micro-batch in, never recompute from the source). A
+- **Full rebuild** (:meth:`refresh`: ``enable_hot_cache``, a put that
+  finds no window, and :meth:`restore` from an archive). The window is
+  the store read filtered at the cut, pinned as one segment.
+- **Append** (:meth:`append`, every other put). The reference adds each
+  write to its cache (DataStoreCache.store:635-644); here the put hands
+  over the batch it already checkpointed, its admitted rows rendered in
+  the store's read shape (``PointStore.like_read``), and the batch
+  becomes a new segment without a Spark job. The window is the union of
+  its segments filtered at the cut — Structured Streaming's way with
+  state (fold each micro-batch in, never recompute from the source). A
   segment whose newest row is at or below the cut is dropped; while the
   newest segment holds at least as many rows as the one before it, the
   two are merged into one pin, so a window holds O(log(window/batch))
   segments and a put's work stays batch-sized.
 
-The first put after a full rebuild snapshots the lazy window with one
-pin (:meth:`prepare`) BEFORE its store write: Spark's cache manager
-re-lists a ``.cache()`` over the store path after an append, so a lazy
-window pinned after the write would already hold the batch that the
-append then adds again.
+A put reads the window's generation (:meth:`token`) BEFORE its store
+write and hands it to :meth:`append`: a full rebuild published after
+that read is taken to have listed the batch already, so the append is
+dropped rather than counted twice.
 
 Window updates hold one lock, which store writes do not take. A
 segment retired by a merge or by expiry releases its pin only once no
@@ -78,9 +76,8 @@ cache archive, re-expressed as Parquet + a metadata sidecar.
 
 At scale: the cache covers `window_ms` of ingest (default 2 h ≈ the
 reference's hourly-archived live compressors). Memory is bounded by
-recent-window volume, not corpus size: a lazy window's blocks are
-evicted LRU under pressure and lineage recomputes them from Parquet;
-segment pins (``localCheckpoint``, memory and disk) spill instead.
+recent-window volume, not corpus size: segment pins
+(``localCheckpoint``, memory and disk) spill under pressure.
 """
 
 from __future__ import annotations
@@ -112,20 +109,16 @@ def _canonical_tags(col: str = "tags"):
 
 
 class _Segment:
-    """Rows held in executor memory, ``frame`` in the store's read shape.
-    ``rows`` bounds their count from above (a batch's size, a snapshot's
-    count, the sum of the merged segments' bounds; expired rows are not
+    """Rows pinned in executor memory, ``frame`` in the store's read shape.
+    ``rows`` bounds their count from above (a rebuild's count, a batch's
+    size, the sum of the merged segments' bounds; expired rows are not
     subtracted), ``newest`` bounds their ts from above, ``release`` frees
-    their storage. A ``lazy`` segment is a ``.cache()`` over its source
-    whose lineage is intact, so releasing it under a reader only costs a
-    recompute."""
+    their pin."""
 
-    __slots__ = ("frame", "rows", "newest", "release", "lazy", "leases", "escaped", "retired")
+    __slots__ = ("frame", "rows", "newest", "release", "leases", "escaped", "retired")
 
-    def __init__(self, frame: DataFrame, rows: int | None, newest: int,
-                 release: Callable[[], object], lazy: bool = False):
-        self.frame, self.rows, self.newest = frame, rows, newest
-        self.release, self.lazy = release, lazy
+    def __init__(self, frame: DataFrame, rows: int, newest: int, release: Callable[[], object]):
+        self.frame, self.rows, self.newest, self.release = frame, rows, newest, release
         self.leases = 0
         self.escaped = self.retired = False
 
@@ -209,16 +202,14 @@ class HotCache:
         ``enable_hot_cache``, and a put that finds no window yet. Puts
         that find one call :meth:`append` instead.
 
-        Job budget: ZERO Spark jobs when the caller supplies ``now_ms``
-        (the ingest path already knows its batch max), ONE max(ts)
-        aggregation otherwise, plus ONE window-bounded distinct-tag-set
-        aggregation when ``max_unique_tag_sets`` is set (the F9 guard —
-        its cost is recent-window-sized, never corpus-sized). The split
-        boundary is the window CUTOFF (now - window), not the oldest
-        cached row — every ADMITTED row above the cutoff is in the
-        cache by construction. The window is one lazy ``.cache()`` that
-        the first query materializes; the next put snapshots it before
-        its store write (:meth:`prepare`)."""
+        Job budget: the window's pin and its count, ONE max(ts)
+        aggregation more when the caller gives no ``now_ms`` (the ingest
+        path already knows its batch max), plus ONE window-bounded
+        distinct-tag-set aggregation when ``max_unique_tag_sets`` is set
+        (the F9 guard — its cost is recent-window-sized, never
+        corpus-sized). The split boundary is the window CUTOFF (now -
+        window), not the oldest cached row — every ADMITTED row above the
+        cutoff is in the cache by construction."""
         if now_ms is None:
             hi = points.agg(F.max("ts")).collect()[0][0]
             now_ms = hi if hi is not None else 0
@@ -237,39 +228,19 @@ class HotCache:
         self._rebuild(fresh, cut, now_ms, evicted)
 
     def _rebuild(self, frame: DataFrame, cut: int, newest: int, evicted) -> None:
-        """Publish ``.cache()`` of ``frame`` as the whole window."""
+        """Pin ``frame`` and publish it as the whole window, one segment."""
+        base = pins.pin(frame)
+        seg = _Segment(base, base.count(), newest, lambda: pins.unpin(base))
         with self._lock:
-            with self._lease_lock:
-                # a lazy window goes first: a cache of an equal plan would
-                # share its cache entry, and releasing it later would
-                # uncache the new window too
-                for s in self._window.segments:
-                    if s.lazy and s.release is not None:
-                        s.release()
-                        s.release = None
-            cached = frame.cache()
-            seg = _Segment(cached, None, newest, cached.unpersist, lazy=True)
             self._generation += 1
-            self._publish(_Window(cached, cut, newest, tuple(evicted), (seg,)))
+            self._publish(_Window(base, cut, newest, tuple(evicted), (seg,)))
 
-    def prepare(self) -> int | None:
-        """Called by a put before its store write: make the window
-        independent of the store, and return the token that
-        :meth:`append` takes, or ``None`` when there is no window (the
-        put then rebuilds it with :meth:`refresh`).
-
-        A lazy window (just rebuilt or restored) is snapshotted with one
-        pin: after the write, Spark's cache manager would re-list the
-        store under it and the batch would show up twice."""
+    def token(self) -> int | None:
+        """The window's generation, which :meth:`append` takes; ``None``
+        when there is no window (the put then rebuilds it with
+        :meth:`refresh`). A put reads it before its store write."""
         with self._lock:
-            w = self._window
-            if w.frame is None:
-                return None
-            if w.segments[0].lazy:
-                base = pins.pin(w.frame)
-                seg = _Segment(base, base.count(), w.newest, lambda: pins.unpin(base))
-                self._publish(w._replace(frame=base, segments=(seg,)))
-            return self._generation
+            return None if self._window.frame is None else self._generation
 
     def append(self, batch: DataFrame, newest: int, rows: int, token: int) -> bool:
         """Add a put's batch (checkpointed, written to the store, and
@@ -284,7 +255,7 @@ class HotCache:
         Returns True when the window took ownership of the pin the batch
         reads (it is released with its segment); False when the batch
         holds no row past the cut, or a full rebuild or :meth:`close`
-        came after ``token`` was issued (the window then already
+        came after :meth:`token` was read (the window then already
         reflects the store)."""
         with self._lock:
             w = self._window
@@ -340,11 +311,10 @@ class HotCache:
     @staticmethod
     def _release_idle(seg: _Segment) -> None:
         """Free a retired segment no lease holds. A pin a frame without a
-        lease may read is left to Spark's ContextCleaner; a lazy
-        ``.cache()`` is always released, since a reader can recompute
-        it (the caller holds the lease lock)."""
+        lease may read is left to Spark's ContextCleaner (the caller
+        holds the lease lock)."""
         if seg.retired and not seg.leases and seg.release is not None:
-            if seg.lazy or not seg.escaped:
+            if not seg.escaped:
                 seg.release()
             seg.release = None
 
@@ -397,7 +367,7 @@ class HotCache:
         return self._window.newest
 
     def status(self, max_metrics: int | None = 1000) -> dict:
-        """One aggregation job over the (cached) window — min/max/names
+        """One aggregation job over the (pinned) window — min/max/names
         together; the reference likewise walks its live maps per status
         call (DataStoreCache.java:911-922).
 
@@ -444,7 +414,7 @@ class HotCache:
         tier that holds them: the window alone when the range starts past
         the cut and admission keeps no metric out (then ``store_reader``
         is never called, so the store is neither listed nor scanned),
-        else :meth:`hybrid` over ``store_reader()``."""
+        else the seam over ``store_reader()``."""
         w = self._current()
         if (
             w.frame is not None
@@ -456,20 +426,12 @@ class HotCache:
             return w.frame
         return self._hybrid(w, store_reader())
 
-    def hybrid(self, store_points: DataFrame) -> DataFrame:
-        """Union view: recent rows from the cached tier, older rows from
-        the store, split at the cache's oldest ts (DataStore.java:655-690).
-        A metric the admission policy keeps OUT of the hot tier reads
-        its recent rows from the cold scan instead — placement changes,
-        results never do.
-
-        Returns a plain DataFrame — callers (the query builder) see one
-        logical table; the cached side serves from memory, the store side
-        keeps its partition pruning.
-        """
-        return self._hybrid(self._current(), store_points)
-
     def _hybrid(self, w: _Window, store_points: DataFrame) -> DataFrame:
+        """Union view: recent rows from the hot tier, older rows from the
+        store, split at the cut (DataStore.java:655-690). A metric the
+        admission policy keeps OUT of the hot tier reads its recent rows
+        from the cold scan instead — placement changes, results never
+        do. The store side keeps its partition pruning."""
         if w.frame is None:
             return store_points
         cold = store_points.filter(
@@ -518,7 +480,7 @@ class HotCache:
         """Re-pin an archived window in this (possibly fresh) session:
         the restart path, a full rebuild like :meth:`refresh`. The
         restored cache carries the archived boundary, eviction list and
-        admission config, so hybrid() seams exactly as before the
+        admission config, so the seam splits exactly as before the
         restart. The archive is read by schema inference, which keeps the
         store's read schema, ``metric_bucket``'s modulus included: Spark
         stores field metadata in the Parquet footer, so appended segments

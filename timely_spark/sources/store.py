@@ -149,8 +149,9 @@ class PointStore:
     whichever layout backs it.
 
     ``bucket_metrics`` / ``promote_tags``: the Parquet layout of a new
-    store; ``None`` adopts what the store's sidecar records. A
-    ``bucket_metrics`` that differs from the bucketing on disk raises.
+    store; ``None`` adopts what the store's sidecar records. Either one
+    that differs from the layout on disk raises: older files would read
+    a newly promoted ``tag_<k>`` as null.
     ``series_table``: keep the points in that series-bucketed catalog
     table instead of under ``path``."""
 
@@ -167,16 +168,17 @@ class PointStore:
         self.series_table = series_table
         self._sidecar = path.rstrip("/") + "/_layout.json"
         self._recorded = {} if series_table else sidecar_read_json(spark, self._sidecar) or {}
-        on_disk = self._recorded.get("bucket_metrics")
-        if bucket_metrics is not None and on_disk is None and any(
-            n.startswith("metric=") for n in _names(spark, path)
-        ):
-            on_disk = 0  # unbucketed partition dirs already present
-        if bucket_metrics is not None and on_disk is not None and on_disk != bucket_metrics:
-            raise ValueError(
-                f"store {path!r} has layout bucket_metrics={on_disk or None}; "
-                f"refusing to write a mixed layout with bucket_metrics={bucket_metrics}"
-            )
+        asked = {"bucket_metrics": bucket_metrics, "promote_tags": list(promote_tags or [])}
+        # a store with data has a layout: its sidecar's, or flat when only
+        # unbucketed partition dirs are there
+        if any(asked.values()) and (self._recorded or any(n.startswith("metric=") for n in _names(spark, path))):
+            for key, want in asked.items():
+                have = self._recorded.get(key)
+                if want and have != want:
+                    raise ValueError(
+                        f"store {path!r} has layout {key}={have}; "
+                        f"refusing to write a mixed layout with {key}={want}"
+                    )
         self.bucket_metrics = bucket_metrics or self._recorded.get("bucket_metrics")
         self.promote_tags = list(promote_tags or self._recorded.get("promote_tags") or [])
         self._write_lock = _write_lock(series_table or path.rstrip("/"))

@@ -13,7 +13,11 @@ Conventions shared by both sides (hash-match requirements):
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -63,6 +67,23 @@ def _points(spark: SparkSession, sf_dir: str, with_k: bool = False) -> DataFrame
         F.create_map(*tag_pairs).alias("tags"),
         F.lit(None).cast("string").alias("viz"),
     )
+
+
+@contextmanager
+def _engine(spark: SparkSession, sf_dir: str):
+    """A TimelyEngine over the registry points, stored in a fresh
+    temporary directory (the store, its catalog side-writes and any
+    cache archive side by side) that is deleted on exit."""
+    from timely_spark.api import TimelyEngine
+    from timely_spark.sources.store import write_points
+
+    root = tempfile.mkdtemp(prefix="timely_engine_")
+    try:
+        store = os.path.join(root, "store")
+        write_points(_points(spark, sf_dir), store)
+        yield TimelyEngine(spark, store_path=store, meta_path=store + "_meta")
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -358,8 +379,7 @@ def q_ts_streaming_summarize(spark, sf_dir):
     the DuckDB oracle can state it as a plain windowed aggregate with
     the same HAVING cutoff. Late-data semantics, watermark eviction,
     and state flushing are all on the verified path. Temp sink/ckpt
-    dirs persist until process exit (same per-run-rebuild protocol as
-    ts_hybrid_cache)."""
+    dirs persist until process exit."""
     import os
     import tempfile
 
@@ -557,34 +577,25 @@ def q_ts_engine_query(spark, sf_dir):
     dps are re-flattened to rows for the oracle compare. This is the one
     oracle row that exercises store+builder+response end-to-end rather
     than calling operators directly."""
-    import os
-    import shutil
+    from timely_spark.api import ALL_AUTHS
 
-    from timely_spark.api import ALL_AUTHS, TimelyEngine
-    from timely_spark.sources.store import write_points
-
-    store = os.path.join(
-        "/root/repo/.engine_stores", os.path.basename(sf_dir.rstrip("/"))
-    )
-    shutil.rmtree(store, ignore_errors=True)
-    write_points(_points(spark, sf_dir), store)
-    eng = TimelyEngine(spark, store_path=store, meta_path=store + "_meta")
-    out = eng.query(
-        {
-            "start": 1,  # ms epoch; end omitted -> now (QueryRequest.java:371)
-            "msResolution": True,
-            "queries": [
-                {
-                    "aggregator": "sum",
-                    "metric": "click",
-                    "downsample": "15m-avg",
-                    "rate": True,
-                    "tags": {"user": "1\\d"},  # regex => users 10-19
-                }
-            ],
-        },
-        auths=ALL_AUTHS,
-    )
+    with _engine(spark, sf_dir) as eng:
+        out = eng.query(
+            {
+                "start": 1,  # ms epoch; end omitted -> now (QueryRequest.java:371)
+                "msResolution": True,
+                "queries": [
+                    {
+                        "aggregator": "sum",
+                        "metric": "click",
+                        "downsample": "15m-avg",
+                        "rate": True,
+                        "tags": {"user": "1\\d"},  # regex => users 10-19
+                    }
+                ],
+            },
+            auths=ALL_AUTHS,
+        )
     rows = [
         (s["metric"], s["tags"]["user"], int(ts), v)
         for s in out
@@ -608,35 +619,25 @@ def q_ts_hybrid_cache(spark, sf_dir):
     with the pruned cold scan at the cache cutoff — and the result must
     be byte-identical to a single-tier scan, which is exactly what the
     DuckDB oracle computes."""
-    import os
-    import shutil
+    from timely_spark.api import ALL_AUTHS
 
-    from timely_spark.api import ALL_AUTHS, TimelyEngine
-    from timely_spark.sources.store import write_points
-
-    store = os.path.join(
-        "/root/repo/.engine_stores",
-        os.path.basename(sf_dir.rstrip("/")) + "_hybrid",
-    )
-    shutil.rmtree(store, ignore_errors=True)
-    write_points(_points(spark, sf_dir), store)
-    eng = TimelyEngine(spark, store_path=store, meta_path=store + "_meta")
-    eng.enable_hot_cache(window_ms=7 * 86_400_000)
-    out = eng.query(
-        {
-            "start": 1,
-            "msResolution": True,
-            "queries": [
-                {
-                    "aggregator": "sum",
-                    "metric": "view",
-                    "downsample": "1h-avg",
-                    "tags": {"user": "2\\d"},  # users 20-29
-                }
-            ],
-        },
-        auths=ALL_AUTHS,
-    )
+    with _engine(spark, sf_dir) as eng:
+        eng.enable_hot_cache(window_ms=7 * 86_400_000)
+        out = eng.query(
+            {
+                "start": 1,
+                "msResolution": True,
+                "queries": [
+                    {
+                        "aggregator": "sum",
+                        "metric": "view",
+                        "downsample": "1h-avg",
+                        "tags": {"user": "2\\d"},  # users 20-29
+                    }
+                ],
+            },
+            auths=ALL_AUTHS,
+        )
     rows = [
         (s["metric"], s["tags"]["user"], int(ts), v)
         for s in out
@@ -664,40 +665,30 @@ def q_ts_cache_admission(spark, sf_dir):
     route to the cold scan, and the result must be byte-identical to a
     single-tier scan — which is exactly what the DuckDB oracle
     computes."""
-    import os
-    import shutil
+    from timely_spark.api import ALL_AUTHS
 
-    from timely_spark.api import ALL_AUTHS, TimelyEngine
-    from timely_spark.sources.store import write_points
-
-    store = os.path.join(
-        "/root/repo/.engine_stores",
-        os.path.basename(sf_dir.rstrip("/")) + "_admission",
-    )
-    shutil.rmtree(store, ignore_errors=True)
-    write_points(_points(spark, sf_dir), store)
-    eng = TimelyEngine(spark, store_path=store, meta_path=store + "_meta")
-    eng.enable_hot_cache(
-        window_ms=7 * 86_400_000,
-        non_cached_metrics=("^view$",),
-        max_unique_tag_sets=200,
-    )
-    out = eng.query(
-        {
-            "start": 1,
-            "msResolution": True,
-            "queries": [
-                {
-                    "aggregator": "sum",
-                    "metric": m,
-                    "downsample": "1h-avg",
-                    "tags": {"user": "3\\d"},  # users 30-39
-                }
-                for m in ("view", "click")
-            ],
-        },
-        auths=ALL_AUTHS,
-    )
+    with _engine(spark, sf_dir) as eng:
+        eng.enable_hot_cache(
+            window_ms=7 * 86_400_000,
+            non_cached_metrics=("^view$",),
+            max_unique_tag_sets=200,
+        )
+        out = eng.query(
+            {
+                "start": 1,
+                "msResolution": True,
+                "queries": [
+                    {
+                        "aggregator": "sum",
+                        "metric": m,
+                        "downsample": "1h-avg",
+                        "tags": {"user": "3\\d"},  # users 30-39
+                    }
+                    for m in ("view", "click")
+                ],
+            },
+            auths=ALL_AUTHS,
+        )
     rows = [
         (s["metric"], s["tags"]["user"], int(ts), v)
         for s in out
@@ -723,41 +714,31 @@ def q_ts_cache_archive(spark, sf_dir):
     restored boundary must reproduce the exact split, so the result is
     byte-identical to a single-tier scan — the DuckDB oracle computes
     that directly from events."""
-    import os
-    import shutil
-
-    from timely_spark.api import ALL_AUTHS, TimelyEngine
+    from timely_spark.api import ALL_AUTHS
     from timely_spark.sources.hot_cache import HotCache
-    from timely_spark.sources.store import write_points
 
-    store = os.path.join(
-        "/root/repo/.engine_stores",
-        os.path.basename(sf_dir.rstrip("/")) + "_cachearch",
-    )
-    shutil.rmtree(store, ignore_errors=True)
-    write_points(_points(spark, sf_dir), store)
-    eng = TimelyEngine(spark, store_path=store, meta_path=store + "_meta")
-    eng.enable_hot_cache(window_ms=7 * 86_400_000)
-    arch = store + "_cachearchive"
-    eng._hot.archive(arch)
-    restored = HotCache(spark)
-    restored.restore(arch)
-    eng.attach_hot_cache(restored)
-    out = eng.query(
-        {
-            "start": 1,
-            "msResolution": True,
-            "queries": [
-                {
-                    "aggregator": "sum",
-                    "metric": "error",
-                    "downsample": "1h-avg",
-                    "tags": {"user": "4\\d"},  # users 40-49
-                }
-            ],
-        },
-        auths=ALL_AUTHS,
-    )
+    with _engine(spark, sf_dir) as eng:
+        eng.enable_hot_cache(window_ms=7 * 86_400_000)
+        arch = eng.store.path + "_cachearchive"
+        eng._hot.archive(arch)
+        restored = HotCache(spark)
+        restored.restore(arch)
+        eng.attach_hot_cache(restored)
+        out = eng.query(
+            {
+                "start": 1,
+                "msResolution": True,
+                "queries": [
+                    {
+                        "aggregator": "sum",
+                        "metric": "error",
+                        "downsample": "1h-avg",
+                        "tags": {"user": "4\\d"},  # users 40-49
+                    }
+                ],
+            },
+            auths=ALL_AUTHS,
+        )
     rows = [
         (s["metric"], s["tags"]["user"], int(ts), v)
         for s in out
@@ -984,40 +965,30 @@ def q_ts_engine_rollup(spark, sf_dir):
     tag-predicate -> combine -> OpenTSDB-response pipeline as query().
     The oracle aggregates raw points directly in DuckDB, so the hash
     match proves tier-vs-raw value identity end-to-end."""
-    import os
-    import shutil
+    from timely_spark.api import ALL_AUTHS
 
-    from timely_spark.api import ALL_AUTHS, TimelyEngine
-    from timely_spark.sources.store import write_points
-
-    store = os.path.join(
-        "/root/repo/.engine_stores",
-        "rollup_" + os.path.basename(sf_dir.rstrip("/")),
-    )
-    shutil.rmtree(store, ignore_errors=True)
-    write_points(_points(spark, sf_dir), store)
-    eng = TimelyEngine(spark, store_path=store, meta_path=store + "_meta")
-    partials = eng.build_rollup(level_ms=300_000)
-    out = eng.query_rollup(
-        {
-            "start": 1,
-            # end aligned to the level boundary (k*300000 - 1): the
-            # rollup tier rejects ends that cut inside a level bucket
-            "end": 4_000_000_199_999,
-            "msResolution": True,
-            "queries": [
-                {
-                    "aggregator": "max",
-                    "metric": "click",
-                    "downsample": "1h-sum",
-                    "tags": {"user": ".*"},
-                }
-            ],
-        },
-        partials,
-        level_ms=300_000,
-        auths=ALL_AUTHS,
-    )
+    with _engine(spark, sf_dir) as eng:
+        partials = eng.build_rollup(level_ms=300_000)
+        out = eng.query_rollup(
+            {
+                "start": 1,
+                # end aligned to the level boundary (k*300000 - 1): the
+                # rollup tier rejects ends that cut inside a level bucket
+                "end": 4_000_000_199_999,
+                "msResolution": True,
+                "queries": [
+                    {
+                        "aggregator": "max",
+                        "metric": "click",
+                        "downsample": "1h-sum",
+                        "tags": {"user": ".*"},
+                    }
+                ],
+            },
+            partials,
+            level_ms=300_000,
+            auths=ALL_AUTHS,
+        )
     rows = [
         (s["metric"], s["tags"]["user"], int(ts), v)
         for s in out

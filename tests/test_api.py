@@ -104,9 +104,9 @@ def test_suggest_and_lookup(engine):
     # (DataStore.java:544-573) — not a substring scan
     assert engine.suggest("sys.cpu.idle", "tagk") == ["tag3", "tag4"]
     assert engine.suggest("sys.cpu.idle", "tagv", tag="tag4") == ["other", "value4"]
-    res = engine.search_lookup(tag_key="tag4", tag_value_pattern=".*")
+    res = engine.lookup("sys.cpu.idle", {"tag4": ".*"})
     assert res["totalResults"] == 2
-    assert {r["tag_value"] for r in res["results"]} == {"value4", "other"}
+    assert {v for r in res["results"] for v in r["tags"].values()} == {"value4", "other"}
 
 
 def test_none_aggregator_raw_passthrough(engine):
@@ -433,8 +433,8 @@ def test_meta_ageoff_in_retention(spark, tmp_path_factory):
     now = B + 10 * 86_400_000 + 1000
     eng.run_retention(now_ms=now)
     assert eng.suggest("m", "tagv", tag="host") == ["fresh"]
-    res = eng.search_lookup(tag_key="host", tag_value_pattern=".*")
-    assert {r["tag_value"] for r in res["results"]} == {"fresh"}
+    res = eng.lookup("m", {"host": ".*"})
+    assert {v for r in res["results"] for v in r["tags"].values()} == {"fresh"}
     assert res["totalResults"] == 1
 
 

@@ -1,11 +1,13 @@
 """The driver-resident meta catalog (sources/catalog.py).
 
-``TimelyEngine.suggest`` and the visibility lookups read the catalog;
-``operators.meta.suggest`` over ``TimelyEngine.meta()`` is the Spark
-reference it must equal with no tolerance. Also pinned: the job counts
-(no job without new files or after this engine's own put, one job for
-files another engine wrote), freshness across two engines on one store,
-and concurrent puts and suggests over HTTP against a serial replay.
+``TimelyEngine.suggest``, ``metrics`` and the visibility lookups read
+the catalog; ``operators.meta.suggest`` and ``metrics_dump`` over
+``TimelyEngine.meta()`` are the Spark references they must equal with no
+tolerance. Also pinned: the job counts (no job without new files or
+after this engine's own put, one job for files another engine wrote),
+freshness across two engines on one store, a put racing the meta
+age-off, and concurrent puts and suggests over HTTP against a serial
+replay.
 """
 
 import json
@@ -20,7 +22,7 @@ import pytest
 from timely_spark.api import TimelyEngine
 from timely_spark.fsutil import data_file_lister
 from timely_spark.http_facade import TimelyHttpServer
-from timely_spark.operators.meta import suggest
+from timely_spark.operators.meta import metrics_dump, suggest
 from timely_spark.sources.catalog import MetaCatalog
 
 B = 1_447_767_913_000
@@ -101,6 +103,21 @@ def test_fold_equals_the_spark_fold(engine):
     assert want[("mé.trïc", "rack", "Ω")] == B + 2000
 
 
+def test_metrics_match_the_spark_operator(engine):
+    """``/api/metrics`` from the fold lists each metric's (key, value)
+    pairs in the order ``metrics_dump`` gives their ``key=value``
+    strings; a tagless metric has none."""
+    for ignored in (None, ["rack"], ["host", "host2", "hôst", "rack", "Rack"]):
+        got = [
+            (m["metric"], [f"{t['key']}={t['value']}" for t in m["tags"]])
+            for m in engine.metrics(ignored)
+        ]
+        want = [(r["metric"], r["tags"]) for r in metrics_dump(engine.meta(), ignored).collect()]
+        assert got == want, ignored
+    assert engine.metrics()[0] == {"metric": "Sys.CPU.user", "tags": [{"key": "host", "value": "db01"}]}
+    assert {"metric": "bare", "tags": []} in engine.metrics()
+
+
 def test_tagk_on_a_tagless_metric_is_empty(engine):
     """build_meta keeps a tagless metric as a (metric, null, null) row;
     neither path may suggest the null."""
@@ -125,8 +142,8 @@ def test_reads_run_a_job_only_for_new_files(spark, tmp_path):
     TimelyEngine(spark, store_path=str(tmp_path / "m")).put_lines([f"put a.b {B + 2000} 1.0 host=h3"])
     out, jobs = _jobs(spark, "catalog-new", lambda: eng.suggest("a.b", "tagv", tag="host"))
     assert (out, jobs) == (["h1", "h2", "h3"], 1)
-    # the second put's _record_viz already folded the X file
-    assert _jobs(spark, "catalog-viz", eng._viz_known) == ({"X"}, 0)
+    # the second put's side-write already folded the X file
+    assert _jobs(spark, "catalog-viz", eng.catalog.viz) == ({"X"}, 0)
 
 
 @pytest.mark.parametrize("hot", [False, True], ids=["tier_off", "tier_on"])
@@ -201,6 +218,45 @@ def test_second_engine_writes_are_seen(spark, tmp_path):
     out = a.query(q, auths={"OPS", "SEC"})
     assert [s["dps"] for s in out] == [{str(B + 1000): 5.0}]
     assert out == TimelyEngine(spark, store_path=store).query(q, auths={"OPS", "SEC"})
+
+
+def test_a_put_during_the_meta_age_off_keeps_its_metric(spark, tmp_path, monkeypatch):
+    """A put that runs while ``run_retention`` is between the age-off's
+    read and its swap waits for the swap, so the swap cannot drop the
+    put's ``_meta`` file: the metric stays in suggest on this engine and
+    on a fresh one."""
+    import timely_spark.api as api
+    from timely_spark.sources import catalog
+
+    store = str(tmp_path / "m")
+    eng = TimelyEngine(spark, store_path=store)
+    eng.put_lines([f"put old.m {B} 1.0 host=h1"])
+    assert eng.suggest("", "metrics") == ["old.m"]
+    stored = threading.Event()
+    write_points, swap = api.write_points, catalog.replace_dir
+
+    def write_then_signal(*a, **k):
+        write_points(*a, **k)
+        stored.set()
+
+    putter = threading.Thread(target=eng.put_lines, args=([f"put new.m {B + 1000} 2.0 host=h2"],))
+
+    def put_then_swap(*a):
+        putter.start()
+        assert stored.wait(120)
+        # room for an unguarded side-write to land before the swap; with
+        # turns, the put waits for the swap instead
+        putter.join(timeout=5)
+        swap(*a)
+
+    monkeypatch.setattr(api, "write_points", write_then_signal)
+    monkeypatch.setattr(catalog, "replace_dir", put_then_swap)
+    eng.run_retention(now_ms=B + 2000)
+    putter.join(timeout=120)
+    assert not putter.is_alive()
+    assert eng.suggest("", "metrics") == ["new.m", "old.m"]
+    assert TimelyEngine(spark, store_path=store).suggest("", "metrics") == ["new.m", "old.m"]
+    assert eng.store.read().count() == 2
 
 
 def _get(base: str, params: dict) -> list:

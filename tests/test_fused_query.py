@@ -169,7 +169,7 @@ def _ref_query(eng, request, auths=None, strict=False):
     Returns the series list of each SubQuery."""
     req = QueryRequest.from_dict(request)
     eff = None if auths is ALL_AUTHS else set(auths or ())
-    known = eng._viz_known() if eff else None
+    known = eng.catalog.viz() if eff else None
     pts = eng.points()
     out = []
     for q in req.queries:
@@ -186,7 +186,7 @@ def _ref_query(eng, request, auths=None, strict=False):
             )
             ts = r["bucket_ts"] if req.ms_resolution else r["bucket_ts"] // 1000
             s["dps"][str(ts)] = r["value"]
-        if strict and not series and not eng._catalog_has_tags(q):
+        if strict and not series and not eng.catalog.has_tags(q):
             raise NoMatchingTagsError("No matching tags")
         out.append(list(series.values()))
     return out
@@ -609,7 +609,7 @@ def test_admission_rejections_keep_the_seam(engines):
 def test_strict_probe_is_one_job(spark, engines, sub, want):
     eng = engines["plain"]
     q = QueryRequest.from_dict({"start": 1, "end": 2, "queries": [sub]}).queries[0]
-    got, jobs = _jobs(spark, f"probe-{sub}", lambda: eng._catalog_has_tags(q))
+    got, jobs = _jobs(spark, f"probe-{sub}", lambda: eng.catalog.has_tags(q))
     assert got is want
     assert jobs == 1
 
@@ -618,5 +618,5 @@ def test_strict_probe_tsuid_needs_no_job(spark, engines):
     q = QueryRequest.from_dict(
         {"start": 1, "end": 2, "queries": [{"metric": "", "tsuids": ["ab"]}]}
     ).queries[0]
-    got, jobs = _jobs(spark, "probe-tsuid", lambda: engines["plain"]._catalog_has_tags(q))
+    got, jobs = _jobs(spark, "probe-tsuid", lambda: engines["plain"].catalog.has_tags(q))
     assert got is True and jobs == 0

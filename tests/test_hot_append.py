@@ -199,6 +199,7 @@ def test_a_put_failing_after_its_store_write_keeps_parity(spark, tmp_path, monke
     queries past the cut miss its rows. A put that raises after its store
     write (a side write, the append) drops the window, and the next put
     rebuilds it from the store."""
+    from timely_spark.sources.catalog import MetaCatalog
     from timely_spark.sources.hot_cache import HotCache
 
     off = TimelyEngine(spark, store_path=str(tmp_path / "off"))
@@ -217,12 +218,12 @@ def test_a_put_failing_after_its_store_write_keeps_parity(spark, tmp_path, monke
 
     try:
         m = 10
-        for target, name in ((TimelyEngine, "_record_meta"), (HotCache, "append")):
+        for target, name in ((MetaCatalog, "record"), (HotCache, "append")):
             for eng in (off, on):
                 eng.put_json(_minute(m))  # appends to the rebuilt window
             assert on._hot._window.frame is not None
             monkeypatch.setattr(target, name, boom)
-            for eng in (off, on) if name == "_record_meta" else (on,):
+            for eng in (off, on) if name == "record" else (on,):
                 with pytest.raises(RuntimeError, match="injected"):
                     eng.put_json(_minute(m + 1))
             monkeypatch.undo()

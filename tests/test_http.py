@@ -326,14 +326,20 @@ def test_metrics_json(spark, tmp_path):
             f"sys.cpu.idle {TEST_TIME + 1} 1.0 tag3=value3 tag4=value4",
             f"sys.cpu.idle {TEST_TIME + 2} 1.0 tag3=value3 tag4=value4 viz=(a|b|c)",
             "zzzz 1234567892 1.0 host=localhost",
+            "tagless 1234567893 1.0",
         )
+        # a tag key holding an escaped '=' (line protocol ``e\=q=x``)
+        srv.engine.put_lines([r"put escaped 1234567894 1.0 e\=q=x"])
         status, body = get(srv.base_url + "/api/metrics", accept="application/json")
         assert status == 200
+        raw = {m["metric"]: m["tags"] for m in json.loads(body)["metrics"]}
+        # the reference holds no tag rows for a tagless metric
+        assert raw["tagless"] == []
+        assert raw["escaped"] == [{"key": "e=q", "value": "x"}]
         metrics = {
-            m["metric"]: {(t["key"], t["value"]) for t in m["tags"]}
-            for m in json.loads(body)["metrics"]
+            m: {(t["key"], t["value"]) for t in tags} for m, tags in raw.items()
         }
-        assert len(metrics) == 3
+        assert len(metrics) == 5
         assert metrics["sys.cpu.user"] == {("tag1", "value1"), ("tag2", "value2")}
         # viz is carried in the viz column, never as a tag
         assert metrics["sys.cpu.idle"] == {("tag3", "value3"), ("tag4", "value4")}

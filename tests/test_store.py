@@ -111,7 +111,7 @@ def test_compaction_merges_small_files(spark, tmp_path):
 
 def test_compact_meta_folds_deltas(spark, tmp_path):
     from timely_spark.operators.meta import build_meta
-    from timely_spark.sources.store import compact_meta
+    from timely_spark.sources.catalog import MetaCatalog
 
     meta_path = str(tmp_path / "meta")
     b = 1_447_767_913_000
@@ -120,7 +120,7 @@ def test_compact_meta_folds_deltas(spark, tmp_path):
         pts = parse_lines_df(spark.createDataFrame([(l,) for l in lines], ["value"]))
         build_meta(pts).write.mode("append").parquet(meta_path)
     assert spark.read.parquet(meta_path).count() == 3
-    folded = compact_meta(spark, meta_path).collect()
+    folded = MetaCatalog(spark, meta_path, str(tmp_path / "viz")).meta().collect()
     assert len(folded) == 1
     assert folded[0]["last_seen"] == b + 2000  # max last_seen survives
 

@@ -77,13 +77,13 @@ def test_engine_viz_catalog_sidecar(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("viz_catalog")
     eng = TimelyEngine(spark, store_path=str(root / "m"), default_visibility="X")
     eng.put_lines([f"put m {b} 1.0 a=b", f"put m {b + 1000} 2.0 a=b viz=(Y&Z)"])
-    assert eng._viz_known() == {"X", "(Y&Z)"}
+    assert eng.catalog.viz() == {"X", "(Y&Z)"}
     # a fresh engine on the same store reloads the catalog from disk
     eng2 = TimelyEngine(spark, store_path=str(root / "m"))
-    assert eng2._viz_known() == {"X", "(Y&Z)"}
+    assert eng2.catalog.viz() == {"X", "(Y&Z)"}
     # incremental ingest folds in only new expressions
     eng.put_lines([f"put m {b + 2000} 3.0 a=b viz=Q"])
-    assert eng._viz_known() == {"X", "(Y&Z)", "Q"}
+    assert eng.catalog.viz() == {"X", "(Y&Z)", "Q"}
     q = {
         "start": b - 1000,
         "end": b + 60_000,

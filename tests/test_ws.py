@@ -11,7 +11,9 @@ import os
 import socket
 import struct
 import time
+import urllib.request
 
+from timely_spark.http_facade import TimelyHttpServer
 from timely_spark.sources.lineprotocol import parse_lines_df
 from timely_spark.sources.store import write_points
 from timely_spark.ws_facade import _WS_GUID, TimelyWebSocketServer, read_frame
@@ -185,6 +187,22 @@ def test_websocket_full_api_ops(spark, tmp_path):
         lk = recv_json()
         assert lk["type"] == "LOOKUP" and lk["totalResults"] == 1
         assert lk["results"] == [{"tags": {"host": "h1"}}]
+        # the same answer as HTTP, apart from the request's own time
+        http = TimelyHttpServer(srv.engine).start()
+        try:
+            req = urllib.request.Request(
+                http.base_url + "/api/search/lookup",
+                data=json.dumps({"metric": "sys.cpu.user", "tags": {"host": ".*"}}).encode(),
+                headers={"Content-Type": "application/json"},
+            )
+            with urllib.request.urlopen(req, timeout=60) as r:
+                over_http = json.loads(r.read())
+        finally:
+            http.stop()
+        assert {k: v for k, v in lk.items() if k != "time"} == {
+            k: v for k, v in over_http.items() if k != "time"
+        }
+        assert "time" in lk
 
         send({"operation": "metrics"})
         mets = recv_json()["metrics"]

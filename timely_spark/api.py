@@ -2,7 +2,7 @@
 
 Binds the whole engine together behind the reference's API surface so a
 user of the reference can switch: ``put`` (ingest), ``query`` (the
-OpenTSDB-style read, POST /api/query), ``suggest``, ``search_lookup``,
+OpenTSDB-style read, POST /api/query), ``suggest``, ``lookup``,
 ``metrics``, ``aggregators``, ``version``, ``cache_status``, plus the
 maintenance entry points (retention, compaction) and subscriptions.
 
@@ -13,40 +13,26 @@ classes under common/src/main/java/timely/api/request/.
 from __future__ import annotations
 
 import json
-import uuid
+import time
 from contextlib import nullcontext
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import pins
-from .fsutil import write_parquet_rows
-from .model import META_SCHEMA, METRIC_SCHEMA, sql_literal
+from .model import METRIC_SCHEMA, sql_literal
 from .operators.exclusions import apply_exclusions
-from .operators.meta import build_meta, metrics_dump, search_lookup
+from .operators.meta import search_lookup_or
 from .operators.retention import ageoff_filter
-from .parse import parse_put_line
 from .plans.builder import query_start, run_query
 from .plans.request import QueryRequest
 from .plans.response import to_query_response
 from .sources.catalog import MetaCatalog
 from .sources.lineprotocol import parse_lines_df
-from .sources.store import (
-    PointStore,
-    compact_meta_with_cutoff,
-    read_points,
-    write_group_count,
-    write_points,
-)
+from .sources.store import PointStore, read_points, write_group_count, write_points
 
 VERSION = "0.0.3"  # parity with VersionRequest.java
-
-# the columns of the _meta and _viz side-write files; a tagless metric's
-# meta row carries a null tag key and value
-META_FILE_SCHEMA = T.StructType([T.StructField(f.name, f.dataType) for f in META_SCHEMA.fields])
-VIZ_FILE_SCHEMA = T.StructType([T.StructField("viz", T.StringType())])
 
 
 class _AllAuths:
@@ -106,7 +92,7 @@ class TimelyEngine:
         # evaluate visibility against it instead of a per-query distinct
         # scan over the point store
         self._viz_path = self.meta_path.rstrip("/") + "_viz"
-        # driver-resident copy of both side-writes, kept fresh by listing
+        # the catalog tier: writes, reads and ages off both side-writes
         self.catalog = MetaCatalog(spark, self.meta_path, self._viz_path)
 
     # ------------------------------------------------------------- ingest
@@ -181,8 +167,9 @@ class TimelyEngine:
                 token = hot.token() if hot is not None else None
                 write_points(pts, self.store, n_groups=stats["groups"])
                 try:
-                    self._record_meta(pts)
-                    self._record_viz(set(stats["viz"]))
+                    # before the append: a merge inside it can release
+                    # the batch pin that the meta collect reads
+                    self.catalog.record(pts, set(stats["viz"]))
                     if token is not None:
                         # cache append analogue (DataStoreCache.store:635-644)
                         kept = hot.append(self.store.like_read(pts), stats["hi"], n, token)
@@ -200,22 +187,6 @@ class TimelyEngine:
             if not kept:
                 pins.unpin(pts)
         return n
-
-    def _record_meta(self, pts: DataFrame) -> None:
-        """Meta side-write (DataStore.java:415-433): the batch's
-        ``build_meta`` rows, collected once, written as one ``_meta``
-        file and folded into the catalog, so the next suggest reads
-        nothing back."""
-        rows = build_meta(pts).collect()
-        self.catalog.add_meta(self._write_side_file(self.meta_path, META_FILE_SCHEMA, rows), rows)
-
-    def _write_side_file(self, directory: str, schema: T.StructType, rows: list) -> str:
-        """Write ``rows`` as one Parquet file in ``directory`` under a
-        name chosen here (``fsutil.write_parquet_rows``), and return it as
-        a listing names it. Puts running side by side write distinct
-        files."""
-        name = f"{directory.rstrip('/')}/put-{uuid.uuid4().hex}.parquet"
-        return write_parquet_rows(self.spark, name, schema, rows)
 
     # ----------------------------------------------------------- hot tier
 
@@ -272,8 +243,6 @@ class TimelyEngine:
         else:
             df = read_points(self.spark, self.store)
         if self.default_ttl_ms is not None:
-            import time
-
             if dynamic_now:
                 now = F.unix_millis(F.current_timestamp())
             else:
@@ -286,16 +255,9 @@ class TimelyEngine:
             )
         return df
 
-    def _meta_rows(self) -> DataFrame:
-        """The catalog's appended rows, read with their known schema (no
-        schema-inference job per read)."""
-        return self.spark.read.schema(META_SCHEMA).parquet(self.meta_path)
-
     def meta(self) -> DataFrame:
-        m = self._meta_rows()
-        return m.groupBy("metric", "tag_key", "tag_value").agg(
-            F.max("last_seen").alias("last_seen")
-        )
+        """The meta catalog as a frame (``MetaCatalog.meta``)."""
+        return self.catalog.meta()
 
     def register_views(self, prefix: str = "timely", auths=None) -> list[str]:
         """Expose the lake to plain ``spark.sql``: temp views
@@ -312,7 +274,7 @@ class TimelyEngine:
         names = [f"{prefix}_points", f"{prefix}_meta"]
         pts = self.points(dynamic_now=True)
         if auths is not ALL_AUTHS:  # the explicit bypass, like query()
-            known = self._viz_known()
+            known = self.catalog.viz()
             pts = viz_filter(
                 pts,
                 auths or set(),
@@ -502,60 +464,6 @@ class TimelyEngine:
             outs.append(combine_series(ds, keys, q.aggregator))
         return outs
 
-    def _record_viz(self, batch: set[str]) -> None:
-        """Append the batch's viz expressions that the catalog does not
-        hold yet to the ``_viz`` sidecar (queries then never scan the
-        store for them) as one file, folded into this engine's catalog
-        at once. Any engine on this store sees the new file at its next
-        catalog read."""
-        known = self._viz_known()
-        new = batch - (known or set())
-        if new or known is None:
-            # the write also *establishes* the catalog on first ingest, so
-            # an all-unlabeled store is "known empty", not "unknown"
-            rows = [(e,) for e in sorted(new)]
-            self.catalog.add_viz(self._write_side_file(self._viz_path, VIZ_FILE_SCHEMA, rows), rows)
-
-    def _viz_known(self) -> frozenset[str] | None:
-        """The distinct viz expressions from the driver-resident catalog
-        (``MetaCatalog.viz``: fresh as of this call's listing of
-        ``_viz``, so expressions another engine appended are included),
-        or None when this store has no sidecar (populated outside the
-        engine) — callers then fall back to viz_filter's distinct scan."""
-        return self.catalog.viz()
-
-    def _catalog_has_tags(self, q) -> bool:
-        """True iff the meta catalog holds a series matching the SubQuery's
-        metric + tag predicates. The reference's "No matching tags" check
-        consults the META table, not the query result (DataStore.java:
-        938-941): a matching-tags query over an empty time window is a
-        valid 200/empty response, never a 400. Runs only on the
-        strict+empty-result path, against the tiny meta table, as ONE
-        Spark job: a global aggregate over the metric's catalog rows
-        with one ``bool_or`` per tag predicate, on a single partition
-        (no exchange) and with the schema given (no inference job)."""
-        from .parse import is_tag_regex
-
-        if q.tsuids:
-            return True  # tsuid SubQueries name series directly, no tag check
-        checks = ["count(1) > 0"]  # the metric is known
-        for k, v in {**q.tags, **q.filters}.items():
-            cond = f"tag_key = {sql_literal(k)}"
-            if v not in ("*", ".*"):
-                if is_tag_regex(v):
-                    cond += f" AND tag_value RLIKE {sql_literal(f'^(?:{v})$')}"
-                else:
-                    cond += f" AND tag_value = {sql_literal(v)}"
-            checks.append(f"coalesce(bool_or({cond}), false)")
-        row = (
-            self._meta_rows()
-            .filter(f"metric = {sql_literal(q.metric)}")
-            .coalesce(1)
-            .selectExpr(" AND ".join(f"({c})" for c in checks))
-            .collect()[0]
-        )
-        return bool(row[0])
-
     def query_frames(self, request: dict, auths=None) -> list[DataFrame]:
         """One result DataFrame per SubQuery BEFORE response shaping —
         the Spark-native entry (same pipeline as :meth:`query`: request
@@ -569,7 +477,7 @@ class TimelyEngine:
 
     def _frames(self, req: QueryRequest, auths) -> list[DataFrame]:
         eff = None if auths is ALL_AUTHS else set(auths or ())
-        known = self._viz_known() if eff else None
+        known = self.catalog.viz() if eff else None
         viz_exprs = sorted(known) if known is not None else None
         # the tier is picked here, from the earliest row any SubQuery reads
         since = min((query_start(q, req.start) for q in req.queries), default=req.start)
@@ -581,7 +489,7 @@ class TimelyEngine:
         per SubQuery, on the ones that came back empty."""
 
         def no_rows(i: int) -> None:
-            if strict and not self._catalog_has_tags(req.queries[i]):
+            if strict and not self.catalog.has_tags(req.queries[i]):
                 raise NoMatchingTagsError("No matching tags")
 
         # the lease keeps the window's pins alive until the collect is done
@@ -599,18 +507,32 @@ class TimelyEngine:
         only those files."""
         return self.catalog.suggest(q, kind, max_results, tag=tag)
 
-    def search_lookup(self, metric: str | None = None, tag_key: str | None = None,
-                      tag_value_pattern: str | None = None, limit: int = 25) -> dict:
-        ordered, total = search_lookup(
-            self.meta(), metric, tag_key, tag_value_pattern, limit
-        )
+    def lookup(self, metric: str, tags: dict[str, str] | None = None, limit: int = 25) -> dict:
+        """/api/search/lookup: the SearchLookupResponse (field order per
+        @JsonPropertyOrder) of the catalog entries of ``metric`` whose
+        value matches the anchored pattern given for their key
+        (``operators.meta.search_lookup_or``); ``time`` is this call's
+        ms."""
+        t0 = time.time()
+        tags = dict(tags or {})
+        ordered, total = search_lookup_or(self.meta(), metric, tags, limit)
+        results = [{"tags": {r["tag_key"]: r["tag_value"]}} for r in ordered.collect()]
+        n = total.collect()[0]["total_results"]
         return {
-            "results": [r.asDict() for r in ordered.collect()],
-            "totalResults": total.collect()[0]["total_results"],
+            "type": "LOOKUP",
+            "metric": metric,
+            "tags": tags,
+            "limit": limit,
+            "time": int((time.time() - t0) * 1000),
+            "totalResults": n,
+            "startIndex": 0,
+            "results": results,
         }
 
     def metrics(self, ignored_tags: list[str] | None = None) -> list[dict]:
-        return [r.asDict() for r in metrics_dump(self.meta(), ignored_tags).collect()]
+        """/api/metrics from the catalog (``MetaCatalog.metrics``): each
+        metric with its ``{"key", "value"}`` tag pairs."""
+        return self.catalog.metrics(ignored_tags)
 
     @staticmethod
     def aggregators() -> list[str]:
@@ -644,7 +566,7 @@ class TimelyEngine:
         results correct between maintenance runs."""
         ttl = self.default_ttl_ms or 7 * 86_400_000
         doomed = self.store.expire(now_ms, self.ttls, ttl)
-        compact_meta_with_cutoff(self.spark, self.meta_path, now_ms, self.ttls, ttl)
+        self.catalog.age_off(now_ms, self.ttls, ttl)
         return doomed
 
     def compact(self) -> None:

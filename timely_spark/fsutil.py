@@ -17,14 +17,14 @@ FS's semantics — while costing zero Spark jobs on either side.
 ``json.dumps`` emits shortest-round-trip reprs, so doubles (codebooks,
 centroids, thresholds) survive byte-exactly.
 
-Readers fall back to the pre-r12 one-row-parquet layout so an index
-saved by older code still loads; writers drop a stale parquet sidecar
-dir at the same path so the two layouts can never disagree.
+Writers to one path in this process take turns through
+:func:`write_lock`; directory swaps go through :func:`replace_dir`.
 """
 
 from __future__ import annotations
 
 import json
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -133,6 +133,21 @@ def sidecar_delete(spark: SparkSession, path: str) -> None:
     partition); a missing path is a no-op."""
     fs, p = _fs_path(spark, path)
     fs.delete(p, True)
+
+
+# Spark's file committer keeps one ``_temporary`` directory per output
+# path and a job's commit deletes it, so two appends to one store at once
+# fail, and a swap must not drop a file written after its read: writes
+# to one path (or table) from this process take turns
+_WRITE_LOCKS: dict[str, threading.RLock] = {}
+_WRITE_LOCKS_GUARD = threading.Lock()
+
+
+def write_lock(key: str) -> threading.RLock:
+    """The process-wide lock that writers to ``key`` (a path without its
+    trailing ``/``, or a table name) hold while they write or swap."""
+    with _WRITE_LOCKS_GUARD:
+        return _WRITE_LOCKS.setdefault(key, threading.RLock())
 
 
 def replace_dir(spark: SparkSession, tmp: str, path: str) -> None:

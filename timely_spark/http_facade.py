@@ -39,7 +39,6 @@ from __future__ import annotations
 import json
 import logging
 import threading
-import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, quote, unquote, urlparse
 
@@ -606,20 +605,14 @@ class TimelyHttpServer:
                 m = params.get("m", "")
                 limit = int(params.get("limit", 25))
                 metric, tags = _parse_metric_braces(m)
-                self._send(
-                    200, _compact(server._lookup_response(m, metric, tags, limit)), JSON_TYPE
-                )
+                self._send(200, _compact(server.engine.lookup(metric, tags, limit)), JSON_TYPE)
 
             def _post_lookup(self, body: dict) -> None:
                 self._request_auths()
                 metric = body.get("metric", "")
                 tags = dict(body.get("tags", {}))
                 limit = int(body.get("limit", 25))
-                self._send(
-                    200,
-                    _compact(server._lookup_response(metric, metric, tags, limit)),
-                    JSON_TYPE,
-                )
+                self._send(200, _compact(server.engine.lookup(metric, tags, limit)), JSON_TYPE)
 
             def _metrics(self, params: dict[str, str]) -> None:
                 self._request_auths()  # MetricsRequest is authenticated
@@ -628,19 +621,7 @@ class TimelyHttpServer:
                     ignored_tags=server.metrics_ignored_tags or None
                 )
                 if JSON_TYPE in accept:
-                    out = {
-                        "metrics": [
-                            {
-                                "metric": r["metric"],
-                                "tags": [
-                                    dict(zip(("key", "value"), kv.split("=", 1)))
-                                    for kv in r["tags"]
-                                ],
-                            }
-                            for r in rows
-                        ]
-                    }
-                    self._send(200, _compact(out), JSON_TYPE)
+                    self._send(200, _compact({"metrics": rows}), JSON_TYPE)
                     return
                 # HTML branch (HttpMetricsRequestHandler.generateHtml)
                 body = [
@@ -649,9 +630,8 @@ class TimelyHttpServer:
                     "<tr><th>Metric</th><th>Available Tags</th></tr>",
                 ]
                 for r in rows:
-                    body.append(
-                        f"<tr><td>{r['metric']}</td><td>{' '.join(r['tags'])}</td></tr>"
-                    )
+                    tags = " ".join(f"{t['key']}={t['value']}" for t in r["tags"])
+                    body.append(f"<tr><td>{r['metric']}</td><td>{tags}</td></tr>")
                 body.append("</table></body></html>")
                 self._send(200, "\n".join(body).encode("utf-8"), HTML_TYPE)
 
@@ -667,29 +647,3 @@ class TimelyHttpServer:
                 self._send(200, server.engine.version().encode("utf-8"), TEXT_TYPE)
 
         return Handler
-
-    # -------------------------------------------------------------- shapes
-
-    def _lookup_response(
-        self, query: str, metric: str, tags: dict[str, str], limit: int
-    ) -> dict:
-        """SearchLookupResponse JSON (field order per @JsonPropertyOrder:
-        type, metric, tags, limit, time, totalResults, results)."""
-        from .operators.meta import search_lookup_or
-
-        t0 = time.time()
-        ordered, total = search_lookup_or(self.engine.meta(), metric, tags, limit)
-        results = [
-            {"tags": {r["tag_key"]: r["tag_value"]}} for r in ordered.collect()
-        ]
-        n = total.collect()[0]["total_results"]
-        return {
-            "type": "LOOKUP",
-            "metric": query,
-            "tags": tags,
-            "limit": limit,
-            "time": int((time.time() - t0) * 1000),
-            "totalResults": n,
-            "startIndex": 0,
-            "results": results,
-        }

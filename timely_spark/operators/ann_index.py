@@ -187,7 +187,7 @@ class IvfPqIndex:
         Spark job on each side of the lifecycle for a handful of
         parameters; the JSON file keeps the same shared-FS semantics
         at zero jobs, see ``fsutil``)."""
-        from ..fsutil import sidecar_delete, sidecar_write_json
+        from ..fsutil import sidecar_write_json
 
         self.codes.write.mode("overwrite").parquet(path + "/codes")
         sidecar_write_json(
@@ -206,21 +206,19 @@ class IvfPqIndex:
                 "centroids": [list(map(float, c)) for c in self.centroids],
             },
         )
-        sidecar_delete(self.spark, path + "/model")  # pre-r12 layout
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "IvfPqIndex":
         """Re-open a saved index: the codes table stays a lazy Parquet
         scan (corpus-sized data never touches the driver); the model
-        sidecar is a driver-side JSON read (pre-r12 one-row-parquet
-        sidecars still load via the fallback)."""
+        sidecar is a driver-side JSON read."""
         import numpy as np
 
         from ..fsutil import sidecar_read_json
 
         row = sidecar_read_json(spark, path + "/model.json")
-        if row is None:  # pre-r12 layout
-            row = spark.read.parquet(path + "/model").collect()[0]
+        if row is None:
+            raise FileNotFoundError(f"Path does not exist: {path}/model.json")
         books = np.array(row["codebooks"], dtype=np.float64)
         C = np.array(row["centroids"], dtype=np.float64)
         codes = spark.read.parquet(path + "/codes")
@@ -478,7 +476,7 @@ class DeconIndex:
         reproduces the nothing-can-contaminate behavior."""
         import json as _json
 
-        from ..fsutil import sidecar_delete, sidecar_write_json
+        from ..fsutil import sidecar_write_json
 
         if not self.empty:
             self.cells.write.mode("overwrite").parquet(path + "/cells")
@@ -499,7 +497,6 @@ class DeconIndex:
                 "radii": _json.dumps(self.radii),
             },
         )
-        sidecar_delete(self.spark, path + "/model")  # pre-r12 layout
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "DeconIndex":
@@ -510,8 +507,8 @@ class DeconIndex:
         from ..fsutil import sidecar_read_json
 
         row = sidecar_read_json(spark, path + "/model.json")
-        if row is None:  # pre-r12 layout
-            row = spark.read.parquet(path + "/model").collect()[0]
+        if row is None:
+            raise FileNotFoundError(f"Path does not exist: {path}/model.json")
         if row["ncells"] == 0:
             return cls(
                 spark, None, {}, None, row["threshold"], row["dim"],
@@ -697,12 +694,11 @@ class MinHashIndex:
         (Parquet, overwrite); params -> ``path/model.json``
         (driver-side JSON sidecar via the Hadoop FS API — r12 zero-job
         sidecar, see ``fsutil``)."""
-        from ..fsutil import sidecar_delete, sidecar_write_json
+        from ..fsutil import sidecar_write_json
 
         self.bands_df.write.mode("overwrite").parquet(path + "/bands")
         self.shingles.write.mode("overwrite").parquet(path + "/shingles")
         sidecar_write_json(self.spark, path + "/model.json", self._params())
-        sidecar_delete(self.spark, path + "/model")  # pre-r12 layout
 
     def _params(self) -> dict:
         return {
@@ -716,32 +712,13 @@ class MinHashIndex:
 
     @classmethod
     def _read_params(cls, spark: SparkSession, path: str) -> dict | None:
-        """The model sidecar as a dict (JSON first, pre-r12 one-row
-        parquet as fallback); ``None`` when neither exists — shared by
-        :meth:`load` and the streaming history-dedup loop's per-batch
-        params check (which this turns from a Spark job into a driver
-        file read)."""
+        """The model sidecar as a dict; ``None`` when it does not exist —
+        shared by :meth:`load` and the streaming history-dedup loop's
+        per-batch params check (which this turns from a Spark job into a
+        driver file read)."""
         from ..fsutil import sidecar_read_json
 
-        row = sidecar_read_json(spark, path + "/model.json")
-        if row is not None:
-            return row
-        from ..session import error_condition
-
-        try:
-            prow = spark.read.parquet(path + "/model").collect()[0]
-        except Exception as e:  # missing either way -> None
-            first = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            msg = str(e)
-            if not (
-                error_condition(e).startswith(first)
-                or "PATH_NOT_FOUND" in msg
-                or "Path does not exist" in msg
-                or "UNABLE_TO_INFER_SCHEMA" in msg
-            ):
-                raise
-            return None
-        return {k: prow[k] for k in prow.__fields__}
+        return sidecar_read_json(spark, path + "/model.json")
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "MinHashIndex":

@@ -13,10 +13,13 @@ Reference: the meta table holds ``m:<metric>``, ``t:<metric>/tagKey``,
 Spark: the catalog is a tiny derived DataFrame
 ``(metric, tag_key, tag_value, last_seen)`` = explode of the point
 stream's tags with max(ts). At 100 TB it is maintained incrementally by
-the ingest path (sources/store.py foreachBatch upsert), never recomputed
-from raw points; it is small enough to broadcast into any planning join.
-The engine serves suggest from a driver-resident fold of the same rows
-(sources/catalog.py); lookup and metrics stay on these operators.
+the ingest path, never recomputed from raw points; it is small enough to
+broadcast into any planning join. These are the Spark-native forms. The
+engine's catalog tier, ``sources/catalog.MetaCatalog``, writes each
+put's :func:`build_meta` rows, ages them off and answers suggest and
+metrics from a driver-resident fold of them (the tests hold it equal to
+:func:`suggest` and :func:`metrics_dump`); ``TimelyEngine.lookup`` runs
+:func:`search_lookup_or` over its frame.
 """
 
 from __future__ import annotations
@@ -153,13 +156,15 @@ def metrics_dump(meta: DataFrame, ignored_tags: list[str] | None = None) -> Data
     Ignored tag KEYS drop from the lists but never drop the metric: the
     reference (MetricsResponse.generateJson/generateHtml) reports every
     known metric and only omits the ignored tags, so a metric whose tags
-    are ALL ignored still appears with ``tags=[]``. collect_set skips
-    NULLs, so the conditional inside the aggregate does exactly that
-    without a second scan or join-back.
+    are ALL ignored still appears with ``tags=[]``, like a tagless one
+    (its ``build_meta`` row has a null key). collect_set skips NULLs, so
+    the conditional inside the aggregate does exactly that without a
+    second scan or join-back.
     """
-    kv = F.concat_ws("=", "tag_key", "tag_value")
+    keep = F.col("tag_key").isNotNull()
     if ignored_tags:
-        kv = F.when(~F.col("tag_key").isin(ignored_tags), kv)
+        keep = keep & ~F.col("tag_key").isin(ignored_tags)
+    kv = F.when(keep, F.concat_ws("=", "tag_key", "tag_value"))
     return (
         meta.groupBy("metric")
         .agg(F.array_sort(F.collect_set(kv)).alias("tags"))

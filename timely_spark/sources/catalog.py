@@ -1,40 +1,63 @@
-"""Driver-resident meta catalog: the suggest and visibility lookups
-served from memory, refreshed by listing instead of Spark jobs.
+"""The meta catalog tier: the one module that knows its files.
 
-The reference answers ``/api/suggest`` from ``MetaCache``, an in-process
-copy of the meta table (MetaCache.java:1-144). Here the engine's two
-append-only side-write directories play the meta table:
+The reference keeps its meta table behind ``DataStore``: every
+``store()`` writes it (DataStore.java:415-433), ``MetaAgeOffIterator``
+ages it off, suggest and lookup read it, and ``MetaCache``
+(MetaCache.java:1-144) answers suggest from memory. Here two
+append-only side-write directories beside the point store play the meta
+table, and :class:`MetaCatalog` alone writes, reads, folds and swaps
+them:
 
-- ``_meta``: ``(metric, tag_key, tag_value, last_seen)`` rows, one or
-  more Parquet files per put, folded to ``max(last_seen)`` per key;
+- ``_meta``: ``(metric, tag_key, tag_value, last_seen)`` rows, one file
+  per put (more after an age-off), folded to ``max(last_seen)`` per key;
 - ``_viz``: ``viz string`` rows, the distinct visibility expressions.
 
-Each read lists the directory through the Hadoop FileSystem API
+Writes. A put hands :meth:`MetaCatalog.record` its batch: the batch's
+``build_meta`` rows become one ``_meta`` file and the viz expressions the
+catalog does not hold yet one ``_viz`` file, each written from the
+driver under a name chosen here (``fsutil.write_parquet_rows``) and
+folded into memory at once, so the first read after the put runs no
+Spark job.
+
+Reads. Each read lists the directory through the Hadoop FileSystem API
 (``fsutil.data_file_lister``: ``file:``, ``hdfs://``, ``s3a://``) and
 reads, in one Spark job with the known schema, only the files it has
 not folded yet: the pattern of Structured Streaming's file source. An
 unchanged listing runs no job. A folded file that is gone from the
-listing means retention or compaction rewrote the directory, so the
-fold starts again from the files present.
+listing means the age-off rewrote the directory, so the fold starts
+again from the files present. :meth:`MetaCatalog.meta` is the same rows
+as a Spark frame, which lookup and the strict tag probe read.
 
-A put hands the catalog the rows of the ``_meta`` (and ``_viz``) file it
-just wrote, under the name it gave that file (``add_meta``,
-``add_viz``), so the first read after it lists the file as folded and
-runs no job.
+Age-off. :meth:`MetaCatalog.age_off` rewrites ``_meta`` with the entries
+seen within their metric's TTL and swaps it in (``fsutil.replace_dir``).
 
-Folding holds one lock; readers take the current fold, which is never
-mutated after it is published.
+Turns. Within one process, the side-writes, the age-off and every fold
+that reads new files take turns per directory (``fsutil.write_lock``,
+the registry ``PointStore`` writes use), so a put never lands a file
+that a swap then drops, and a fold never lists a file that a swap moves
+away. A read whose listing has not changed takes no lock: it returns the
+published fold, which is never mutated.
 """
 
 from __future__ import annotations
 
-import threading
+import uuid
 from typing import NamedTuple
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..fsutil import data_file_lister
-from ..model import META_SCHEMA
+from ..fsutil import data_file_lister, path_exists, replace_dir, write_lock, write_parquet_rows
+from ..model import META_SCHEMA, sql_literal
+from ..operators.meta import build_meta
+from ..operators.retention import ttl_for_metric
+from ..parse import is_tag_regex
+
+# the columns of the side-write files; a tagless metric's meta row
+# carries a null tag key and value
+_META_COLUMNS = T.StructType([T.StructField(f.name, f.dataType) for f in META_SCHEMA.fields])
+_VIZ_COLUMNS = T.StructType([T.StructField("viz", T.StringType())])
 
 
 class _MetaIndex(NamedTuple):
@@ -79,32 +102,32 @@ def _fold_viz(prev: frozenset | None, rows) -> frozenset:
 
 class _FoldedDir:
     """One side-write directory folded on the driver. ``fold(prev,
-    rows)`` takes ``prev=None`` as the empty fold."""
+    rows)`` takes ``prev=None`` as the empty fold; ``lock`` is the
+    directory's turn."""
 
-    def __init__(self, spark: SparkSession, path: str, schema, fold, lock):
+    def __init__(self, spark: SparkSession, path: str, schema: T.StructType, fold):
         self.spark = spark
+        self.path = path
+        self.lock = write_lock(path.rstrip("/"))
         self._list = data_file_lister(spark, path)
         self._schema = schema
         self._fold = fold
-        self._lock = lock
         self._state: tuple = (None, None)  # (files folded, fold); files None before the first read
 
     def read(self):
         """The fold, brought up to the directory's listing; ``None``
         while the directory does not exist."""
-        files = self._list()
-        if files is None:
-            return None
         done, value = self._state
-        if files == done:
+        if self._list() == done:
             return value
-        with self._lock:
-            # list again under the lock: another reader may have folded a
-            # newer listing meanwhile
+        with self.lock:
+            # list again in turn: a swap or another reader may have
+            # changed the directory or the fold meanwhile
             files = self._list()
-            if files is None:
-                return None
             done, value = self._state
+            if files is None:
+                self._state = None, None
+                return None
             if done is None or not done <= files:
                 # first read, or a folded file is gone: fold from scratch
                 done, value = frozenset(), None
@@ -113,24 +136,77 @@ class _FoldedDir:
             self._state = files, self._fold(value, rows)
             return self._state[1]
 
-    def add(self, path: str, rows) -> None:
-        """Fold ``rows``, the contents of file ``path`` that this process
-        just wrote, without reading the file back. Before the first read
-        there is no fold to extend: that read lists and folds everything."""
-        with self._lock:
+    def write(self, rows) -> None:
+        """Write ``rows`` as one new file and fold them without reading
+        the file back. Before the first read there is no fold to extend:
+        that read lists and folds everything."""
+        name = f"{self.path.rstrip('/')}/put-{uuid.uuid4().hex}.parquet"
+        with self.lock:
+            path = write_parquet_rows(self.spark, name, self._schema, rows)
             done, value = self._state
             if done is not None:
                 self._state = done | {path}, self._fold(value, rows)
 
 
 class MetaCatalog:
-    """The engine's in-memory copy of its ``_meta`` and ``_viz``
-    side-write directories (see the module docstring)."""
+    """The engine's meta catalog tier: its ``_meta`` and ``_viz``
+    side-write directories and their in-memory fold (see the module
+    docstring)."""
 
     def __init__(self, spark: SparkSession, meta_path: str, viz_path: str):
-        lock = threading.Lock()
-        self._meta = _FoldedDir(spark, meta_path, META_SCHEMA, _fold_meta, lock)
-        self._viz = _FoldedDir(spark, viz_path, "viz string", _fold_viz, lock)
+        self.spark = spark
+        self._meta = _FoldedDir(spark, meta_path, _META_COLUMNS, _fold_meta)
+        self._viz = _FoldedDir(spark, viz_path, _VIZ_COLUMNS, _fold_viz)
+
+    # ------------------------------------------------------------- writes
+
+    def record(self, points: DataFrame, viz: set[str]) -> None:
+        """A put's side-writes (DataStore.java:415-433): the batch's
+        ``build_meta`` rows, collected once, as one ``_meta`` file, and
+        the batch's viz expressions that the catalog does not hold yet
+        as one ``_viz`` file (queries then never scan the store for
+        them). Any engine on this store sees both files at its next
+        read."""
+        self._meta.write(build_meta(points).collect())
+        with self._viz.lock:
+            known = self._viz.read()
+            new = viz - (known or set())
+            if new or known is None:
+                # the write also *establishes* the catalog on first
+                # ingest, so an all-unlabeled store is "known empty",
+                # not "unknown"
+                self._viz.write([(e,) for e in sorted(new)])
+
+    def age_off(self, now_ms: int, ttls: dict[str, int], default_ttl_ms: int) -> None:
+        """Meta age-off (MetaAgeOffIterator.java:26-115): rewrite
+        ``_meta`` as one row per key holding its max ``last_seen``, less
+        the entries older than their metric's TTL, so stale tag values
+        leave suggest and lookup. A full rewrite is fine at any data
+        scale: the catalog is O(distinct tag values), not O(points)."""
+        path = self._meta.path
+        with self._meta.lock:
+            if not path_exists(self.spark, path):
+                return
+            kept = self.meta().filter(
+                F.col("last_seen") >= F.lit(now_ms) - ttl_for_metric("metric", ttls, default_ttl_ms)
+            )
+            tmp = path.rstrip("/") + "__compacting"
+            kept.coalesce(1).write.mode("overwrite").parquet(tmp)
+            replace_dir(self.spark, tmp, path)
+
+    # -------------------------------------------------------------- reads
+
+    def _rows(self) -> DataFrame:
+        """The appended ``_meta`` rows, read with their known schema (no
+        schema-inference job)."""
+        return self.spark.read.schema(_META_COLUMNS).parquet(self._meta.path)
+
+    def meta(self) -> DataFrame:
+        """The catalog as a Spark frame: one row per ``(metric, tag_key,
+        tag_value)`` with its ``max(last_seen)``."""
+        return self._rows().groupBy("metric", "tag_key", "tag_value").agg(
+            F.max("last_seen").alias("last_seen")
+        )
 
     def suggest(
         self,
@@ -156,15 +232,24 @@ class MetaCatalog:
             out = ()
         return list(out if max_results < 0 else out[:max_results])
 
-    def add_meta(self, path: str, rows) -> None:
-        """Fold a put's ``_meta`` rows, which it wrote as file ``path``
-        (qualified as the listing names it), so the next read runs no
-        Spark job for that file."""
-        self._meta.add(path, rows)
-
-    def add_viz(self, path: str, rows) -> None:
-        """:meth:`add_meta` for a ``_viz`` file of ``(viz,)`` rows."""
-        self._viz.add(path, rows)
+    def metrics(self, ignored_tags: list[str] | None = None) -> list[dict]:
+        """/api/metrics (MetricsResponse) from the folded catalog: every
+        metric in order, each with its ``{"key", "value"}`` tag pairs in
+        the order of their ``key=value`` strings. Ignored tag keys leave
+        the pairs but never drop the metric, and a tagless metric has no
+        pairs. ``operators.meta.metrics_dump`` is the same as a frame of
+        ``key=value`` strings."""
+        ignored = set(ignored_tags or ())
+        index = self._meta.read() or _fold_meta(None, [])
+        out = []
+        for m in index.metrics:
+            pairs = [
+                (k, v) for k in index.tag_keys.get(m, ()) if k not in ignored
+                for v in index.tag_values.get((m, k), ())
+            ]
+            pairs.sort(key=lambda kv: f"{kv[0]}={kv[1]}")
+            out.append({"metric": m, "tags": [{"key": k, "value": v} for k, v in pairs]})
+        return out
 
     def last_seen(self) -> dict:
         """The folded ``(metric, tag_key, tag_value) -> last_seen`` map
@@ -176,3 +261,33 @@ class MetaCatalog:
         ``_viz`` directory does not exist (a store populated outside the
         engine: callers fall back to a distinct scan of the points)."""
         return self._viz.read()
+
+    def has_tags(self, q) -> bool:
+        """True iff the catalog holds a series matching the SubQuery's
+        metric and tag predicates. The reference's "No matching tags"
+        check consults the META table, not the query result
+        (DataStore.java:938-941): a matching-tags query over an empty
+        time window is a valid 200/empty response, never a 400. Runs only
+        on the strict empty-result path, against the tiny catalog, as ONE
+        Spark job: a global aggregate over the metric's rows with one
+        ``bool_or`` per tag predicate, on a single partition (no
+        exchange) and with the schema given (no inference job)."""
+        if q.tsuids:
+            return True  # tsuid SubQueries name series directly, no tag check
+        checks = ["count(1) > 0"]  # the metric is known
+        for k, v in {**q.tags, **q.filters}.items():
+            cond = f"tag_key = {sql_literal(k)}"
+            if v not in ("*", ".*"):
+                if is_tag_regex(v):
+                    cond += f" AND tag_value RLIKE {sql_literal(f'^(?:{v})$')}"
+                else:
+                    cond += f" AND tag_value = {sql_literal(v)}"
+            checks.append(f"coalesce(bool_or({cond}), false)")
+        row = (
+            self._rows()
+            .filter(f"metric = {sql_literal(q.metric)}")
+            .coalesce(1)
+            .selectExpr(" AND ".join(f"({c})" for c in checks))
+            .collect()[0]
+        )
+        return bool(row[0])

@@ -452,7 +452,7 @@ class HotCache:
         hdfs://, s3a://), never on a driver-local disk (the
         store-existence-probe lesson, BASELINE.md; r12 moved the sidecar
         off the one-row-parquet Spark job, see ``fsutil``)."""
-        from ..fsutil import sidecar_delete, sidecar_write_json
+        from ..fsutil import sidecar_write_json
 
         with self.lease() as w:
             if w.frame is None:
@@ -474,7 +474,6 @@ class HotCache:
                 ),
             },
         )
-        sidecar_delete(self.spark, path + "_meta")  # pre-r12 layout
 
     def restore(self, path: str) -> None:
         """Re-pin an archived window in this (possibly fresh) session:
@@ -485,28 +484,12 @@ class HotCache:
         store's read schema, ``metric_bucket``'s modulus included: Spark
         stores field metadata in the Parquet footer, so appended segments
         match the restored rows. The metadata sidecar is a
-        driver-side JSON read (r12 zero-job sidecar, see ``fsutil``);
-        pre-r12 one-row-parquet sidecars still restore via the
-        fallback."""
-        import json as _json
-
+        driver-side JSON read (r12 zero-job sidecar, see ``fsutil``)."""
         from ..fsutil import sidecar_read_json
 
         meta = sidecar_read_json(self.spark, path + "_meta.json")
-        if meta is None:  # pre-r12 layout
-            row = self.spark.read.parquet(path + "_meta").collect()[0]
-            meta = {
-                "cut": row["cut"],
-                "newest": row["newest"],
-                "evicted": _json.loads(row["evicted"]),
-                "non_cached": _json.loads(row["non_cached"]),
-                "window_ms": row["window_ms"],
-                "max_unique_tag_sets": (
-                    row["max_unique_tag_sets"]
-                    if "max_unique_tag_sets" in row.__fields__
-                    else None
-                ),
-            }
+        if meta is None:
+            raise FileNotFoundError(f"Path does not exist: {path}_meta.json")
         self.non_cached_metrics = list(meta["non_cached"])
         self.window_ms = int(meta["window_ms"])
         # Carry the FULL admission config, not just its last outcome —

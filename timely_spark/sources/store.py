@@ -23,6 +23,8 @@ writer's schema (no inference job; an all-digit metric stays a string);
 :func:`scan_predicates` renders a (metric, start, end) as the predicates
 that prune the layout's directories. All filesystem work goes through
 the Hadoop FileSystem (``fsutil``): ``file://``, ``hdfs://``, ``s3a://``.
+The catalog tier beside the store is not this module's: it belongs to
+``sources/catalog.MetaCatalog``.
 
 Scale notes (100 TB / 1000 executors):
 - day-level directories keep the partition count ~O(metrics x days); a
@@ -50,7 +52,6 @@ from __future__ import annotations
 
 import os
 import re
-import threading
 from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -59,28 +60,16 @@ from pyspark.sql import types as T
 
 from ..fsutil import (
     data_file_lister,
-    path_exists,
     replace_dir,
     sidecar_delete,
     sidecar_read_json,
     sidecar_write_json,
+    write_lock,
 )
 from ..model import METRIC_SCHEMA, series_id_sql, sql_literal
-from ..operators.retention import ageoff_filter, ttl_for_metric
+from ..operators.retention import ageoff_filter
 
 DAY_MS = 86_400_000
-
-
-# Spark's file committer keeps one ``_temporary`` directory per output
-# path and a job's commit deletes it, so two appends to one store at once
-# fail; writes to one store (path or table) from this process take turns
-_WRITE_LOCKS: dict[str, threading.RLock] = {}
-_WRITE_LOCKS_GUARD = threading.Lock()
-
-
-def _write_lock(key: str) -> threading.RLock:
-    with _WRITE_LOCKS_GUARD:
-        return _WRITE_LOCKS.setdefault(key, threading.RLock())
 
 
 def bucket_sql(metric: str, n: int) -> str:
@@ -181,7 +170,7 @@ class PointStore:
                     )
         self.bucket_metrics = bucket_metrics or self._recorded.get("bucket_metrics")
         self.promote_tags = list(promote_tags or self._recorded.get("promote_tags") or [])
-        self._write_lock = _write_lock(series_table or path.rstrip("/"))
+        self._write_lock = write_lock(series_table or path.rstrip("/"))
 
     @property
     def layout(self) -> dict:
@@ -494,35 +483,3 @@ def write_points_bucketed(
         .format("parquet")
         .saveAsTable(table)
     )
-
-
-def compact_meta(spark: SparkSession, meta_path: str) -> DataFrame:
-    """Fold appended meta deltas to one row per (metric, tag_key, tag_value)."""
-    m = spark.read.parquet(meta_path)
-    return m.groupBy("metric", "tag_key", "tag_value").agg(
-        F.max("last_seen").alias("last_seen")
-    )
-
-
-def compact_meta_with_cutoff(
-    spark: SparkSession,
-    meta_path: str,
-    now_ms: int,
-    ttls: dict[str, int] | None = None,
-    default_ttl_ms: int = 7 * 86_400_000,
-) -> None:
-    """Meta age-off (MetaAgeOffIterator.java:26-115): fold the appended
-    catalog deltas AND drop entries whose last_seen is beyond the metric's
-    TTL, so stale tag values stop appearing in suggest/lookup. A full
-    rewrite is fine at any data scale — the catalog is O(distinct tag
-    values), not O(points). Run from the retention maintenance job.
-    """
-    if not path_exists(spark, meta_path):
-        return
-    ttl = ttl_for_metric("metric", ttls or {}, default_ttl_ms)
-    kept = compact_meta(spark, meta_path).filter(
-        F.col("last_seen") >= F.lit(now_ms) - ttl
-    )
-    tmp = meta_path.rstrip("/") + "__compacting"
-    kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-    replace_dir(spark, tmp, meta_path)

@@ -102,8 +102,7 @@ def register_screen_batch(
         )
     )
     # r12: the per-batch params check is a driver-side sidecar read
-    # (was a one-row-parquet Spark job EVERY micro-batch); pre-r12
-    # parquet sidecars still load via the shared fallback
+    # (was a one-row-parquet Spark job EVERY micro-batch)
     row = MinHashIndex._read_params(spark, index_path)
     if row is None:
         sidecar_write_json(

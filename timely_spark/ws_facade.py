@@ -386,7 +386,7 @@ class TimelyWebSocketServer:
                         set(auths or ()) if self.auth_service is not None else None
                     ),
                     viz_exprs=(
-                        self.engine._viz_known()
+                        self.engine.catalog.viz()
                         if self.auth_service is not None
                         else None
                     ),
@@ -420,23 +420,11 @@ class TimelyWebSocketServer:
                 )
             }
         if op == "lookup":
-            from .operators.meta import search_lookup_or
-
-            metric = msg.get("query") or msg.get("metric") or ""
-            tags = dict(msg.get("tags") or {})
-            limit = int(msg.get("limit", 25))
-            ordered, total = search_lookup_or(eng.meta(), metric, tags, limit)
-            return {
-                "type": "LOOKUP",
-                "metric": metric,
-                "tags": tags,
-                "limit": limit,
-                "totalResults": total.collect()[0]["total_results"],
-                "results": [
-                    {"tags": {r["tag_key"]: r["tag_value"]}}
-                    for r in ordered.collect()
-                ],
-            }
+            return eng.lookup(
+                msg.get("query") or msg.get("metric") or "",
+                msg.get("tags") or {},
+                int(msg.get("limit", 25)),
+            )
         if op == "aggregators":
             return {"aggregators": eng.aggregators()}
         if op == "version":
@@ -444,16 +432,5 @@ class TimelyWebSocketServer:
         if op == "cache":
             return eng.cache_status()
         if op == "metrics":
-            return {
-                "metrics": [
-                    {
-                        "metric": r["metric"],
-                        "tags": [
-                            dict(zip(("key", "value"), kv.split("=", 1)))
-                            for kv in r["tags"]
-                        ],
-                    }
-                    for r in eng.metrics()
-                ]
-            }
+            return {"metrics": eng.metrics()}
         raise ValueError(f"unknown operation {op!r}")

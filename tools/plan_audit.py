@@ -39,78 +39,67 @@ def engine_plans(spark, sf_dir: str) -> dict:
     over the request's SubQuery frames), against a store built once.
     The registry rows collect OpenTSDB JSON and re-parallelize it, so
     the registry loop sees only the trivial createDataFrame."""
-    import shutil as _sh
-
-    from __spark_entry__ import _points
-    from timely_spark.api import ALL_AUTHS, TimelyEngine
+    from __spark_entry__ import _engine
+    from timely_spark.api import ALL_AUTHS
     from timely_spark.plans.response import fuse
     from timely_spark.sources.hot_cache import HotCache
-    from timely_spark.sources.store import write_points
 
-    store = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".engine_stores",
-        "plan_audit_" + os.path.basename(sf_dir.rstrip("/")),
-    )
-    _sh.rmtree(store, ignore_errors=True)
-    write_points(_points(spark, sf_dir), store)
+    with _engine(spark, sf_dir) as eng:
+        store = eng.store.path
 
-    def _req(metrics, ds, tags, rate=False, **extra):
-        return {
-            "start": 1,
-            "msResolution": True,
-            **extra,
-            "queries": [
-                {"aggregator": "sum", "metric": m, "downsample": ds, "rate": rate, "tags": tags}
-                for m in metrics
-            ],
-        }
+        def _req(metrics, ds, tags, rate=False, **extra):
+            return {
+                "start": 1,
+                "msResolution": True,
+                **extra,
+                "queries": [
+                    {"aggregator": "sum", "metric": m, "downsample": ds, "rate": rate, "tags": tags}
+                    for m in metrics
+                ],
+            }
 
-    out = {}
+        out = {}
 
-    def take(name, frames):
-        # audit while the row's hot tier is still pinned
-        df = fuse(frames)
-        text = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-        out[name] = (audit_plan(df), text.replace(store, "<store>"))
+        def take(name, frames):
+            # audit while the row's hot tier is still pinned
+            df = fuse(frames)
+            text = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+            out[name] = (audit_plan(df), text.replace(store, "<store>"))
 
-    eng = TimelyEngine(spark, store_path=store, meta_path=store + "_meta")
-    take("ts_engine_query", eng.query_frames(
-        _req(["click"], "15m-avg", {"user": "1\\d"}, rate=True), auths=ALL_AUTHS
-    ))
-    rollup = _req(["click"], "1h-sum", {"user": ".*"}, end=4_000_000_199_999)
-    rollup["queries"][0]["aggregator"] = "max"
-    take("ts_engine_rollup", eng.query_rollup_frames(
-        rollup, eng.build_rollup(level_ms=300_000), level_ms=300_000, auths=ALL_AUTHS
-    ))
-    eng.enable_hot_cache(window_ms=7 * 86_400_000)
-    take("ts_hybrid_cache", eng.query_frames(
-        _req(["view"], "1h-avg", {"user": "2\\d"}), auths=ALL_AUTHS
-    ))
-    # the same request over the last 3 days: inside the pinned window,
-    # so the read is the window alone (no store scan)
-    recent = _req(["view"], "1h-avg", {"user": "2\\d"})
-    recent["start"] = eng._hot.newest_ts - 3 * 86_400_000
-    take("ts_hybrid_cache_recent", eng.query_frames(recent, auths=ALL_AUTHS))
-    eng._hot.close()
-    eng.enable_hot_cache(
-        window_ms=7 * 86_400_000, non_cached_metrics=("^view$",), max_unique_tag_sets=200
-    )
-    take("ts_cache_admission", eng.query_frames(
-        _req(["view", "click"], "1h-avg", {"user": "3\\d"}), auths=ALL_AUTHS
-    ))
-    arch = store + "_cachearchive"
-    eng._hot.archive(arch)
-    restored = HotCache(spark)
-    restored.restore(arch)
-    eng.attach_hot_cache(restored)
-    take("ts_cache_archive", eng.query_frames(
-        _req(["error"], "1h-avg", {"user": "4\\d"}), auths=ALL_AUTHS
-    ))
-    eng._hot.close()
-    for p in (store, store + "_meta", store + "_meta_viz", arch, arch + "_meta"):
-        _sh.rmtree(p, ignore_errors=True)
-    return out
+        take("ts_engine_query", eng.query_frames(
+            _req(["click"], "15m-avg", {"user": "1\\d"}, rate=True), auths=ALL_AUTHS
+        ))
+        rollup = _req(["click"], "1h-sum", {"user": ".*"}, end=4_000_000_199_999)
+        rollup["queries"][0]["aggregator"] = "max"
+        take("ts_engine_rollup", eng.query_rollup_frames(
+            rollup, eng.build_rollup(level_ms=300_000), level_ms=300_000, auths=ALL_AUTHS
+        ))
+        eng.enable_hot_cache(window_ms=7 * 86_400_000)
+        take("ts_hybrid_cache", eng.query_frames(
+            _req(["view"], "1h-avg", {"user": "2\\d"}), auths=ALL_AUTHS
+        ))
+        # the same request over the last 3 days: inside the pinned window,
+        # so the read is the window alone (no store scan)
+        recent = _req(["view"], "1h-avg", {"user": "2\\d"})
+        recent["start"] = eng._hot.newest_ts - 3 * 86_400_000
+        take("ts_hybrid_cache_recent", eng.query_frames(recent, auths=ALL_AUTHS))
+        eng._hot.close()
+        eng.enable_hot_cache(
+            window_ms=7 * 86_400_000, non_cached_metrics=("^view$",), max_unique_tag_sets=200
+        )
+        take("ts_cache_admission", eng.query_frames(
+            _req(["view", "click"], "1h-avg", {"user": "3\\d"}), auths=ALL_AUTHS
+        ))
+        arch = store + "_cachearchive"
+        eng._hot.archive(arch)
+        restored = HotCache(spark)
+        restored.restore(arch)
+        eng.attach_hot_cache(restored)
+        take("ts_cache_archive", eng.query_frames(
+            _req(["error"], "1h-avg", {"user": "4\\d"}), auths=ALL_AUTHS
+        ))
+        eng._hot.close()
+        return out
 
 
 ENGINE_HEADER = [

@@ -735,12 +735,11 @@ def test_correctness_local_artifact_fresh():
         assert (row["spark_rows"] or 0) > 0, f"{name} recorded 0 rows"
 
 
-def test_query_rollup_matches_raw_query(spark, tmp_path_factory):
-    """The rollup tier answers a downsample query IDENTICALLY to the
-    raw-point path (avg needs the sum/count partials, the hardest
-    case), and rejects ineligible requests (rate; non-divisible
-    period; non-ALL_AUTHS)."""
-    from timely_spark.api import ALL_AUTHS, TimelyEngine
+@pytest.fixture(scope="module")
+def rollup_tier(spark, tmp_path_factory):
+    """(engine, its 5-minute partials, a level-aligned request end) over
+    4 series of 120 one-minute points."""
+    from timely_spark.api import TimelyEngine
 
     root = tmp_path_factory.mktemp("rollup_engine")
     eng = TimelyEngine(spark, store_path=str(root / "m"))
@@ -751,17 +750,24 @@ def test_query_rollup_matches_raw_query(spark, tmp_path_factory):
                 f"put roll.m {B + 60_000 * i + u} {float((i * 7 + u) % 23)} user=u{u}"
             )
     eng.put_lines(lines)
-    partials = eng.build_rollup(level_ms=300_000)
     end = ((B + 7_300_000) // 300_000 + 1) * 300_000 - 1  # level-aligned
-    req = {
-        "start": B - 1000,
-        "end": end,
-        "msResolution": True,
-        "queries": [
-            {"aggregator": "sum", "metric": "roll.m",
-             "downsample": "15m-avg", "tags": {"user": ".*"}}
-        ],
-    }
+    return eng, eng.build_rollup(level_ms=300_000), end
+
+
+def _rollup_request(end, *queries):
+    return {"start": B - 1000, "end": end, "msResolution": True, "queries": list(queries)}
+
+
+def test_query_rollup_matches_raw_query(rollup_tier):
+    """The rollup tier answers a downsample query IDENTICALLY to the
+    raw-point path (avg needs the sum/count partials, the hardest
+    case), and rejects ineligible requests (rate; non-divisible
+    period; non-ALL_AUTHS)."""
+    from timely_spark.api import ALL_AUTHS
+
+    eng, partials, end = rollup_tier
+    req = _rollup_request(end, {"aggregator": "sum", "metric": "roll.m",
+                                "downsample": "15m-avg", "tags": {"user": ".*"}})
     canon = lambda out: sorted(  # noqa: E731
         (s["metric"], tuple(sorted(s["tags"].items())),
          tuple(sorted((k, round(v, 9)) for k, v in s["dps"].items())))
@@ -787,7 +793,18 @@ def test_query_rollup_matches_raw_query(spark, tmp_path_factory):
     assert canon(eng.query_rollup(req_cnt, partials, 300_000,
                                   auths=ALL_AUTHS)) == canon(
         eng.query(req_cnt, auths=ALL_AUTHS))
-    import pytest
+    # two stages (per-series 1h sums, then the max across series), and a
+    # non-grouping filter (a predicate that leaves the tag set alone)
+    req_two = dict(req, queries=[
+        {"aggregator": "max", "metric": "roll.m",
+         "downsample": "1h-sum", "tags": {"user": ".*"}},
+        {"aggregator": "avg", "metric": "roll.m", "downsample": "15m-sum", "tags": {},
+         "filters": [{"type": "regexp", "tagk": "user", "filter": "u[01]",
+                      "groupBy": False}]},
+    ])
+    got = eng.query_rollup(req_two, partials, 300_000, auths=ALL_AUTHS)
+    assert canon(got) == canon(eng.query(req_two, auths=ALL_AUTHS))
+    assert len(got) == 5 and {} in [s["tags"] for s in got]
 
     with pytest.raises(ValueError, match="not rollup-eligible"):
         bad = dict(req, queries=[dict(req["queries"][0], rate=True)])
@@ -800,6 +817,28 @@ def test_query_rollup_matches_raw_query(spark, tmp_path_factory):
                          auths=ALL_AUTHS)
     with pytest.raises(ValueError, match="visibility"):
         eng.query_rollup(req, partials, 300_000)
+
+
+def test_query_rollup_min_max_count_equal_raw_exactly(rollup_tier):
+    """No tolerance: for every (combine, downsample) pair drawn from
+    min/max/count, grouped and ungrouped, the rollup tier's answer is
+    the raw query's answer under ``==`` (min and max pick raw values,
+    counts are integers; sum and avg add decimals in one and doubles in
+    the other, so the test above rounds them)."""
+    from timely_spark.api import ALL_AUTHS
+
+    eng, partials, end = rollup_tier
+    aggs = ("min", "max", "count")
+    queries = [
+        {"aggregator": comb, "metric": "roll.m", "downsample": f"15m-{ds}", "tags": tags}
+        for comb in aggs
+        for ds in aggs
+        for tags in ({}, {"user": ".*"})
+    ]
+    req = _rollup_request(end, *queries)
+    got = eng.query_rollup(req, partials, 300_000, auths=ALL_AUTHS)
+    assert got == eng.query(req, auths=ALL_AUTHS)
+    assert len(got) == 9 * (1 + 4)
 
 
 def test_register_views_sql_access(engine):

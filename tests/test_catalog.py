@@ -1,10 +1,11 @@
 """The driver-resident meta catalog (sources/catalog.py).
 
-``TimelyEngine.suggest``, ``metrics`` and the visibility lookups read
-the catalog; ``operators.meta.suggest`` and ``metrics_dump`` over
-``TimelyEngine.meta()`` are the Spark references they must equal with no
-tolerance. Also pinned: the job counts (no job without new files or
-after this engine's own put, one job for files another engine wrote),
+``TimelyEngine.suggest``, ``metrics``, ``lookup`` and the visibility
+lookups read the catalog; ``operators.meta.suggest`` and ``metrics_dump``
+over ``TimelyEngine.meta()`` (and, for lookup, a Spark ``rlike`` over it)
+are the Spark references they must equal with no tolerance. Also pinned:
+the job counts (no job without new files or after this engine's own put,
+one job for files another engine wrote, one per lookup),
 freshness across two engines on one store, a put racing the meta
 age-off, and concurrent puts and suggests over HTTP against a serial
 replay.
@@ -124,6 +125,46 @@ def test_tagk_on_a_tagless_metric_is_empty(engine):
     assert engine.suggest("bare", "tagk") == []
     assert [r[0] for r in suggest(engine.meta(), "bare", "tagk").collect()] == []
     assert engine.suggest("bare", "metrics") == ["bare"]
+
+
+def test_lookup_is_one_job_and_matches_a_spark_reference(spark, engine):
+    """``TimelyEngine.lookup`` runs ONE Spark job, and its entries and
+    total are, with no tolerance, the distinct ``(tag_key, tag_value)``
+    rows of ``meta()`` that Spark's ``rlike`` (Java regex, anchored) and
+    ``orderBy`` select: an OR across the requested keys, every entry
+    (a tagless metric's null one too) when no tag is given."""
+    from pyspark.sql import functions as F
+
+    cases = [
+        ("sys.cpu.user", {"host": ".*"}),
+        ("sys.cpu.user", {"host": "[wW]eb\\d+", "rack": "r1"}),
+        ("sys.cpu.idle", {"Rack": "R2|nope", "host": "web"}),
+        ("mé.trïc", {"rack": "\\p{L}", "hôst": "é"}),
+        ("日本.load", {}),
+        ("bare", {}),
+        ("bare", {"host": ".*"}),
+        ("nope", {"host": ".*"}),
+    ]
+    for i, (metric, tags) in enumerate(cases):
+        m = engine.meta().filter(F.col("metric") == metric)
+        if tags:
+            pred = None
+            for k, v in tags.items():
+                clause = (F.col("tag_key") == k) & F.col("tag_value").rlike(f"^(?:{v})$")
+                pred = clause if pred is None else (pred | clause)
+            m = m.filter(pred)
+        want = [
+            {"tags": {r["tag_key"]: r["tag_value"]}}
+            for r in m.select("tag_key", "tag_value").distinct().orderBy("tag_key", "tag_value").collect()
+        ]
+        for limit in (0, 1, 25):
+            res, jobs = _jobs(spark, f"lookup-{i}-{limit}", lambda: engine.lookup(metric, tags, limit))
+            assert jobs == 1, (metric, tags)
+            assert (res["totalResults"], res["results"]) == (len(want), want[:limit]), (metric, tags)
+    assert engine.lookup("bare")["results"] == [{"tags": {None: None}}]
+    assert engine.lookup("mé.trïc", {"rack": "\\p{L}"})["results"] == [
+        {"tags": {"rack": "ß"}}, {"tags": {"rack": "Ω"}},
+    ]
 
 
 def test_reads_run_a_job_only_for_new_files(spark, tmp_path):

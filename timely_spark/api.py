@@ -21,9 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import pins
-from .model import METRIC_SCHEMA, sql_literal
+from .model import METRIC_SCHEMA
+from .operators.aggregators import MERGE_AGGREGATORS
 from .operators.exclusions import apply_exclusions
-from .operators.meta import search_lookup_or
 from .operators.retention import ageoff_filter
 from .plans.builder import query_start, run_query
 from .plans.request import QueryRequest
@@ -305,26 +305,31 @@ class TimelyEngine:
         return self._run(parse_get_query(params), auths, strict=strict)
 
     def build_rollup(self, level_ms: int, now_ms: int | None = None) -> DataFrame:
-        """Continuous-aggregate partials of this store at ``level_ms``:
-        (metric, __series, tags, bucket_ts, n, vsum, vmin, vmax) — the
-        hypertable tier (operators/rollup.py) at per-series grain, ready
-        for :meth:`query_rollup`. Persist it (parquet, partitioned like
-        the store) in a real deployment; the frame is also usable lazily
-        for tests/oracles."""
+        """Continuous-aggregate partials of this store at ``level_ms``, in
+        the points' shape: ``(metric, series_key, tags, ts, value)`` with
+        ``ts`` the start of the level bucket and ``value`` a
+        ``struct<n, vsum decimal(38,10), vmin, vmax>`` over the series'
+        points in it — the hypertable tier (operators/rollup.py) at
+        per-series grain, ready for :meth:`query_rollup`. Persist it
+        (parquet, partitioned like the store) in a real deployment; the
+        frame is also usable lazily for tests/oracles."""
         from .model import series_id
 
-        pts = self.points(now_ms=now_ms)
-        bucket = (F.col("ts") - F.col("ts") % F.lit(level_ms)).alias("bucket_ts")
         return (
-            pts.withColumn("__series", series_id())
-            .groupBy("metric", "__series", bucket)
-            .agg(
-                F.first("tags").alias("tags"),
-                F.count("value").alias("n"),
-                F.sum(F.col("value").cast("decimal(38,10)")).alias("vsum"),
-                F.min("value").alias("vmin"),
-                F.max("value").alias("vmax"),
+            self.points(now_ms=now_ms)
+            .select(
+                "metric", series_id().alias("series_key"), "tags",
+                (F.col("ts") - F.col("ts") % F.lit(level_ms)).alias("ts"), "value",
             )
+            .groupBy("metric", "series_key", "ts")
+            .agg(
+                F.expr("first(tags) AS tags"),
+                F.expr(
+                    "named_struct('n', count(value), 'vsum', sum(CAST(value AS DECIMAL(38,10))),"
+                    " 'vmin', min(value), 'vmax', max(value)) AS value"
+                ),
+            )
+            .select("metric", "series_key", "tags", "ts", "value")
         )
 
     def query_rollup(
@@ -346,7 +351,8 @@ class TimelyEngine:
         rows, so per-row viz enforcement is impossible here — requires
         ALL_AUTHS (or a store with no labeled rows, which is the
         caller's contract to know). Like :meth:`query`, the SubQueries
-        fuse into one plan and one collect."""
+        compile through ``plans/builder.run_query`` and fuse into one
+        plan and one collect."""
         req = QueryRequest.from_dict(request)
         return to_query_response(
             self._rollup_frames(req, partials, level_ms, auths),
@@ -368,34 +374,14 @@ class TimelyEngine:
             QueryRequest.from_dict(request), partials, level_ms, auths
         )
 
-    # value of a rollup bucket from its merged partials, per aggregator
-    _ROLLUP_VALUE = {
-        "avg": "CAST(vsum / n AS DOUBLE)",
-        "sum": "CAST(vsum AS DOUBLE)",
-        "min": "vmin",
-        "max": "vmax",
-        "count": "CAST(n AS DOUBLE)",
-    }
-    _ROLLUP_MERGE = (
-        "first(tags) AS tags", "sum(n) AS n", "sum(vsum) AS vsum",
-        "min(vmin) AS vmin", "max(vmax) AS vmax",
-    )
-
     def _rollup_frames(
         self, req: QueryRequest, partials: DataFrame, level_ms: int, auths
     ) -> list[DataFrame]:
-        from .functions.time import query_aligned_bucket_sql
-        from .model import projected_tags_sql, series_id_sql
-        from .operators.downsample import combine_series
-        from .plans.builder import tag_predicates_sql
-
         if auths is not ALL_AUTHS:
             raise ValueError(
                 "query_rollup bypasses per-row visibility; pass "
                 "auths=ALL_AUTHS or use query()"
             )
-        cols = partials.columns
-        outs = []
         for q in req.queries:
             spec = q.downsample_spec()
             if (
@@ -403,8 +389,8 @@ class TimelyEngine:
                 or q.tsuids
                 or spec is None
                 or spec.period_ms % level_ms != 0
-                or spec.aggregator not in self._ROLLUP_VALUE
-                or q.aggregator not in self._ROLLUP_VALUE
+                or spec.aggregator not in MERGE_AGGREGATORS
+                or q.aggregator not in MERGE_AGGREGATORS
             ):
                 raise ValueError(
                     f"SubQuery not rollup-eligible (metric={q.metric!r}); "
@@ -419,50 +405,7 @@ class TimelyEngine:
                     f"align to the level boundary (end = k*{level_ms} - 1); "
                     "use query()"
                 )
-            start = query_start(q, req.start)
-            bucket = query_aligned_bucket_sql("bucket_ts", start, spec.period_ms)
-            preds = [
-                f"metric = {sql_literal(q.metric)}",
-                f"bucket_ts >= {start} AND bucket_ts <= {req.end}",
-                *tag_predicates_sql(q.tags, cols),
-                *tag_predicates_sql(q.filters, cols),
-            ]
-            merged = (
-                partials.filter(" AND ".join(f"({p})" for p in preds))
-                .selectExpr(
-                    "metric", "__series", f"{bucket} AS bucket_ts",
-                    "tags", "n", "vsum", "vmin", "vmax",
-                )
-                .groupBy("metric", "__series", "bucket_ts")
-                .agg(*[F.expr(e) for e in self._ROLLUP_MERGE])
-            )
-            keys = sorted(q.tags.keys())
-            if q.aggregator == spec.aggregator:
-                # match build_subquery's single-aggregation collapse:
-                # equal downsample/combine aggregators act over ALL
-                # points per (projected tags, bucket) — avg is the
-                # WEIGHTED average, count counts points, not series.
-                # Partials re-merge across series first, then the value.
-                flat = (
-                    merged.selectExpr(
-                        "metric", f"{projected_tags_sql(keys)} AS tags", "bucket_ts",
-                        "n", "vsum", "vmin", "vmax",
-                    )
-                    .selectExpr("*", f"{series_id_sql()} AS __gkey")
-                    .groupBy("__gkey", "bucket_ts")
-                    .agg(F.expr("first(metric) AS metric"), *[F.expr(e) for e in self._ROLLUP_MERGE])
-                )
-                outs.append(flat.selectExpr(
-                    "metric", "tags", "bucket_ts",
-                    f"{self._ROLLUP_VALUE[q.aggregator]} AS value",
-                ))
-                continue
-            ds = merged.selectExpr(
-                "metric", "tags", "bucket_ts",
-                f"{self._ROLLUP_VALUE[spec.aggregator]} AS value",
-            )
-            outs.append(combine_series(ds, keys, q.aggregator))
-        return outs
+        return run_query(partials, req)
 
     def query_frames(self, request: dict, auths=None) -> list[DataFrame]:
         """One result DataFrame per SubQuery BEFORE response shaping —
@@ -511,22 +454,19 @@ class TimelyEngine:
         """/api/search/lookup: the SearchLookupResponse (field order per
         @JsonPropertyOrder) of the catalog entries of ``metric`` whose
         value matches the anchored pattern given for their key
-        (``operators.meta.search_lookup_or``); ``time`` is this call's
-        ms."""
+        (``MetaCatalog.lookup``); ``time`` is this call's ms."""
         t0 = time.time()
         tags = dict(tags or {})
-        ordered, total = search_lookup_or(self.meta(), metric, tags, limit)
-        results = [{"tags": {r["tag_key"]: r["tag_value"]}} for r in ordered.collect()]
-        n = total.collect()[0]["total_results"]
+        entries = self.catalog.lookup(metric, tags)
         return {
             "type": "LOOKUP",
             "metric": metric,
             "tags": tags,
             "limit": limit,
             "time": int((time.time() - t0) * 1000),
-            "totalResults": n,
+            "totalResults": len(entries),
             "startIndex": 0,
-            "results": results,
+            "results": [{"tags": {k: v}} for k, v in entries[:limit]],
         }
 
     def metrics(self, ignored_tags: list[str] | None = None) -> list[dict]:

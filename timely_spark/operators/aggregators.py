@@ -33,13 +33,29 @@ AGGREGATORS: dict[str, str] = {
     "dev": "CASE WHEN count({c}) > 1 THEN sqrt(sum({c} * {c}) / (count({c}) - 1)) ELSE NULL END",
 }
 
+# The same aggregators over rollup partials, ``{c}`` a
+# ``struct<n, vsum, vmin, vmax>`` column: the partial merge of
+# Aggregation.java:85-96 (re-accumulate raw sums and counts), read from
+# storage instead of computed. ``vsum`` is decimal, so sum and avg are
+# exact whatever the merge order; the keys are the aggregators a rollup
+# can answer.
+MERGE_AGGREGATORS: dict[str, str] = {
+    "avg": "CAST(sum({c}.vsum) / sum({c}.n) AS DOUBLE)",
+    "sum": "CAST(sum({c}.vsum) AS DOUBLE)",
+    "min": "min({c}.vmin)",
+    "max": "max({c}.vmax)",
+    "count": "CAST(sum({c}.n) AS DOUBLE)",
+}
+
 ADVERTISED = ["avg", "dev", "max", "min", "sum", "count", "none"]  # AggregatorsResponse.java:53-62
 
 
-def agg_sql(name: str, col: str = "value") -> str:
-    """SQL text of aggregator ``name`` over column ``col``."""
+def agg_sql(name: str, col: str = "value", table: dict[str, str] = AGGREGATORS) -> str:
+    """SQL text of aggregator ``name`` over column ``col``, from
+    ``table`` (:data:`AGGREGATORS` over points, :data:`MERGE_AGGREGATORS`
+    over rollup partials)."""
     try:
-        template = AGGREGATORS[name.lower()]
+        template = table[name.lower()]
     except KeyError:
         raise ValueError(f"unknown aggregator {name!r}; known: {ADVERTISED}") from None
     return template.format(c=col)

@@ -29,17 +29,24 @@ from pyspark.sql import functions as F
 from ..functions.time import query_aligned_bucket_sql
 from ..model import projected_tags_sql, series_id_sql
 from ..parse import DownsampleSpec
-from .aggregators import agg_sql
+from .aggregators import AGGREGATORS, agg_sql
 
 
 def group_stage(
-    df: DataFrame, key: str, bucket: str, aggregator: str, value_col: str = "value"
+    df: DataFrame,
+    key: str,
+    bucket: str,
+    aggregator: str,
+    value_col: str = "value",
+    aggregators: dict[str, str] = AGGREGATORS,
 ) -> DataFrame:
     """``(metric, tags, bucket_ts, value)`` of one aggregation over
     ``(key, bucket)``: the shared shape of the downsample, the
     cross-series combine and the builder's collapsed single stage.
     ``key`` and ``bucket`` are SQL text over ``df``'s columns; the stage
-    builds in about a dozen py4j calls."""
+    builds in about a dozen py4j calls. ``aggregators`` is the SQL table
+    the aggregation comes from: ``MERGE_AGGREGATORS`` when ``value``
+    holds rollup partials."""
     pre = df.selectExpr(
         f"{key} AS __gkey", f"{bucket} AS bucket_ts", "metric", "tags",
         f"{value_col} AS value",
@@ -49,7 +56,7 @@ def group_stage(
         .agg(
             F.expr("first(metric) AS metric"),
             F.expr("first(tags) AS tags"),
-            F.expr(f"{agg_sql(aggregator)} AS value"),
+            F.expr(f"{agg_sql(aggregator, table=aggregators)} AS value"),
         )
         .selectExpr("metric", "tags", "bucket_ts", "value")
     )
@@ -62,14 +69,16 @@ def downsample(
     ts_col: str = "ts",
     value_col: str = "value",
     series_col: str | None = None,
+    aggregators: dict[str, str] = AGGREGATORS,
 ) -> DataFrame:
     """Per-series downsample: one row per (metric, tags, bucket_ts).
 
     Output columns: metric, tags, bucket_ts (epoch ms), value.
 
     ``series_col``: group on a materialized series-key column (bucketed
-    store) — HashPartitioning(series_key) satisfies the grouping's
-    ClusteredDistribution, so the aggregation runs without an Exchange.
+    store, rollup partials) — HashPartitioning(series_key) satisfies the
+    grouping's ClusteredDistribution, so the aggregation runs without an
+    Exchange. ``aggregators``: as in :func:`group_stage`.
     """
     if isinstance(spec, str):
         spec = DownsampleSpec.parse(spec)
@@ -84,6 +93,7 @@ def downsample(
         query_aligned_bucket_sql(ts_col, start_ms, spec.period_ms),
         spec.aggregator,
         value_col,
+        aggregators,
     )
 
 

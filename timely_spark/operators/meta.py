@@ -16,10 +16,11 @@ stream's tags with max(ts). At 100 TB it is maintained incrementally by
 the ingest path, never recomputed from raw points; it is small enough to
 broadcast into any planning join. These are the Spark-native forms. The
 engine's catalog tier, ``sources/catalog.MetaCatalog``, writes each
-put's :func:`build_meta` rows, ages them off and answers suggest and
+put's :func:`build_meta` rows, ages them off, answers suggest and
 metrics from a driver-resident fold of them (the tests hold it equal to
-:func:`suggest` and :func:`metrics_dump`); ``TimelyEngine.lookup`` runs
-:func:`search_lookup_or` over its frame.
+:func:`suggest` and :func:`metrics_dump`) and answers lookup itself
+(``MetaCatalog.lookup``). :func:`search_lookup` is the ``ts_lookup``
+registry row's form.
 """
 
 from __future__ import annotations
@@ -120,32 +121,6 @@ def search_lookup(
         m = m.filter(F.col("tag_value").rlike(tag_value_pattern))
     results = m.select("metric", "tag_key", "tag_value").distinct()
     ordered = results.orderBy("metric", "tag_key", "tag_value").limit(limit)
-    total = results.agg(F.count(F.lit(1)).alias("total_results"))
-    return ordered, total
-
-
-def search_lookup_or(
-    meta: DataFrame,
-    metric: str,
-    tags: dict[str, str],
-    limit: int = 25,
-) -> tuple[DataFrame, DataFrame]:
-    """The wire-shape lookup: exact metric, OR over requested (tag key,
-    anchored value regex) pairs — one result row per matching catalog
-    entry (DataStore.lookup:582-634: fetchColumnFamily per key, then
-    ``matches`` ORs across the requested patterns with
-    ``Matcher.matches()`` anchoring). Ordered (tag_key, tag_value) like
-    the sorted meta-table scan.
-    """
-    m = meta.filter(F.col("metric") == metric)
-    if tags:
-        pred = None
-        for k, v in tags.items():
-            clause = (F.col("tag_key") == k) & F.col("tag_value").rlike(f"^(?:{v})$")
-            pred = clause if pred is None else (pred | clause)
-        m = m.filter(pred)
-    results = m.select("tag_key", "tag_value").distinct()
-    ordered = results.orderBy("tag_key", "tag_value").limit(limit)
     total = results.agg(F.count(F.lit(1)).alias("total_results"))
     return ordered, total
 

@@ -260,13 +260,11 @@ def refresh_rollup(
         .agg(*merge_aggs)
         .select(*newp.columns)
     )
-    conf = spark.conf
-    prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("dt").parquet(path)
-    finally:
-        conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # the writer option, not the session conf: a shared session's other
+    # writes keep their overwrite mode
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "dt"
+    ).parquet(path)
     return len(days)
 
 

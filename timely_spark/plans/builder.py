@@ -44,6 +44,14 @@ Semantics notes:
 - ``start`` is floored to the downsample period before bucketing
   (DataStore.java:693-695); :func:`query_start` is that floor, and the
   earliest one over a request's SubQueries picks its tier.
+
+The rollup tier compiles here too. ``TimelyEngine.build_rollup`` gives
+partials in the points' shape: ``ts`` is the start of the level bucket,
+``series_key`` the series, and ``value`` a ``struct<n, vsum, vmin, vmax>``.
+The one difference is the SQL of the first aggregation, which merges the
+partials (``operators.aggregators.MERGE_AGGREGATORS``, chosen from the
+type of ``value``) instead of aggregating raw values; the predicates, the
+bucket, the collapse and the combine are the ones above.
 """
 
 from __future__ import annotations
@@ -51,10 +59,12 @@ from __future__ import annotations
 from dataclasses import replace
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from ..functions.viz import viz_filter, viz_predicate_sql
 from ..model import projected_tags_sql, series_id_sql, sql_literal
 from ..functions.time import query_aligned_bucket_sql
+from ..operators.aggregators import AGGREGATORS, MERGE_AGGREGATORS
 from ..operators.downsample import combine_series, downsample, group_stage
 from ..operators.rate import rate
 from ..parse import is_tag_regex
@@ -118,10 +128,14 @@ def build_subquery(
     viz_exprs: list[str] | None = None,
 ) -> DataFrame:
     """Returns (metric, tags, bucket_ts, value) for one SubQuery."""
-    cols = points.columns
+    schema = points.schema
+    cols = schema.names
     spec = q.downsample_spec()
     start_ms = query_start(q, start_ms)
     series_key = "series_key" if "series_key" in cols else None
+    # rollup partials hold a struct per level bucket: the first
+    # aggregation merges them
+    aggregators = MERGE_AGGREGATORS if isinstance(schema["value"].dataType, StructType) else AGGREGATORS
 
     preds = []
     if q.tsuids:
@@ -137,7 +151,7 @@ def build_subquery(
         # (series_key, ts)-sorted row groups prune.
         ids = ", ".join(sql_literal(_decode_tsuid(t)) for t in q.tsuids)
         preds.append(f"{series_key or series_id_sql()} IN ({ids})")
-    preds += scan_predicates(points.schema, None if q.tsuids else q.metric, start_ms, end_ms)
+    preds += scan_predicates(schema, None if q.tsuids else q.metric, start_ms, end_ms)
     preds += tag_predicates_sql(q.tags, cols)
     # non-grouping filters (Filter.groupBy=false): predicate only — the
     # tag key does NOT enter the projected tag set / series identity
@@ -188,13 +202,13 @@ def build_subquery(
             "metric", f"{projected_tags_sql(group_keys)} AS tags", f"{bucket} AS bucket_ts",
             "value",
         )
-        return group_stage(pre, series_id_sql(), "bucket_ts", q.aggregator)
+        return group_stage(pre, series_id_sql(), "bucket_ts", q.aggregator, aggregators=aggregators)
 
     # two-stage path: downsample agg differs from the cross-series agg.
     # Over a series-bucketed store the per-series stage groups on the
     # materialized series_key — HashPartitioning(series_key) satisfies the
     # grouping distribution, so only the cross-series combine shuffles.
-    ds = downsample(df, spec, start_ms=start_ms, series_col=series_key)
+    ds = downsample(df, spec, start_ms=start_ms, series_col=series_key, aggregators=aggregators)
     return combine_series(ds, group_keys, q.aggregator)
 
 

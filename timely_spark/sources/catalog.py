@@ -26,7 +26,8 @@ not folded yet: the pattern of Structured Streaming's file source. An
 unchanged listing runs no job. A folded file that is gone from the
 listing means the age-off rewrote the directory, so the fold starts
 again from the files present. :meth:`MetaCatalog.meta` is the same rows
-as a Spark frame, which lookup and the strict tag probe read.
+as a Spark frame. Lookup and the strict tag probe read the files in one
+Spark job each, on a single partition.
 
 Age-off. :meth:`MetaCatalog.age_off` rewrites ``_meta`` with the entries
 seen within their metric's TTL and swaps it in (``fsutil.replace_dir``).
@@ -261,6 +262,25 @@ class MetaCatalog:
         ``_viz`` directory does not exist (a store populated outside the
         engine: callers fall back to a distinct scan of the points)."""
         return self._viz.read()
+
+    def lookup(self, metric: str, tags: dict[str, str]) -> list[tuple]:
+        """The distinct ``(tag_key, tag_value)`` entries of ``metric``
+        whose value matches the anchored pattern given for their key,
+        sorted like the meta-table scan (DataStore.lookup:582-634:
+        fetchColumnFamily per key, then ``matches`` ORs across the
+        requested patterns with ``Matcher.matches()`` anchoring); every
+        entry of the metric when ``tags`` is empty. ONE Spark job, as in
+        :meth:`has_tags`: ``RLIKE`` keeps Java-regex semantics, and the
+        ``distinct`` runs on a single partition."""
+        rows = self._rows().filter(f"metric = {sql_literal(metric)}")
+        if tags:
+            rows = rows.filter(" OR ".join(
+                f"(tag_key = {sql_literal(k)} AND tag_value RLIKE {sql_literal(f'^(?:{v})$')})"
+                for k, v in tags.items()
+            ))
+        found = rows.coalesce(1).select("tag_key", "tag_value").distinct().collect()
+        # Spark's ascending order: a tagless metric's null entry first
+        return sorted(map(tuple, found), key=lambda kv: [(x is not None, x or "") for x in kv])
 
     def has_tags(self, q) -> bool:
         """True iff the catalog holds a series matching the SubQuery's

@@ -151,28 +151,26 @@ def register_screen_batch(
         # pin the survivor set: THREE writes follow (output, bands,
         # shingles) and each would otherwise re-run the screen join
         survivors = pin(docs.join(hits, id_col, "left_anti"))
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+
+    def write_batch(df: DataFrame, path: str) -> None:
+        # dynamic partition overwrite as a writer option: a replayed
+        # batch rewrites only its own __batch partition, and the
+        # session's conf is left alone
+        df.withColumn("__batch", F.lit(int(batch_id))).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("__batch").parquet(path)
+
     try:
-        tagged = survivors.withColumn("__batch", F.lit(int(batch_id)))
-        tagged.write.mode("overwrite").partitionBy("__batch").parquet(
-            out_path
-        )
+        write_batch(survivors, out_path)
         # survivor shingles = the pinned batch pass restricted to the
         # surviving ids (an inner join of two pins — no re-sign)
         surv_sh = sh_docs.join(survivors.select(id_col), id_col)
-        minhash_bands_from_shingles(
-            surv_sh, id_col, num_hashes, bands
-        ).withColumn("__batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).partitionBy("__batch").parquet(index_path + "/bands")
-        surv_sh.withColumn("__batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).partitionBy("__batch").parquet(index_path + "/shingles")
+        write_batch(
+            minhash_bands_from_shingles(surv_sh, id_col, num_hashes, bands),
+            index_path + "/bands",
+        )
+        write_batch(surv_sh, index_path + "/shingles")
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         # deterministic pin lifecycle (VERDICT r12 item 1): all pins are
         # fully consumed by the writes above; without this every
         # micro-batch leaked persisted RDDs for the session's life

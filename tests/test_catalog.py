@@ -60,6 +60,8 @@ def engine(spark, tmp_path_factory):
     # two puts: the fold spans more than one _meta file
     eng.put_lines(LINES[:4])
     eng.put_lines(LINES[4:])
+    # a quote and a backslash, which the line protocol would unescape
+    eng.put_json([{"metric": "sys.cpu.idle", "timestamp": B, "value": 3.5, "tags": {"host": "a'b\\c"}}])
     return eng
 
 
@@ -127,18 +129,22 @@ def test_tagk_on_a_tagless_metric_is_empty(engine):
     assert engine.suggest("bare", "metrics") == ["bare"]
 
 
-def test_lookup_is_one_job_and_matches_a_spark_reference(spark, engine):
-    """``TimelyEngine.lookup`` runs ONE Spark job, and its entries and
-    total are, with no tolerance, the distinct ``(tag_key, tag_value)``
-    rows of ``meta()`` that Spark's ``rlike`` (Java regex, anchored) and
-    ``orderBy`` select: an OR across the requested keys, every entry
-    (a tagless metric's null one too) when no tag is given."""
+def test_lookup_runs_no_job_and_matches_a_spark_reference(spark, engine):
+    """``TimelyEngine.lookup`` over a folded catalog runs NO Spark job,
+    and its entries and total are, with no tolerance, the distinct
+    ``(tag_key, tag_value)`` rows of ``meta()`` that Spark's ``rlike``
+    (Java regex, anchored) and ``orderBy`` select: an OR across the
+    requested keys, every entry (a tagless metric's null one too) when
+    no tag is given."""
     from pyspark.sql import functions as F
+
+    engine.catalog.last_seen()  # fold every _meta file first
 
     cases = [
         ("sys.cpu.user", {"host": ".*"}),
         ("sys.cpu.user", {"host": "[wW]eb\\d+", "rack": "r1"}),
         ("sys.cpu.idle", {"Rack": "R2|nope", "host": "web"}),
+        ("sys.cpu.idle", {"host": "a'b\\\\c|w.*"}),
         ("mé.trïc", {"rack": "\\p{L}", "hôst": "é"}),
         ("日本.load", {}),
         ("bare", {}),
@@ -159,12 +165,16 @@ def test_lookup_is_one_job_and_matches_a_spark_reference(spark, engine):
         ]
         for limit in (0, 1, 25):
             res, jobs = _jobs(spark, f"lookup-{i}-{limit}", lambda: engine.lookup(metric, tags, limit))
-            assert jobs == 1, (metric, tags)
+            assert jobs == 0, (metric, tags)
             assert (res["totalResults"], res["results"]) == (len(want), want[:limit]), (metric, tags)
     assert engine.lookup("bare")["results"] == [{"tags": {None: None}}]
     assert engine.lookup("mé.trïc", {"rack": "\\p{L}"})["results"] == [
         {"tags": {"rack": "ß"}}, {"tags": {"rack": "Ω"}},
     ]
+    assert engine.lookup("sys.cpu.idle", {"host": "a'b\\\\c"})["results"] == [{"tags": {"host": "a'b\\c"}}]
+    # a negative limit is refused (a slice would silently drop the tail)
+    with pytest.raises(ValueError):
+        engine.lookup("sys.cpu.user", {}, -1)
 
 
 def test_reads_run_a_job_only_for_new_files(spark, tmp_path):

@@ -324,12 +324,17 @@ class TimelyEngine:
             .groupBy("metric", "series_key", "ts")
             .agg(
                 F.expr("first(tags) AS tags"),
-                F.expr(
-                    "named_struct('n', count(value), 'vsum', sum(CAST(value AS DECIMAL(38,10))),"
-                    " 'vmin', min(value), 'vmax', max(value)) AS value"
-                ),
+                F.count("value").alias("n"),
+                F.expr("sum(CAST(value AS DECIMAL(38,10))) AS vsum"),
+                F.min("value").alias("vmin"),
+                F.max("value").alias("vmax"),
             )
-            .select("metric", "series_key", "tags", "ts", "value")
+            # the struct wraps the aggregate's flat outputs, so a query
+            # that reads one field prunes the other partials' aggregates
+            .select(
+                "metric", "series_key", "tags", "ts",
+                F.struct("n", "vsum", "vmin", "vmax").alias("value"),
+            )
         )
 
     def query_rollup(
@@ -454,7 +459,10 @@ class TimelyEngine:
         """/api/search/lookup: the SearchLookupResponse (field order per
         @JsonPropertyOrder) of the catalog entries of ``metric`` whose
         value matches the anchored pattern given for their key
-        (``MetaCatalog.lookup``); ``time`` is this call's ms."""
+        (``MetaCatalog.lookup``); ``time`` is this call's ms. A negative
+        ``limit`` is a ValueError (HTTP 400)."""
+        if limit < 0:
+            raise ValueError(f"limit must be >= 0, got {limit}")
         t0 = time.time()
         tags = dict(tags or {})
         entries = self.catalog.lookup(metric, tags)

@@ -18,8 +18,8 @@ broadcast into any planning join. These are the Spark-native forms. The
 engine's catalog tier, ``sources/catalog.MetaCatalog``, writes each
 put's :func:`build_meta` rows, ages them off, answers suggest and
 metrics from a driver-resident fold of them (the tests hold it equal to
-:func:`suggest` and :func:`metrics_dump`) and answers lookup itself
-(``MetaCatalog.lookup``). :func:`search_lookup` is the ``ts_lookup``
+:func:`suggest` and :func:`metrics_dump`) and answers lookup from the
+same fold (``MetaCatalog.lookup``). :func:`search_lookup` is the ``ts_lookup``
 registry row's form.
 """
 

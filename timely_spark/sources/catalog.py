@@ -26,8 +26,9 @@ not folded yet: the pattern of Structured Streaming's file source. An
 unchanged listing runs no job. A folded file that is gone from the
 listing means the age-off rewrote the directory, so the fold starts
 again from the files present. :meth:`MetaCatalog.meta` is the same rows
-as a Spark frame. Lookup and the strict tag probe read the files in one
-Spark job each, on a single partition.
+as a Spark frame. Lookup answers from the fold too, and leaves only its
+regex matches to Spark's optimizer (no job); the strict tag probe reads
+the files in one Spark job, on a single partition.
 
 Age-off. :meth:`MetaCatalog.age_off` rewrites ``_meta`` with the entries
 seen within their metric's TTL and swaps it in (``fsutil.replace_dir``).
@@ -42,6 +43,7 @@ published fold, which is never mutated.
 
 from __future__ import annotations
 
+import json
 import uuid
 from typing import NamedTuple
 
@@ -269,18 +271,27 @@ class MetaCatalog:
         sorted like the meta-table scan (DataStore.lookup:582-634:
         fetchColumnFamily per key, then ``matches`` ORs across the
         requested patterns with ``Matcher.matches()`` anchoring); every
-        entry of the metric when ``tags`` is empty. ONE Spark job, as in
-        :meth:`has_tags`: ``RLIKE`` keeps Java-regex semantics, and the
-        ``distinct`` runs on a single partition."""
-        rows = self._rows().filter(f"metric = {sql_literal(metric)}")
-        if tags:
-            rows = rows.filter(" OR ".join(
-                f"(tag_key = {sql_literal(k)} AND tag_value RLIKE {sql_literal(f'^(?:{v})$')})"
-                for k, v in tags.items()
-            ))
-        found = rows.coalesce(1).select("tag_key", "tag_value").distinct().collect()
+        entry of the metric when ``tags`` is empty. Answered from the
+        fold. Spark's ``RLIKE`` still decides each match, so patterns
+        keep Java-regex semantics: each key's folded values enter one
+        projection over a one-row inline table as a JSON array literal,
+        and the optimizer evaluates it (``ConvertToLocalRelation``), so
+        no job runs beyond the fold's read of new files."""
+        index = self._meta.read() or _fold_meta(None, [])
+        if not tags:
+            found = [(k, v) for m, k, v in index.last_seen if m == metric]
+        else:
+            keys = [k for k in tags if (metric, k) in index.tag_values]
+            found = []
+            if keys:
+                matched = self.spark.sql("SELECT " + ", ".join(
+                    f"filter(from_json({sql_literal(json.dumps(index.tag_values[(metric, k)]))}, "
+                    f"'array<string>'), v -> v RLIKE {sql_literal(f'^(?:{tags[k]})$')}) AS c{i}"
+                    for i, k in enumerate(keys)
+                ) + " FROM VALUES (1) AS t(one)").first()
+                found = [(k, v) for k, values in zip(keys, matched) for v in values]
         # Spark's ascending order: a tagless metric's null entry first
-        return sorted(map(tuple, found), key=lambda kv: [(x is not None, x or "") for x in kv])
+        return sorted(found, key=lambda kv: [(x is not None, x or "") for x in kv])
 
     def has_tags(self, q) -> bool:
         """True iff the catalog holds a series matching the SubQuery's
